@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.ByteBuffer
 import java.util.{Map => JMap}
 
 import scala.collection.mutable
@@ -15,8 +14,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.cdc.{ChangeRecord, Envelope}
-import graft.wal.{PgOutput, PgOutputDecoder}
+import graft.cdc.ChangeRecord
 
 /** Where live pgoutput frames come from — the seam between the engine and
   * the PostgreSQL wire. The shipped implementation is
@@ -193,28 +191,27 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
   // stay buffered until commit(end) acks them to the slot — a crash loses
   // only unacked frames, which PostgreSQL redelivers.
   private val buffer = mutable.ArrayDeque.empty[Frame]
-  // Latest RELATION frame per relation OID, prepended to every batch so
-  // executors can decode without history (PostgreSQL sends RELATION once
-  // per session, not per batch — the registry is driver state, mirroring
-  // the reference's decoder registry, PgWalMessageDecoder.java:39).
-  private val relationFrames = mutable.LinkedHashMap.empty[Int, (Long, Array[Byte])]
-  // txid open at each buffered frame boundary, for mid-tx batch starts.
-  private var openTxidAtBufferHead: Long = -1L
+  // Boundary scan state at the buffer head: every released frame folded
+  // in. Its relation registry seeds each batch so executors decode
+  // without history (PostgreSQL sends RELATION once per session, not per
+  // batch — the registry is driver state, mirroring the reference's
+  // decoder registry, PgWalMessageDecoder.java:39), and its txid carries
+  // an overflow-flushed transaction into the next batch.
+  private var head = TxScan()
   private var lastPolledLsn: Long = 0L
   private var lastPolledSeq: Long = 0L
-  // proto v2: between 'S' (stream start) and 'E' (stream stop) every
-  // frame carries an Int32 xid right after the type byte — a streamed
-  // RELATION's OID sits at offset 5, not 1, and the registry cache must
-  // hold the body with that prefix STRIPPED: LiveDecode replays cached
-  // relation frames through a fresh decoder with no open segment, so a
-  // prefixed copy would misparse (xid read as OID, body misaligned).
-  // Segments never straddle an ack boundary (latestOffset keeps streamed
-  // txns open until their commit), so this flag is safe across restarts.
-  private var drainInSegment: Boolean = false
 
   private def isChange(bytes: Array[Byte]): Boolean = bytes.nonEmpty &&
     (bytes(0) == 'I'.toByte || bytes(0) == 'U'.toByte || bytes(0) == 'D'.toByte ||
       bytes(0) == 'T'.toByte) // TRUNCATE emits rows too (one per relation)
+
+  /** Scan state just after offset `at`: the head state advanced over the
+    * buffered frames `at` covers (O(buffered): released frames are
+    * already in `head`). Positions are 0: live never cuts inside a
+    * streamed or prepared transaction, so it never reads back to one. */
+  private def scanTo(at: LsnOffset): TxScan =
+    buffer.iterator.takeWhile(f => at.covers(f.lsn, f.seq))
+      .foldLeft(head)((st, f) => st.step(0, f.lsn, f.bytes))
 
   /** Pull pending frames off the socket into the buffer (bounded per call
     * to keep latestOffset prompt). Equal-LSN frames are RETAINED and
@@ -229,17 +226,6 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
         case Some((lsn, bytes)) if lsn >= lastPolledLsn =>
           if (lsn > lastPolledLsn) { lastPolledLsn = lsn; lastPolledSeq = 0L }
           else lastPolledSeq += 1L
-          bytes.headOption.map(_.toChar) match {
-            case Some('S') => drainInSegment = true
-            case Some('E') => drainInSegment = false
-            case Some('R') if drainInSegment =>
-              val oid = ByteBuffer.wrap(bytes, 5, 4).getInt
-              relationFrames(oid) = (lsn, bytes.patch(1, Nil, 4)) // strip the xid prefix
-            case Some('R') =>
-              val oid = ByteBuffer.wrap(bytes, 1, 4).getInt
-              relationFrames(oid) = (lsn, bytes)
-            case _ => ()
-          }
           buffer.append(Frame(lsn, lastPolledSeq, bytes))
           pulled += 1
         case Some(_) => () // redelivered below-watermark frame: drop
@@ -273,22 +259,18 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     val pending = buffer.iterator
       .filter(f => s.admits(f.lsn, f.seq) && availableNowTarget.covers(f.lsn, f.seq)).toVector
     if (pending.isEmpty) return s
-    var open = openTxidAt(s) >= 0
-    // proto v2: streamed txns open from 'S' until their 'c'/whole-tx 'A';
-    // a batch must never split one (its early frames would be acked and
-    // released before the commit arrives — losing records), so they gate
-    // safe points AND veto the overflow cut
-    val streamed = scala.collection.mutable.Set.empty[Int]
-    // proto v3 2PC: a prepared tx is open from 'b' (or streamed 'p')
-    // until its DECISION 'K'/'r'. Unlike replay (which re-decodes from
-    // frame 0), the live source decodes only the acked-and-released
-    // slice — a batch boundary inside the prepared-undecided window
-    // would ack the content frames away before the decision arrives, so
-    // the WHOLE b..K/r window gates safe points and vetoes the overflow
-    // cut (atomicity over admission liveness: one in-doubt XA tx
-    // head-of-line blocks later data exactly as ordered delivery
-    // requires; PostgreSQL redelivers from the unacked LSN on restart)
-    val preparedOpen = scala.collection.mutable.Set.empty[String]
+    // The live cut rule (TxScan.liveSafe): no v1 tx, streamed tx or
+    // prepared tx open. A streamed tx is open from 'S' until its
+    // 'c'/whole-tx 'A'; a prepared tx from 'b' (or streamed 'p') until its
+    // DECISION 'K'/'r'. Unlike replay, which re-reads an open streamed or
+    // prepared tx from its first frame, the live source decodes only the
+    // acked-and-released slice — a boundary inside either would ack its
+    // early frames away before the commit or decision arrives, so both
+    // gate safe points AND veto the overflow cut (atomicity over
+    // admission liveness: one in-doubt XA tx head-of-line blocks later
+    // data exactly as ordered delivery requires; PostgreSQL redelivers
+    // from the unacked LSN on restart)
+    var scan = scanTo(s)
     var safeWithinCap: LsnOffset = null // furthest tx-safe point within `cap` rows
     var firstSafeBeyond: LsnOffset = null // first tx-safe point past the cap (atomic fallback)
     var atCap: LsnOffset = null // key of the cap'th data row (overflow cut point)
@@ -296,29 +278,14 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     var rows = 0
     pending.foreach { f =>
       if (isChange(f.bytes)) rows += 1
-      f.bytes.headOption.map(_.toChar) match {
-        case Some('B') => open = true
-        case Some('C') => open = false
-        case Some('b') => preparedOpen += gidAt(f.bytes, 29)
-        case Some('p') =>
-          streamed -= ByteBuffer.wrap(f.bytes, 26, 4).getInt
-          preparedOpen += gidAt(f.bytes, 30)
-        case Some('K') => preparedOpen -= gidAt(f.bytes, 30)
-        case Some('r') => preparedOpen -= gidAt(f.bytes, 38)
-        case Some('S') => streamed += ByteBuffer.wrap(f.bytes, 1, 4).getInt
-        case Some('c') => streamed -= ByteBuffer.wrap(f.bytes, 1, 4).getInt
-        case Some('A') =>
-          val top = ByteBuffer.wrap(f.bytes, 1, 4).getInt
-          if (ByteBuffer.wrap(f.bytes, 5, 4).getInt == top) streamed -= top
-        case _ => ()
-      }
-      if (!open && streamed.isEmpty && preparedOpen.isEmpty) {
+      scan = scan.step(0, f.lsn, f.bytes)
+      if (scan.liveSafe) {
         if (rows <= cap) safeWithinCap = LsnOffset(f.lsn, f.seq)
         else if (firstSafeBeyond == null) firstSafeBeyond = LsnOffset(f.lsn, f.seq)
       }
       if (rows == cap && atCap == null) {
         atCap = LsnOffset(f.lsn, f.seq)
-        atCapUnsplittable = streamed.nonEmpty || preparedOpen.nonEmpty
+        atCapUnsplittable = scan.streamed.nonEmpty || scan.prepared.nonEmpty
       }
     }
     if (safeWithinCap != null) safeWithinCap // atomic batch within the cap
@@ -327,29 +294,6 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     else if (allowMidTxFlush && atCap != null && !atCapUnsplittable) atCap
     else if (firstSafeBeyond != null) firstSafeBeyond // extend to the tx's COMMIT
     else s // tx open beyond everything buffered: wait for more
-  }
-
-  /** The gid cstring of a 2PC frame, at its documented byte offset
-    * ('b': 29, 'p'/'K': 30, 'r': 38). */
-  private def gidAt(bytes: Array[Byte], off: Int): String = {
-    var end = off
-    while (end < bytes.length && bytes(end) != 0) end += 1
-    new String(bytes, off, end - off, java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** txid of the transaction open just after offset `at` (scan of the
-    * buffer head — frames below the committed watermark are released, so
-    * this is O(buffered)). -1 when no tx is open. */
-  private def openTxidAt(at: LsnOffset): Long = {
-    var txid = openTxidAtBufferHead
-    buffer.iterator.takeWhile(f => at.covers(f.lsn, f.seq)).foreach { f =>
-      f.bytes.headOption.map(_.toChar) match {
-        case Some('B') => txid = f.lsn
-        case Some('C') => txid = -1L
-        case _ => ()
-      }
-    }
-    txid
   }
 
   override def latestOffset(): Offset =
@@ -387,9 +331,9 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     val slice = buffer.iterator
       .filter(f => s.admits(f.lsn, f.seq) && e.covers(f.lsn, f.seq))
       .map(f => (f.lsn, f.seq, f.bytes)).toVector
-    // Relation registry snapshot for frames the slice can reference.
-    val rels = relationFrames.values.filter(_._1 <= e.lsn).toVector
-    Array(LivePartition(rels, slice, openTxidAt(s)))
+    // Relation registry and open txid as of the slice start.
+    val scan = scanTo(s)
+    Array(LivePartition(scan.relations.values.toVector, slice, scan.txid))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -415,7 +359,7 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     * leftover duplicates are filtered by the composite offset. */
   override def commit(end: Offset): Unit = synchronized {
     val e = end.asInstanceOf[LsnOffset]
-    openTxidAtBufferHead = openTxidAt(e)
+    head = scanTo(e)
     while (buffer.nonEmpty && e.covers(buffer.head.lsn, buffer.head.seq)) buffer.removeHead()
     val runComplete = e.seq == Long.MaxValue ||
       (lastPolledLsn > e.lsn && !buffer.exists(_.lsn == e.lsn))
@@ -429,108 +373,17 @@ final case class LivePartition(relationFrames: Vector[(Long, Array[Byte])],
                                frames: Vector[(Long, Long, Array[Byte])],
                                openTxid: Long) extends InputPartition
 
-/** Decode for live slices: relation registry seeded from the snapshot,
-  * txid seeded from the open transaction at the slice start (so an
-  * overflow-flushed tx's tail records keep their txid). Slice frames are
-  * (lsn, seq, bytes) — the buffer's composite key rides into the records
-  * so applyChanges can order equal-LSN frames. */
+/** Decode for live slices through [[TxAssembler]]: relation registry
+  * seeded from the snapshot, txid seeded from the open transaction at the
+  * slice start (so an overflow-flushed tx's tail records keep their
+  * txid). Slice frames are (lsn, seq, bytes), contiguous in the buffer:
+  * the first frame's seq seeds the arrival sequence, so the buffer's
+  * composite key rides into the records and applyChanges can order
+  * equal-LSN frames. */
 object LiveDecode {
   def decode(relationFrames: Vector[(Long, Array[Byte])],
              frames: Vector[(Long, Long, Array[Byte])],
-             initialTxid: Long): Iterator[ChangeRecord] = {
-    val decoder = new PgOutputDecoder
-    relationFrames.foreach { case (_, bytes) => decoder.decode(ByteBuffer.wrap(bytes)) }
-    var txid = initialTxid
-    // proto v2 streamed-tx assembly (same shape as ReplayDecode): batch
-    // boundaries never split a streamed tx (latestOffset keeps streamed
-    // txns open until their stream commit), so the buffers resolve
-    // within the slice
-    val pending = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, ChangeRecord)]]
-    // v3 2PC assembly (same shape as ReplayDecode): the b..K/r window
-    // never splits across batches (latestOffset gates safe points on
-    // undecided prepared txs), so buffers resolve within the slice
-    var prepGid: Option[String] = None
-    var prepTx = -1L
-    val prepared = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[ChangeRecord]]
-    def changeRec(op: Char, lsn: Long, seq: Long, tx: Long, meta: PgOutput.RelationMeta,
-                  cells: PgOutput.Cells, before: PgOutput.Cells): ChangeRecord =
-      ChangeRecord(
-        op = op.toString, lsn = lsn, txid = tx,
-        schema = meta.schema, table = meta.table,
-        columns = cells.collect { case (k, Some(v)) => k -> v },
-        nulls = cells.collect { case (k, None) => k }.toVector.sorted,
-        before = before.collect { case (k, Some(v)) => k -> v },
-        seq = seq)
-    def truncRecs(lsn: Long, seq: Long, tx: Long, metas: Vector[PgOutput.RelationMeta]): Seq[ChangeRecord] =
-      metas.map(m => ChangeRecord("T", lsn, tx, m.schema, m.table,
-        Map.empty, Vector.empty, Map.empty, seq))
-    frames.iterator.flatMap { case (lsn, seq, bytes) =>
-      def route(rec: => ChangeRecord): Seq[ChangeRecord] = prepGid match {
-        case Some(g) => prepared(g) += rec; Nil
-        case None => Seq(rec)
-      }
-      def routeAll(recs: => Seq[ChangeRecord]): Seq[ChangeRecord] = prepGid match {
-        case Some(g) => prepared(g) ++= recs; Nil
-        case None => recs
-      }
-      def curTx: Long = if (prepGid.isDefined) prepTx else if (txid >= 0) txid else lsn
-      decoder.decode(ByteBuffer.wrap(bytes)) match {
-        case Some(PgOutput.Begin) => txid = lsn; Nil
-        case Some(PgOutput.Commit) => txid = -1L; Nil
-        case Some(PgOutput.BeginPrepare(_, _, xid, gid)) =>
-          prepGid = Some(gid); prepTx = xid.toLong & 0xffffffffL
-          prepared.getOrElseUpdate(gid, scala.collection.mutable.ArrayBuffer.empty)
-          Nil
-        case Some(_: PgOutput.Prepare) => prepGid = None; Nil
-        case Some(PgOutput.CommitPrepared(_, _, _, gid)) =>
-          prepared.remove(gid).map(_.toSeq).getOrElse(Nil)
-        case Some(PgOutput.RollbackPrepared(_, _, _, gid)) =>
-          prepared.remove(gid); Nil
-        case Some(PgOutput.StreamPrepare(_, _, xid, gid)) =>
-          prepared(gid) = pending.remove(xid)
-            .map(_.map(_._2)).getOrElse(scala.collection.mutable.ArrayBuffer.empty)
-          Nil
-        case Some(PgOutput.Change(op, meta, cells, before)) =>
-          route(changeRec(op, lsn, seq, curTx, meta, cells, before))
-        case Some(PgOutput.Truncate(metas, _, _)) =>
-          routeAll(truncRecs(lsn, seq, curTx, metas))
-        case Some(m: PgOutput.LogicalMessage) =>
-          if (m.transactional)
-            route(Envelope.messageRecord(lsn, if (prepGid.isDefined) prepTx
-              else if (txid >= 0) txid else lsn, m, seq))
-          else Seq(Envelope.messageRecord(lsn, lsn, m, seq))
-        case Some(tm: PgOutput.TypeMessage) =>
-          route(Envelope.typeRecord(lsn, curTx, tm, seq))
-        case Some(om: PgOutput.OriginMessage) =>
-          route(Envelope.originRecord(lsn, curTx, om, seq))
-        case Some(PgOutput.Streamed(top, msgXid, PgOutput.Change(op, meta, cells, before))) =>
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((msgXid, changeRec(op, lsn, seq, top.toLong & 0xffffffffL, meta, cells, before)))
-          Nil
-        case Some(PgOutput.Streamed(top, msgXid, PgOutput.Truncate(metas, _, _))) =>
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) ++=
-            truncRecs(lsn, seq, top.toLong & 0xffffffffL, metas).map((msgXid, _))
-          Nil
-        case Some(PgOutput.Streamed(top, msgXid, m: PgOutput.LogicalMessage)) =>
-          if (m.transactional) {
-            pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-              ((msgXid, Envelope.messageRecord(lsn, top.toLong & 0xffffffffL, m, seq)))
-            Nil
-          } else Seq(Envelope.messageRecord(lsn, lsn, m, seq))
-        case Some(PgOutput.Streamed(top, msgXid, tm: PgOutput.TypeMessage)) =>
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((msgXid, Envelope.typeRecord(lsn, top.toLong & 0xffffffffL, tm, seq)))
-          Nil
-        case Some(PgOutput.StreamCommit(top, _, _)) =>
-          pending.remove(top).map(_.map(_._2).toSeq).getOrElse(Nil)
-        case Some(PgOutput.StreamAbort(top, sub)) =>
-          if (sub == top) pending.remove(top)
-          else pending.get(top).foreach(_.filterInPlace(_._1 != sub))
-          Nil
-        case _ => Nil
-      }
-    }
-  }
+             initialTxid: Long): Iterator[ChangeRecord] =
+    TxAssembler.decode(Seed(relationFrames.map(_._2), initialTxid, frames.headOption.fold(0L)(_._2)),
+      frames.iterator.map(f => (f._1, f._3)), 0)
 }

@@ -1,9 +1,10 @@
 package graft.sources
 
-import java.nio.ByteBuffer
+import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,150 +16,21 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.cdc.{ChangeRecord, Envelope}
-import graft.wal.{FrameFile, PgOutput, PgOutputDecoder}
+import graft.cdc.ChangeRecord
+import graft.wal.FrameFile
 
 /** Replay decode shared by the batch and streaming paths: one captured
-  * frame file/stream → ChangeRecords. Mirrors the reference's poll-loop
-  * semantics (`CdcEngine.java:89-138`): txid scoping from BEGIN/COMMIT,
-  * out-of-tx DML delivered standalone (txid = own lsn, the singleton path
-  * `CdcEngine.java:125-127`), dropped frame types skipped. */
+  * frame file/stream → ChangeRecords through [[TxAssembler]]. */
 object ReplayDecode {
 
-  /** Decode frames [emitFrom, emitUntil) of a frame sequence. The decoder
-    * always consumes from frame 0 so the relation registry, txid state,
-    * and streamed-transaction buffers are complete regardless of the
-    * requested window (RELATION frames can long precede the DML
-    * referencing them; a proto-v2 streamed tx's segments can long precede
-    * its stream commit). */
+  /** Decode frames [emitFrom, emitUntil) of a frame sequence that starts
+    * at the beginning of a capture: decoding starts at frame 0 from an
+    * empty seed, and frames before `emitFrom` rebuild state but emit
+    * nothing. The streaming source instead seeds each batch from its
+    * index (see [[PgCdcReplayStream]]). */
   def decode(frames: Vector[(Long, Array[Byte])],
-             emitFrom: Int, emitUntil: Int): Iterator[ChangeRecord] = {
-    val decoder = new PgOutputDecoder
-    var txid = -1L
-    // proto v2 streamed-tx assembly: per top-level xid, buffered
-    // (msgXid, record) pairs — resolved at StreamCommit (emit, in the
-    // batch containing the commit frame) or StreamAbort (discard;
-    // sub != top discards just the subtransaction's records)
-    val pending = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, ChangeRecord)]]
-    // proto v3 two-phase assembly: a prepared transaction's content
-    // (b..P, or a streamed tx resolved by 'p') buffers per gid and is
-    // DECIDED arbitrarily later — emitted whole in the batch containing
-    // COMMIT PREPARED ('K'), discarded at ROLLBACK PREPARED ('r').
-    // decode-from-0 makes the prepared-undecided window restart-safe:
-    // a batch cut between P and K rebuilds the buffer on every replay.
-    // Prepared records carry txid = the b frame's xid (unsigned).
-    var prepGid: Option[String] = None
-    var prepTx = -1L
-    val prepared = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[ChangeRecord]]
-    // per-frame arrival seq within an equal-LSN run — (lsn, seq) totally
-    // orders records (LSNs repeat across consecutive pgoutput frames)
-    var seqLsn = Long.MinValue
-    var seq = 0L
-    def changeRec(op: Char, lsn: Long, tx: Long, meta: PgOutput.RelationMeta,
-                  cells: PgOutput.Cells, before: PgOutput.Cells): ChangeRecord =
-      ChangeRecord(
-        op = op.toString, lsn = lsn, txid = tx,
-        schema = meta.schema, table = meta.table,
-        columns = cells.collect { case (k, Some(v)) => k -> v },
-        nulls = cells.collect { case (k, None) => k }.toVector.sorted,
-        before = before.collect { case (k, Some(v)) => k -> v },
-        seq = seq)
-    // one op='T' record per truncated relation (no cells) — the
-    // table-wide wipe marker applyChanges honors
-    def truncRecs(lsn: Long, tx: Long, metas: Vector[PgOutput.RelationMeta]): Seq[ChangeRecord] =
-      metas.map(m => ChangeRecord("T", lsn, tx, m.schema, m.table,
-        Map.empty, Vector.empty, Map.empty, seq))
-    frames.iterator.take(emitUntil).zipWithIndex.flatMap { case ((lsn, bytes), idx) =>
-      if (lsn == seqLsn) seq += 1L else { seqLsn = lsn; seq = 0L }
-      // route a record: into the open prepared buffer (regardless of the
-      // emit window — the decision frame decides where it emits), else
-      // emitted inline when inside the window
-      def route(rec: => ChangeRecord): Seq[ChangeRecord] = prepGid match {
-        case Some(g) => prepared(g) += rec; Nil
-        case None => if (idx >= emitFrom) Seq(rec) else Nil
-      }
-      def routeAll(recs: => Seq[ChangeRecord]): Seq[ChangeRecord] = prepGid match {
-        case Some(g) => prepared(g) ++= recs; Nil
-        case None => if (idx >= emitFrom) recs else Nil
-      }
-      def curTx: Long = if (prepGid.isDefined) prepTx else if (txid >= 0) txid else lsn
-      decoder.decode(ByteBuffer.wrap(bytes)) match {
-        case Some(PgOutput.Begin) => txid = lsn; Nil
-        case Some(PgOutput.Commit) => txid = -1L; Nil
-        case Some(PgOutput.BeginPrepare(_, _, xid, gid)) =>
-          prepGid = Some(gid); prepTx = xid.toLong & 0xffffffffL
-          prepared.getOrElseUpdate(gid, scala.collection.mutable.ArrayBuffer.empty)
-          Nil
-        case Some(_: PgOutput.Prepare) => prepGid = None; Nil
-        case Some(PgOutput.CommitPrepared(_, _, _, gid)) =>
-          // unknown gid (decided before the capture started): nothing
-          // buffered, nothing to deliver
-          val recs = prepared.remove(gid).map(_.toSeq).getOrElse(Nil)
-          if (idx >= emitFrom) recs else Nil
-        case Some(PgOutput.RollbackPrepared(_, _, _, gid)) =>
-          prepared.remove(gid); Nil
-        case Some(PgOutput.StreamPrepare(_, _, xid, gid)) =>
-          // a streamed tx's segments resolve into the prepared-undecided
-          // state instead of applying — K/r decide later
-          prepared(gid) = pending.remove(xid)
-            .map(_.map(_._2)).getOrElse(scala.collection.mutable.ArrayBuffer.empty)
-          Nil
-        case Some(PgOutput.Change(op, meta, cells, before)) =>
-          route(changeRec(op, lsn, curTx, meta, cells, before))
-        case Some(PgOutput.Truncate(metas, _, _)) =>
-          routeAll(truncRecs(lsn, curTx, metas))
-        case Some(m: PgOutput.LogicalMessage) =>
-          // transactional: scoped to the enclosing tx; non-transactional:
-          // standalone at its own position (txid = own lsn, like the
-          // out-of-tx DML singleton path) — and never buffered into a
-          // prepared tx (it does not belong to it)
-          if (m.transactional)
-            route(Envelope.messageRecord(lsn, if (prepGid.isDefined) prepTx
-              else if (txid >= 0) txid else lsn, m, seq))
-          else if (idx >= emitFrom) Seq(Envelope.messageRecord(lsn, lsn, m, seq))
-          else Nil
-        case Some(tm: PgOutput.TypeMessage) =>
-          route(Envelope.typeRecord(lsn, curTx, tm, seq))
-        case Some(om: PgOutput.OriginMessage) =>
-          // ORIGIN tags the enclosing transaction (sent just after BEGIN
-          // in cascaded setups) — scope it like transactional messages
-          route(Envelope.originRecord(lsn, curTx, om, seq))
-        case Some(PgOutput.Streamed(top, msgXid, PgOutput.Change(op, meta, cells, before))) =>
-          // buffered regardless of the emit window — the commit decides
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((msgXid, changeRec(op, lsn, top.toLong & 0xffffffffL, meta, cells, before)))
-          Nil
-        case Some(PgOutput.Streamed(top, msgXid, PgOutput.Truncate(metas, _, _))) =>
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) ++=
-            truncRecs(lsn, top.toLong & 0xffffffffL, metas).map((msgXid, _))
-          Nil
-        case Some(PgOutput.Streamed(top, msgXid, m: PgOutput.LogicalMessage)) =>
-          // transactional messages ride the streamed tx (and vanish with
-          // its abort); non-transactional ones bypass the buffer
-          if (m.transactional) {
-            pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-              ((msgXid, Envelope.messageRecord(lsn, top.toLong & 0xffffffffL, m, seq)))
-            Nil
-          } else if (idx >= emitFrom) Seq(Envelope.messageRecord(lsn, lsn, m, seq))
-          else Nil
-        case Some(PgOutput.Streamed(top, msgXid, tm: PgOutput.TypeMessage)) =>
-          // type announcements inside a streamed tx vanish with its abort
-          pending.getOrElseUpdate(top, scala.collection.mutable.ArrayBuffer.empty) +=
-            ((msgXid, Envelope.typeRecord(lsn, top.toLong & 0xffffffffL, tm, seq)))
-          Nil
-        case Some(PgOutput.StreamCommit(top, _, _)) =>
-          val recs = pending.remove(top).map(_.map(_._2).toSeq).getOrElse(Nil)
-          if (idx >= emitFrom) recs else Nil
-        case Some(PgOutput.StreamAbort(top, sub)) =>
-          if (sub == top) pending.remove(top)
-          else pending.get(top).foreach(_.filterInPlace(_._1 != sub))
-          Nil
-        case _ => Nil
-      }
-    }
-  }
+             emitFrom: Int, emitUntil: Int): Iterator[ChangeRecord] =
+    TxAssembler.decode(Seed.empty, frames.iterator.take(emitUntil), emitFrom)
 
   /** Distributed batch replay: files are the unit of parallelism (each
     * captured WAL segment decodes independently — executors decode, the
@@ -166,11 +38,10 @@ object ReplayDecode {
   def batch(spark: SparkSession, pathGlob: String): Dataset[ChangeRecord] = {
     implicit val enc = Encoders.product[ChangeRecord]
     spark.read.format("binaryFile").load(pathGlob)
-      .select("content")
-      .as(Encoders.BINARY)
-      .mapPartitions(_.flatMap { bytes =>
-        val frames = FrameFile.read(bytes)
-        decode(frames, 0, frames.size)
+      .select("path", "content")
+      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+      .mapPartitions(_.flatMap { case (path, bytes) =>
+        TxAssembler.decode(Seed.empty, FrameFile.frames(bytes, path), 0, path)
       })
   }
 
@@ -190,6 +61,9 @@ object ReplayDecode {
   *    reference's tx-atomic delivery (A11); `maxFramesPerTrigger` bounds
   *    batch size like `maxBatchSize` bounds the reference's batches, but
   *    snapped to the next safe point rather than mid-tx flushed;
+  *  - a batch costs O(batch), not O(file): the driver indexes the file
+  *    once, and each batch reads and decodes only its own byte range,
+  *    seeded from that index (see [[ReplayIndex]]);
   *  - `commit(end)` is where a live source would advance the replication
   *    slot's flushed LSN (A12); for replay it's a no-op.
   *
@@ -235,42 +109,7 @@ class PgCdcReplayStream(path: String, maxFramesPerTrigger: Int,
                         allowMidTxFlush: Boolean = false) extends MicroBatchStream
     with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  // Driver-side index: frame boundaries where no transaction is open —
-  // the only legal batch cut points (tx atomicity, A11). Cheap: one pass
-  // over frame headers + first bytes.
-  private lazy val frames: Vector[(Long, Array[Byte])] = FrameFile.readPath(path)
-  private lazy val safePoints: Vector[Int] = {
-    var open = false
-    // proto v2: a streamed tx stays open from its first 'S' segment until
-    // its stream commit 'c' (or whole-tx abort) — a safe point requires
-    // no open v1 tx AND no unresolved streamed tx
-    val streamed = scala.collection.mutable.Set.empty[Int]
-    val pts = Vector.newBuilder[Int]
-    pts += 0
-    frames.zipWithIndex.foreach { case ((_, bytes), i) =>
-      bytes(0).toChar match {
-        case 'B' => open = true
-        case 'C' => open = false
-        // v3 2PC: the b..P content phase must not split (same rule as
-        // B..C); the prepared-UNDECIDED window P..K/r IS cuttable here —
-        // replay re-decodes from frame 0, so the buffer rebuilds and the
-        // tx still delivers whole in the batch containing its decision
-        case 'b' => open = true
-        case 'P' => open = false
-        case 'S' => streamed += ByteBuffer.wrap(bytes, 1, 4).getInt
-        case 'c' => streamed -= ByteBuffer.wrap(bytes, 1, 4).getInt
-        // STREAM PREPARE resolves the streamed segments into the
-        // prepared-undecided state: xid sits after tag+flags+3×Int64
-        case 'p' => streamed -= ByteBuffer.wrap(bytes, 26, 4).getInt
-        case 'A' =>
-          val top = ByteBuffer.wrap(bytes, 1, 4).getInt
-          if (ByteBuffer.wrap(bytes, 5, 4).getInt == top) streamed -= top
-        case _ => ()
-      }
-      if (!open && streamed.isEmpty) pts += (i + 1)
-    }
-    pts.result().distinct
-  }
+  private lazy val index: ReplayIndex = ReplayIndex(path)
 
   override def initialOffset(): Offset = FrameOffset(0)
 
@@ -288,38 +127,36 @@ class PgCdcReplayStream(path: String, maxFramesPerTrigger: Int,
     * with `allowMidTxFlush=true`, cut AT the limit even mid-tx — the
     * reference's overflow flush (`CdcEngine.java:121-124`), bounding
     * batch memory for pathological transactions at the cost of
-    * batch-level atomicity for that tx (decode-from-0 keeps txids
-    * correct across the cut; at-least-once redelivery on a crash between
-    * the two halves is absorbed by the idempotent applyChanges MERGE).
-    * Stateless: restart recovery needs no driver state beyond the
-    * checkpointed offset. */
+    * batch-level atomicity for that tx (the next batch is seeded with the
+    * open txid, so txids stay correct across the cut; at-least-once
+    * redelivery on a crash between the two halves is absorbed by the
+    * idempotent applyChanges MERGE). Stateless: restart recovery needs no
+    * driver state beyond the checkpointed offset. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[FrameOffset].frame
     val cap = limit match {
       case r: ReadMaxRows => r.maxRows().min(Int.MaxValue.toLong).toInt
       case _ => Int.MaxValue
     }
-    val target = math.min(frames.size.toLong, s.toLong + cap).toInt
-    val snapped = safePoints.filter(_ <= target).lastOption.getOrElse(0)
+    val target = math.min(index.frames.toLong, s.toLong + cap).toInt
+    val snapped = index.safeAtOrBefore(target)
     if (snapped > s) FrameOffset(snapped)
     else if (allowMidTxFlush && target > s) FrameOffset(target)
-    else FrameOffset(safePoints.find(_ > s).getOrElse(s))
+    else FrameOffset(index.safeAfter(s).getOrElse(s))
   }
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) is used via SupportsAdmissionControl")
 
-  override def reportLatestOffset(): Offset = FrameOffset(frames.size)
+  override def reportLatestOffset(): Offset = FrameOffset(index.frames)
 
   /** Replay files are immutable — nothing to snapshot for AvailableNow. */
   override def prepareForTriggerAvailableNow(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[FrameOffset].frame
-    val e = end.asInstanceOf[FrameOffset].frame
-    Array(ReplayPartition(path, s, e))
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    Array(index.partition(path, start.asInstanceOf[FrameOffset].frame,
+      end.asInstanceOf[FrameOffset].frame))
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => {
@@ -327,10 +164,9 @@ class PgCdcReplayStream(path: String, maxFramesPerTrigger: Int,
       new PartitionReader[InternalRow] {
         private val serializer =
           ExpressionEncoder[ChangeRecord]().createSerializer()
-        private val it = {
-          val fs = FrameFile.readPath(p.path)
-          ReplayDecode.decode(fs, p.from, p.until)
-        }
+        private val it = TxAssembler.decode(p.seed,
+          FrameFile.frames(FrameFile.readRange(p.path, p.byteFrom, p.byteUntil), p.path, p.readFrom),
+          p.from - p.readFrom, p.path)
         private var current: InternalRow = _
         override def next(): Boolean =
           if (it.hasNext) { current = serializer(it.next()).copy(); true } else false
@@ -347,4 +183,74 @@ class PgCdcReplayStream(path: String, maxFramesPerTrigger: Int,
   override def stop(): Unit = ()
 }
 
-final case class ReplayPartition(path: String, from: Int, until: Int) extends InputPartition
+/** One replay batch: emit frames [from, until) by reading frames
+  * [readFrom, until) — bytes [byteFrom, byteUntil) of `path` — from
+  * `seed`. `readFrom` < `from` only while a streamed or prepared
+  * transaction is open at `from`. */
+final case class ReplayPartition(path: String, readFrom: Int, from: Int, until: Int,
+                                 byteFrom: Long, byteUntil: Long, seed: Seed) extends InputPartition
+
+/** Driver-side index of a frame file, built in one pass and holding no
+  * frame bytes: per frame boundary i, the byte offset, the boundary scan
+  * state (open txid, open units, relation registry — shared between
+  * boundaries it does not change at) and the arrival seq of frame i; plus
+  * the replay-safe boundaries, the only cut points besides mid-tx flushes.
+  *
+  * The seed rule: a batch emitting from boundary `from` reads from the
+  * first frame of the earliest streamed or prepared transaction still
+  * open at `from` (else from `from` itself), seeded with the relations,
+  * open txid and seq at that frame. Every transaction whose records the
+  * batch can emit is then read whole; ones that start earlier closed
+  * before `from`, so they emit nothing. An in-doubt prepared transaction
+  * makes every later batch read back to its 'b' — at most the cost of
+  * decoding from frame 0. */
+private[sources] final class ReplayIndex(offsets: Array[Long], scans: Array[TxScan],
+                                         seqs: Array[Int], safe: Array[Int]) {
+  def frames: Int = seqs.length
+
+  /** Position in `safe` of the first replay-safe boundary after `at`. */
+  private def after(at: Int): Int = {
+    val i = java.util.Arrays.binarySearch(safe, at)
+    if (i >= 0) i + 1 else -i - 1
+  }
+
+  /** The furthest replay-safe boundary at or before `at` (0 is safe). */
+  def safeAtOrBefore(at: Int): Int = safe(after(at) - 1)
+
+  /** The first replay-safe boundary after `at`, if any. */
+  def safeAfter(at: Int): Option[Int] = safe.lift(after(at))
+
+  def partition(path: String, from: Int, until: Int): ReplayPartition = {
+    val readFrom = scans(from).readFrom(from)
+    val seq = if (readFrom < frames) seqs(readFrom).toLong else 0L
+    ReplayPartition(path, readFrom, from, until, offsets(readFrom), offsets(until),
+      scans(readFrom).seed(seq))
+  }
+}
+
+private[sources] object ReplayIndex {
+  def apply(path: String): ReplayIndex = {
+    val offsets = Array.newBuilder[Long]
+    val scans = Array.newBuilder[TxScan]
+    val seqs = Array.newBuilder[Int]
+    val safe = Array.newBuilder[Int]
+    var scan = TxScan()
+    var offset = 0L
+    var lastLsn = Long.MinValue
+    var seq = 0
+    var i = 0
+    offsets += 0L; scans += scan; safe += 0
+    FrameFile.frames(Files.readAllBytes(Paths.get(path)), path).foreach { case (lsn, bytes) =>
+      seq = if (lsn == lastLsn) seq + 1 else 0
+      lastLsn = lsn
+      seqs += seq
+      scan = try scan.step(i, lsn, bytes)
+        catch { case NonFatal(e) => throw new FrameDecodeException(lsn, seq, path, e) }
+      i += 1
+      offset += FrameFile.HeaderBytes + bytes.length
+      offsets += offset; scans += scan
+      if (scan.replaySafe) safe += i
+    }
+    new ReplayIndex(offsets.result(), scans.result(), seqs.result(), safe.result())
+  }
+}

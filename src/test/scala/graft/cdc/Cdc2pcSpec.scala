@@ -9,9 +9,10 @@ import graft.wal.{FrameFile, PgOutput, PgOutputEncoder}
   * r15 next #4): a prepared transaction's content (b..P) buffers and is
   * delivered ONLY at COMMIT PREPARED ('K') — whole, never split — or
   * discarded at ROLLBACK PREPARED ('r'); batch boundaries may land
-  * inside the prepared-UNDECIDED window (decode-from-0 rebuilds the
-  * buffer), and a kill-resume across that window neither loses nor
-  * duplicates the transaction. */
+  * inside the prepared-UNDECIDED window (the next batch re-reads from
+  * the transaction's 'b' frame and rebuilds the buffer), and a
+  * kill-resume across that window neither loses nor duplicates the
+  * transaction. */
 class Cdc2pcSpec extends SparkSpec {
 
   import PgOutput._

@@ -422,7 +422,7 @@ class CdcReplaySpec extends SparkSpec {
     val dups = all.map(_._1).groupBy(identity).collect { case (l, occ) if occ.size > 1 => l }
     assert(dups.toSet.subsetOf(killBatch), s"unexpected redelivery: $dups")
     // txid scoping survives the mid-tx cut: every record carries the
-    // transaction's BEGIN lsn (decode always replays from frame 0)
+    // transaction's BEGIN lsn (the next batch is seeded with the open txid)
     assert(all.map(_._2).distinct === Vector(101L))
   }
 

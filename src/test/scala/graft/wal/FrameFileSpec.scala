@@ -1,5 +1,6 @@
 package graft.wal
 
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,6 +39,16 @@ class FrameFileSpec extends AnyFunSuite {
     intercept[FrameFile.CorruptFrameException] {
       FrameFile.read(bytes ++ Array[Byte](0, 0, 0))
     }
+    // a complete header with a negative length is corruption too, named
+    // by frame index, lsn and (for a file) path
+    val negative = ByteBuffer.allocate(12).putLong(100L).putInt(-1).array()
+    val err = intercept[FrameFile.CorruptFrameException](FrameFile.read(bytes ++ negative))
+    assert(err.getMessage.contains("at frame 2, lsn=100"), err.getMessage)
+    Files.write(truncated, negative)
+    val fromFile = intercept[FrameFile.CorruptFrameException] {
+      FrameFile.readPath(truncated.toString)
+    }
+    assert(fromFile.getMessage.contains(s"at frame 0, lsn=100 in $truncated"), fromFile.getMessage)
   }
 
   test("EOF at a frame boundary is a clean end") {
