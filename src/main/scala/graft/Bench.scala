@@ -1,8 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
 
-/** Benchmark main (driver contract): runs every registered query on
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+
+/** The timing main. With no arguments it is the benchmark sweep, whose
+  * output is a contract: runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Protocol per BASELINE.md:
   * 1 warmup + median of 5 timed runs per query (mirrored by
   * tools/bench_duck.py); the action is collect()
@@ -17,19 +24,69 @@ import org.apache.spark.sql.SparkSession
   * "kernel_udf_sites" records the dedup queries' kernel invocation-site
   * counts (graft.operators.PlanAudit) so a single-pass regression shows
   * up in the bench JSON itself, not just as a slower number.
+  *
+  * Three dev modes share the sweep's session and iteration protocol, so a
+  * number they print is comparable with the sweep's (see [[Usage]]):
+  *  - `time`: per-iteration wall, process CPU and JVM-health deltas (GC
+  *    count/time, JIT, code cache, metaspace, heap), so a stalled
+  *    iteration self-identifies as GC-bound, compile-bound, or neither;
+  *    `query:N` sets the timed iterations (default 5), no query = the
+  *    sweep's queries in sweep order;
+  *  - `jobs`: per Spark job of one query — wall, stages, tasks, executor
+  *    run time, shuffle records written;
+  *  - `explain`: the formatted physical plan.
   */
 object Bench {
+  sealed trait Mode
+  case object Sweep extends Mode
+  final case class Time(sfDir: String, runs: Seq[(String, Int)]) extends Mode
+  final case class Jobs(sfDir: String, query: String) extends Mode
+  final case class Explain(sfDir: String, queries: Seq[String]) extends Mode
+
+  val Usage: String = "usage: graft.Bench [time <sfDir> [query[:iters]]... | " +
+    "jobs <sfDir> <query> | explain <sfDir> <query>...]"
+  val Iters = 5
+
+  /** The sweep's queries, in sweep order. _check queries are correctness
+    * contracts that deliberately recompute each approximate operator's
+    * exact twin — correctness artifacts, not headline throughput; Verify
+    * runs them, the bench doesn't. */
+  def sweepQueries: Seq[String] =
+    SparkEntry.queries.keys.filterNot(_.contains("_check")).toSeq.sorted
+
+  /** Command line → mode, without side effects. Malformed input throws
+    * IllegalArgumentException naming the offending token, plus [[Usage]]. */
+  def parse(args: Seq[String]): Mode = {
+    def bad(why: String, token: String): Nothing =
+      throw new IllegalArgumentException(s"$why: '$token'\n$Usage")
+    def query(name: String): String =
+      if (SparkEntry.queries.contains(name)) name else bad("unknown query", name)
+    def run(spec: String): (String, Int) = spec.split(":", -1) match {
+      case Array(n) => query(n) -> Iters
+      case Array(n, i) if i.toIntOption.exists(_ > 0) => query(n) -> i.toInt
+      case _ => bad("expected query[:iters] with iters a positive integer", spec)
+    }
+    args match {
+      case Seq() => Sweep
+      case Seq(mode @ ("time" | "jobs" | "explain")) => bad("missing sfDir after", mode)
+      case Seq("time", dir) => Time(dir, sweepQueries.map(_ -> Iters))
+      case Seq("time", dir, specs @ _*) => Time(dir, specs.map(run))
+      case Seq("jobs" | "explain", dir) => bad("missing query after", dir)
+      case Seq("jobs", dir, q) => Jobs(dir, query(q))
+      case Seq("jobs", _, _, extra @ _*) => bad("jobs takes one query; extra", extra.mkString(" "))
+      case Seq("explain", dir, qs @ _*) => Explain(dir, qs.map(query))
+      case Seq(other, _*) => bad("unknown mode", other)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // graft extensions: the lifecycle-SQL rows (q162+) parse through
-      // the injected parser; the injection changes no other plan
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val mode = try parse(args.toSeq) catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"[bench] ${e.getMessage}")
+        sys.exit(2)
+    }
+    val spark = GraftSession.local("graft-bench")
       // long many-query sessions accumulate shuffle files + broadcasts.
       // Cleanup GC is driven DETERMINISTICALLY: an explicit System.gc()
       // in the between-queries breather (clock stopped), so ContextCleaner
@@ -45,67 +102,163 @@ object Bench {
     // per-query error strings carry every real failure, so retried-task
     // noise has no business in a Bench session's stdout
     spark.sparkContext.setLogLevel("FATAL")
+    val rc = mode match {
+      case Sweep => sweep(spark, sfDir)
+      case Time(dir, runs) => time(spark, dir, runs); 0
+      case Jobs(dir, q) => jobs(spark, dir, q); 0
+      case Explain(dir, qs) => explain(spark, dir, qs); 0
+    }
+    spark.stop()
+    if (rc != 0) sys.exit(rc)
+  }
 
-    /** Post-drain storage gauge: (tracked persistent RDDs, block-manager
-      * bytes in use). A non-zero RDD count or growing byte gauge after an
-      * iteration's drain means a generation escaped the Storage registry —
-      * exactly the leak shape behind the r4-r6 nomadic sweep stalls. */
-    def storageGauge(): (Int, Long) = {
-      val rdds = spark.sparkContext.getPersistentRDDs.size
-      val used = spark.sparkContext.getExecutorMemoryStatus.values
-        .map { case (max, remaining) => max - remaining }.sum
-      (rdds, used)
+  /** One iteration's evidence: wall seconds, the process-CPU seconds it
+    * got, and the post-drain storage gauge (tracked persistent RDDs,
+    * block-manager bytes in use). A non-zero RDD count or growing byte
+    * gauge after an iteration's drain means a generation escaped the
+    * Storage registry — exactly the leak shape behind the r4-r6 nomadic
+    * sweep stalls. */
+  final case class Iter(wall: Double, cpu: Double, rdds: Int, storBytes: Long)
+
+  /** Process-CPU gauge (r19, VERDICT r18 wrong #1): the stall class's
+    * missing discriminator. A slow iteration whose process-CPU delta
+    * scales with its wall time really computed more; one whose CPU
+    * stays flat was STARVED (descheduled by the box — co-tenant load),
+    * which no amount of query optimization fixes. -1 if the platform
+    * bean is unavailable. */
+  private def cpuNanos(): Long = ManagementFactory.getOperatingSystemMXBean match {
+    case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+    case _ => -1L
+  }
+
+  /** One timed run, the same in every mode. The drain runs AFTER the
+    * clock stops: checkpoint generations from iteration k must not be
+    * lying around for the ContextCleaner to collect mid-iteration k+1 —
+    * that cleanup storm (not the query) produced the 6-20 s outliers that
+    * corrupted q49's r6 median. Each call to `fn` builds a fresh kernel,
+    * so releasing between iterations is safe per the Storage contract. */
+  private def iteration(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Iter = {
+    val c0 = cpuNanos()
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).collect()
+    val t = (System.nanoTime() - t0) / 1e9
+    val cpu = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
+    // blocking: the gauge below must observe the post-drain state, not
+    // race the async unpersist (drain runs after the clock stops)
+    val drained = graft.operators.Storage.releaseAll(blocking = true)
+    // storage-holding queries are the kernel-allocation-heavy ones
+    // (packed block arrays, exploded indexes) — collect their debt NOW,
+    // clock stopped, instead of letting a major GC land in a later
+    // timed iteration (the r7c residual: q35/q46 3-5 s one-iteration
+    // spikes with clean storage gauges). Cheap queries never pay this.
+    if (drained > 0) System.gc()
+    val sc = spark.sparkContext
+    val used = sc.getExecutorMemoryStatus.values
+      .map { case (max, remaining) => max - remaining }.sum
+    Iter(t, cpu, sc.getPersistentRDDs.size, used)
+  }
+
+  /** Between queries give the JVM a breather so one query's GC debt
+    * doesn't land in the next query's first iteration. */
+  private def breather(): Unit = {
+    graft.operators.Storage.releaseAll()
+    System.gc(); Thread.sleep(300)
+  }
+
+  private def medOf(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
+
+  /** JVM-health counters: GC count, GC ms, JIT ms, code-cache, metaspace
+    * and heap bytes in use. */
+  private def jvmHealth(): Seq[Long] = {
+    val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    def used(prefix: String): Long =
+      pools.filter(_.getName.startsWith(prefix)).map(_.getUsage.getUsed).sum
+    Seq(gcs.map(_.getCollectionCount).sum, gcs.map(_.getCollectionTime).sum,
+      ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+      used("CodeHeap"), used("Metaspace"),
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
+  }
+
+  /** `time` mode: one warmup, then `iters` timed iterations per query, one
+    * line each, then med/min/max. Returns the timed iterations. */
+  def time(spark: SparkSession, sfDir: String, runs: Seq[(String, Int)]): Seq[(String, Seq[Iter])] =
+    runs.map { case (name, iters) =>
+      val fn = SparkEntry.queries(name)
+      def one(tag: String): Iter = {
+        val j0 = jvmHealth()
+        val it = iteration(spark, sfDir, fn)
+        val d = jvmHealth().zip(j0).map { case (a, b) => a - b }
+        println(f"$name%-22s $tag%-5s t=${it.wall}%7.3f cpu=${it.cpu}%7.2f  " +
+          f"gc=+${d(0)}%d ${d(1) / 1000.0}%.2fs  jit=+${d(2) / 1000.0}%.2fs  " +
+          f"code=${d(3) >> 20}%+dMB meta=${d(4) >> 20}%+dMB heap=${d(5) >> 20}%+dMB")
+        it
+      }
+      one("warm")
+      val its = (1 to iters).map(i => one(s"it$i"))
+      val ts = its.map(_.wall)
+      println(f"$name%-22s med=${medOf(ts)}%.3f min=${ts.min}%.3f max=${ts.max}%.3f")
+      breather()
+      name -> its
     }
 
-    /** One timed run. The drain runs AFTER the clock stops: checkpoint
-      * generations from iteration k must not be lying around for the
-      * ContextCleaner to collect mid-iteration k+1 — that cleanup storm
-      * (not the query) produced the 6-20 s outliers that corrupted q49's
-      * r6 median. Each call to `fn` builds a fresh kernel, so releasing
-      * between iterations is safe per the Storage contract. */
-    /** Process-CPU gauge (r19, VERDICT r18 wrong #1): the stall class's
-      * missing discriminator. A slow iteration whose process-CPU delta
-      * scales with its wall time really computed more; one whose CPU
-      * stays flat was STARVED (descheduled by the box — co-tenant load),
-      * which no amount of query optimization fixes. -1 if the platform
-      * bean is unavailable. */
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def cpuNanos(): Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
+  /** `jobs` mode: a warmup and one timed iteration of `name`, each followed
+    * by one line per Spark job: wall, completed stages, tasks, executor
+    * run time and shuffle records written, and the result stage's call
+    * site. */
+  def jobs(spark: SparkSession, sfDir: String, name: String): Unit = {
+    val fn = SparkEntry.queries(name)
+    // the listener bus calls one listener from one thread: only `done`,
+    // read by this thread, is shared
+    val started = scala.collection.mutable.Map[Int, SparkListenerJobStart]()
+    val ran = scala.collection.mutable.Map[Int, Seq[Long]]() // stage -> tasks, run ms, shuffle recs
+    val done = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started(js.jobId) = js
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val (si, m) = (sc.stageInfo, sc.stageInfo.taskMetrics)
+        ran(si.stageId) = Seq(si.numTasks, m.executorRunTime, m.shuffleWriteMetrics.recordsWritten)
+      }
+      // a stage an earlier job ran is skipped by this one and not counted
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = started.remove(je.jobId).foreach { js =>
+        val st = js.stageIds.flatMap(ran.remove)
+        def sum(i: Int): Long = st.map(_(i)).sum
+        done.put(je.jobId, f"job ${je.jobId}%4d ${(je.time - js.time) / 1000.0}%7.3f s  " +
+          f"stages=${st.size}%3d tasks=${sum(0)}%5d run=${sum(1)}%7d ms  " +
+          f"shuffleRecs=${sum(2)}%9d  ${js.stageInfos.maxBy(_.stageId).name}")
+      }
     }
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Int, Long, Double) = {
-      val c0 = cpuNanos()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).collect()
-      val t = (System.nanoTime() - t0) / 1e9
-      val cpu = if (c0 < 0) -1.0 else (cpuNanos() - c0) / 1e9
-      // blocking: the gauge below must observe the post-drain state, not
-      // race the async unpersist (drain runs after the clock stops)
-      val drained = graft.operators.Storage.releaseAll(blocking = true)
-      // storage-holding queries are the kernel-allocation-heavy ones
-      // (packed block arrays, exploded indexes) — collect their debt NOW,
-      // clock stopped, instead of letting a major GC land in a later
-      // timed iteration (the r7c residual: q35/q46 3-5 s one-iteration
-      // spikes with clean storage gauges). Cheap queries never pay this.
-      if (drained > 0) System.gc()
-      val (rdds, used) = storageGauge()
-      (t, rdds, used, cpu)
+    spark.sparkContext.addSparkListener(listener)
+    try Seq("warm", "it1").foreach { tag =>
+      done.clear()
+      val it = iteration(spark, sfDir, fn)
+      Thread.sleep(500) // the listener bus delivers job events asynchronously
+      println(f"--- $name $tag t=${it.wall}%.3f cpu=${it.cpu}%.2f jobs=${done.size}")
+      done.values.asScala.foreach(l => println("  " + l))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    breather()
+  }
+
+  /** `explain` mode: prints and returns each query's formatted plan. */
+  def explain(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[(String, String)] =
+    names.map { name =>
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      println(s"===== $name =====\n$plan")
+      breather()
+      name -> plan
     }
 
-    // _check queries are correctness contracts that deliberately recompute
-    // each approximate operator's exact twin — correctness artifacts, not
-    // headline throughput; Verify runs them, the bench doesn't.
-    // dev-only: SPARK_GRAFT_BENCH_ONLY=q68_curate,q100_pipeline_v3 limits
-    // the sweep for targeted iteration; the driver never sets it, so the
-    // per-round artifact always covers the full surface
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+  /** The sweep (no arguments). Returns the exit code: 0, 1 if a query
+    * failed, 2 if a stdout tripwire fired. */
+  private def sweep(spark: SparkSession, sfDir: String): Int = {
     // STALL SELF-ANNOTATION (r18; VERDICT r17 wrong #3): each sweep has
     // shown ~one random 10-20× box-noise stall on untouched code, and
     // the committed artifact is what a future round diffs first — an
     // unannotated stall reads as a regression until someone re-times it
     // by hand. The previous artifact's medians are the reference: a
-    // query whose fresh median exceeds 5× its prior one is re-timed
+    // query whose fresh median exceeds 2.5× its prior one is re-timed
     // ONCE in-sweep and BOTH numbers ship in the JSON ("retimed"), so
     // the artifact distinguishes noise (retry ≈ prior) from a real
     // regression (retry ≈ first) by itself.
@@ -122,24 +275,21 @@ object Bench {
           .filter(_._2 > 0).toMap
       }
     }
-    def medOf(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
-    val results = SparkEntry.queries.toSeq
-      .filterNot(_._1.contains("_check"))
-      .filter(q => only.forall(_.contains(q._1)))
-      .sortBy(_._1).map { case (name, fn) =>
-      val r: Either[String, (Seq[(Double, Int, Long, Double)], Option[Double])] = try {
-        timeOne(fn) // warmup (JIT + file listing + codegen caches)
+    val results = sweepQueries.map { name =>
+      val fn = SparkEntry.queries(name)
+      val r: Either[String, (Seq[Iter], Option[Double])] = try {
+        iteration(spark, sfDir, fn) // warmup (JIT + file listing + codegen caches)
         // median of 5, iteration order preserved for the artifact
-        val runs = Seq.fill(5)(timeOne(fn))
+        val runs = Seq.fill(Iters)(iteration(spark, sfDir, fn))
         // outlier vs the prior artifact (floor 50 ms — a 1→6 ms jitter
         // is not a stall): one extra timed run, recorded alongside.
         // Trigger 2.5× (r19; was 5×, which let q105's 2.6× stall ship
         // unannotated — VERDICT r18 wrong #2)
         val retry = priorMed.get(name)
-          .filter(p => medOf(runs.map(_._1)) > 2.5 * math.max(p, 0.05))
+          .filter(p => medOf(runs.map(_.wall)) > 2.5 * math.max(p, 0.05))
           .map { p =>
-            val t = timeOne(fn)._1
-            System.err.println(f"[bench] OUTLIER $name: med=${medOf(runs.map(_._1))}%.2f " +
+            val t = iteration(spark, sfDir, fn).wall
+            System.err.println(f"[bench] OUTLIER $name: med=${medOf(runs.map(_.wall))}%.2f " +
               f"vs prior $p%.2f — in-sweep retry ${t}%.2f (both recorded)")
             t
           }
@@ -150,10 +300,7 @@ object Bench {
           e.printStackTrace()
           Left(e.toString.replaceAll("[\"\\\\\n]", " ").take(180))
       }
-      // between queries additionally give the JVM a breather so one
-      // query's GC debt doesn't land in the next query's first iteration
-      graft.operators.Storage.releaseAll()
-      System.gc(); Thread.sleep(300)
+      breather()
       name -> r
     }
     // single-pass audit of the dedup kernels (see PlanAudit scaladoc)
@@ -170,11 +317,11 @@ object Bench {
 
     def j(entries: Seq[(String, String)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def med(r: Seq[(Double, Int, Long, Double)]): Double = r.map(_._1).sorted.apply(2)
+    def med(r: Seq[Iter]): Double = medOf(r.map(_.wall))
     val qs = j(results.map { case (k, v) =>
       k -> v.fold(_ => "-1", r => med(r._1).toString) })
     val stats = j(results.collect { case (k, Right((r, retry))) =>
-      val ts = r.map(_._1)
+      val ts = r.map(_.wall)
       k -> j(Seq(
         "min" -> ts.min.toString, "med" -> med(r).toString, "max" -> ts.max.toString,
         // per-iteration evidence: raw timings in arrival order plus the
@@ -184,13 +331,13 @@ object Bench {
         // stall whose cpu stays at the normal iterations' level was
         // box starvation, not computation
         "iters" -> ts.mkString("[", ",", "]"),
-        "rdds" -> r.map(_._2).mkString("[", ",", "]"),
-        "stor_mb" -> r.map(x => x._3 >> 20).mkString("[", ",", "]"),
+        "rdds" -> r.map(_.rdds).mkString("[", ",", "]"),
+        "stor_mb" -> r.map(_.storBytes >> 20).mkString("[", ",", "]"),
         "cpu" -> r.map(x => String.format(java.util.Locale.ROOT, "%.2f",
-          Double.box(x._4))).mkString("[", ",", "]")) ++
+          Double.box(x.cpu))).mkString("[", ",", "]")) ++
         retry.map(t => "retry" -> t.toString))
     })
-    // >5×-prior outliers re-timed in-sweep: first median AND retry ship
+    // >2.5×-prior outliers re-timed in-sweep: first median AND retry ship
     // together, so the artifact self-identifies box-noise stalls
     val retimed = j(results.collect { case (k, Right((r, Some(t)))) =>
       k -> j(Seq("med" -> med(r).toString, "retry" -> t.toString,
@@ -256,14 +403,12 @@ object Bench {
       System.err.println(s"[bench] SHORT-KEY COLLISION: " +
         shortKeys.diff(shortKeys.distinct).distinct.mkString(",") +
         " - fix Bench.shortKey before shipping")
-      spark.stop(); sys.exit(2)
-    }
-    if (compact.length > 1800) {
+      2
+    } else if (compact.length > 1800) {
       System.err.println(s"[bench] COMPACT LINE ${compact.length} chars exceeds " +
         "the 1800-char driver tail budget - shrink keys/fields before shipping")
-      spark.stop(); sys.exit(2)
-    }
-    spark.stop()
-    if (nFailed > 0) sys.exit(1)
+      2
+    } else if (nFailed > 0) 1
+    else 0
   }
 }

@@ -164,4 +164,13 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.ui.enabled", "false")
+
+  /** [[builder]] on `local[SPARK_GRAFT_CPUS]` (default 4) with one shuffle
+    * partition per core: the session of the Bench and Verify mains, so a
+    * timing and a correctness run see the same planner settings. */
+  def local(appName: String): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    builder(appName).master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+  }
 }

@@ -23,6 +23,14 @@ class OracleBudgetSpec extends AnyFunSuite {
   private val BudgetSeconds = 10.0
   private val SfDir = "/root/testdata/sf0.01"
 
+  test("oracle JSON escapes quote, backslash, control and non-ASCII chars losslessly") {
+    val tricky = "q\"uo\\te\nnl\rcr\ttab\u0001ctl é→漢"
+    val m = Map(s"key$tricky" -> s"SELECT '$tricky' AS x")
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(graft.OracleDump.json(m), classOf[java.util.Map[String, String]])
+    assert(parsed == java.util.Map.of(s"key$tricky", s"SELECT '$tricky' AS x"))
+  }
+
   test(s"every oracle completes in DuckDB within ${BudgetSeconds}s at sf0.01") {
     assume(Files.exists(Paths.get(s"$SfDir/documents.parquet")), "testdata absent")
     val probe = new ProcessBuilder("python3", "-c", "import duckdb").start()
