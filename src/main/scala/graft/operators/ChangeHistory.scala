@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.cdc.Envelope.{ApplyKernel, UnchangedCol}
 
 /** Type-2 slowly-changing-dimension (SCD2) history from a CDC change
   * stream — the canonical downstream materialization of the change
@@ -73,22 +76,18 @@ object ChangeHistory {
     *
     * Scale shape: [[scd2]] on the batch is batch-sized; the history
     * pays ONE left join against the batch's first-change-per-key
-    * table (batch-key-sized — broadcast under `broadcastKeyBound`, so
-    * the history does not shuffle at all in the normal case; exact
-    * shuffle-hash above it) and a row-local close projection. Closed
-    * historical versions are never rewritten, only streamed through. */
+    * table (batch-key-sized, a [[keySide]], so the history does not
+    * shuffle at all in the normal case) and a row-local close
+    * projection. Closed historical versions are never rewritten, only
+    * streamed through. */
   def scd2Merge(current: DataFrame, batch: DataFrame, key: Column,
                 tsMicros: Column, seq: Column, op: Column,
-                values: Seq[(String, Column)],
-                broadcastKeyBound: Long = 10000000L): DataFrame = {
+                values: Seq[(String, Column)]): DataFrame = {
     val inc = scd2(batch, key, tsMicros, seq, op, values)
     val firstChange = batch
       .select(key.as("key"), tsMicros.cast("long").as("__ts"))
       .groupBy("key").agg(min(col("__ts")).as("__close_us"))
-    val side =
-      if (SizeDispatch.atMost(firstChange, broadcastKeyBound)) broadcast(firstChange)
-      else firstChange.hint("shuffle_hash")
-    val closed = current.join(side, Seq("key"), "left")
+    val closed = current.join(keySide(firstChange), Seq("key"), "left")
       .withColumn("valid_to_us",
         when(col("is_current") && col("__close_us").isNotNull, col("__close_us"))
           .otherwise(col("valid_to_us")))
@@ -134,46 +133,27 @@ object ChangeHistory {
     *
     * Scale shape: one key-window over the BATCH (batch-sized shuffle);
     * the base pays ONE inner join against the batch's touched keys
-    * (broadcast under `broadcastKeyBound`, so the base never shuffles
-    * in the normal case); contributions explode row-locally, aggregate
-    * at delta size, and merge into the view with one null-safe
-    * group-key join (view is group-cardinality — small by
-    * construction). */
+    * (a [[keySide]], so the base never shuffles in the normal case);
+    * contributions explode row-locally, aggregate at delta size, and
+    * merge into the view with one null-safe group-key join (view is
+    * group-cardinality — small by construction). */
   def maintainAggView(view: Option[DataFrame], base: DataFrame,
                       typedChanges: DataFrame, rowKeys: Seq[String],
-                      groupKeys: Seq[String], valueCol: String,
-                      broadcastKeyBound: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = typedChanges.sparkSession
+                      groupKeys: Seq[String], valueCol: String): DataFrame = {
     val sumType: DataType = base.schema(valueCol).dataType match {
       case d: DecimalType => DecimalType(38, d.scale)
       case _: ByteType | _: ShortType | _: IntegerType | _: LongType => LongType
       case _ => DoubleType
     }
-    // ---- the applyChanges ordering/truncate discipline, verbatim
-    val seqC = if (typedChanges.columns.contains("seq")) col("seq") else lit(0L)
-    val pos = struct(col("lsn"), seqC)
-    val tmax = typedChanges.agg(max(when(col("op") === "T", pos)).as("__tmax"))
-    val basePruned = base.crossJoin(broadcast(tmax))
-      .filter(col("__tmax").isNull).drop("__tmax")
-    val changes = typedChanges.crossJoin(broadcast(tmax))
-      .filter(col("op") =!= "T" && (col("__tmax").isNull || pos > col("__tmax")))
-      .drop("__tmax")
-    val w = Window.partitionBy(rowKeys.map(col): _*)
-      .orderBy(col("lsn").desc, seqC.desc, col("op").desc)
-    val hasUnchanged = typedChanges.columns.contains(graft.cdc.Envelope.UnchangedCol)
+    val batch = new ApplyKernel(typedChanges)
+    val hasUnchanged = typedChanges.columns.contains(UnchangedCol)
     val needed = rowKeys ++ (groupKeys :+ valueCol).filterNot(rowKeys.contains)
-    val latest = changes
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    val latest = batch.latest(rowKeys)
       .select((Seq(col("op")) ++ needed.map(col) ++
-        (if (hasUnchanged) Seq(col(graft.cdc.Envelope.UnchangedCol)) else Nil)): _*)
-    // ---- pre-batch rows of the touched keys: the base never shuffles —
-    // the touched-key list is batch-sized and broadcasts
+        (if (hasUnchanged) Seq(col(UnchangedCol)) else Nil)): _*)
+    // pre-batch rows of the touched keys: the base never shuffles
     val touched = latest.select(rowKeys.map(col): _*)
-    val touchedSide =
-      if (SizeDispatch.atMost(touched, broadcastKeyBound)) broadcast(touched)
-      else touched.hint("shuffle_hash")
-    val oldRows = basePruned.join(touchedSide, rowKeys)
+    val oldRows = batch.prune(base).join(keySide(touched), rowKeys)
       .select(rowKeys.map(col) ++
         groupKeys.map(g => col(g).as(s"__old_$g")) :+
         col(valueCol).as("__old_v") :+ lit(true).as("__in_base"): _*)
@@ -182,7 +162,7 @@ object ChangeHistory {
     // row-local explode, no second pass over the join
     def resolved(c: String, oldC: Column): Column =
       if (!hasUnchanged) col(c)
-      else when(array_contains(col(graft.cdc.Envelope.UnchangedCol), c) &&
+      else when(array_contains(col(UnchangedCol), c) &&
         col("__in_base").isNotNull, oldC).otherwise(col(c))
     val contribType = // shared struct shape so array() unifies; the
       // sign rides BOTH the row count and the value mass
@@ -204,25 +184,14 @@ object ChangeHistory {
       .agg(sum(col("__dn")).as("__ddn"),
         sum(when(col("__dv").isNotNull, col("__dn")).otherwise(0L)).as("__ddnv"),
         sum(coalesce(col("__dv"), lit(0).cast(sumType))).as("__ddv"))
-    // ---- merge into the existing view (null-safe group-key join: a
-    // NULL group key is a group like any other)
-    val prior = view match {
-      case Some(v) => v.crossJoin(broadcast(tmax)).filter(col("__tmax").isNull)
-        .drop("__tmax")
-      case None => spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(groupKeys.map(g => base.schema(g).copy(name = g)) ++
-          Seq(StructField("n_rows", LongType), StructField("n_val", LongType),
-            StructField("sum_val", sumType))))
-    }
-    val l = prior.alias("v"); val r2 = deltaView.alias("d")
-    val cond = groupKeys.map(g => col(s"v.$g") <=> col(s"d.$g")).reduce(_ && _)
-    l.join(r2, cond, "full_outer")
-      .select(groupKeys.map(g => coalesce(col(s"v.$g"), col(s"d.$g")).as(g)) ++ Seq(
+    val prior = batch.prune(view.getOrElse(emptyView(base, groupKeys,
+      StructField("n_rows", LongType), StructField("n_val", LongType),
+      StructField("sum_val", sumType))))
+    mergeByGroup(prior, deltaView, groupKeys,
         (coalesce(col("n_rows"), lit(0L)) + coalesce(col("__ddn"), lit(0L))).as("n_rows"),
         (coalesce(col("n_val"), lit(0L)) + coalesce(col("__ddnv"), lit(0L))).as("n_val"),
         (coalesce(col("sum_val"), lit(0).cast(sumType)) +
-          coalesce(col("__ddv"), lit(0).cast(sumType))).cast(sumType).as("sum_val")): _*)
+          coalesce(col("__ddv"), lit(0).cast(sumType))).cast(sumType).as("sum_val"))
       .filter(col("n_rows") > 0)
   }
 
@@ -234,8 +203,8 @@ object ChangeHistory {
     * untouched by the batch keep their rows verbatim (never read,
     * never recomputed); groups the batch touches — a touched key's OLD
     * group or its NEW one — recompute from the post-batch base through
-    * one semi join on the batch-sized affected-group list (broadcast
-    * under `broadcastKeyBound`; with the base partitioned/bucketed by
+    * one semi join on the batch-sized affected-group list (a
+    * [[keySide]]; with the base partitioned/bucketed by
     * the group key this prunes to the affected partitions at any
     * scale). `newBase` is the [[graft.cdc.Envelope.applyChanges]]
     * output for the SAME batch — the q143 caller pairing. The view
@@ -260,55 +229,24 @@ object ChangeHistory {
   def maintainMinMaxView(view: Option[DataFrame], base: DataFrame,
                          newBase: DataFrame, typedChanges: DataFrame,
                          rowKeys: Seq[String], groupKeys: Seq[String],
-                         valueCol: String,
-                         broadcastKeyBound: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = typedChanges.sparkSession
+                         valueCol: String): DataFrame = {
     val vType = newBase.schema(valueCol).dataType
-    // the applyChanges ordering/truncate discipline: past a TRUNCATE
-    // every pre-existing group is affected (the view resets); the
-    // truncate-or-not split rides the same broadcast watermark
-    val seqC = if (typedChanges.columns.contains("seq")) col("seq") else lit(0L)
-    val pos = struct(col("lsn"), seqC)
-    val tmax = typedChanges.agg(max(when(col("op") === "T", pos)).as("__tmax"))
-    val priorRaw = view.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(groupKeys.map(g => newBase.schema(g).copy(name = g)) ++
-        Seq(StructField("n_rows", LongType),
-          StructField("min_val", vType), StructField("max_val", vType)))))
-    val prior = priorRaw.crossJoin(broadcast(tmax))
-      .filter(col("__tmax").isNull).drop("__tmax")
-    val basePruned = base.crossJoin(broadcast(tmax))
-      .filter(col("__tmax").isNull).drop("__tmax")
-    val changes = typedChanges.crossJoin(broadcast(tmax))
-      .filter(col("op") =!= "T" && (col("__tmax").isNull || pos > col("__tmax")))
-      .drop("__tmax")
-    // affected ⊇ batch-carried NEW groups ∪ pre-batch groups of the
-    // touched keys (the departed side); TOAST-unchanged group columns
-    // contribute a harmless extra NULL-group recompute
-    val touchedKeys = changes.select(rowKeys.map(col): _*).distinct()
-    val batchGroups = changes.select(groupKeys.map(col): _*)
-    val keySide =
-      if (SizeDispatch.atMost(touchedKeys, broadcastKeyBound)) broadcast(touchedKeys)
-      else touchedKeys.hint("shuffle_hash")
-    val oldGroups = basePruned.join(keySide, rowKeys)
-      .select(groupKeys.map(col): _*)
-    val affected = batchGroups.unionByName(oldGroups).distinct()
-    val affSide =
-      if (SizeDispatch.atMost(affected, broadcastKeyBound)) broadcast(affected)
-      else affected.hint("shuffle_hash")
+    // past a TRUNCATE every pre-existing group is affected (the view
+    // resets)
+    val batch = new ApplyKernel(typedChanges)
+    val prior = batch.prune(view.getOrElse(emptyView(newBase, groupKeys,
+      StructField("n_rows", LongType),
+      StructField("min_val", vType), StructField("max_val", vType))))
+    // TOAST-unchanged group columns contribute a harmless extra
+    // NULL-group recompute
+    val affected = keySide(
+      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct())
     // recompute ONLY the affected groups from the post-batch base
-    val joinCond = (b: String) => groupKeys.map(g =>
-      col(s"$b.$g") <=> col(s"a.$g")).reduce(_ && _)
-    val recomputed = newBase.alias("b")
-      .join(affSide.alias("a"), joinCond("b"), "left_semi")
+    val recomputed = restrict(newBase, affected, groupKeys)
       .groupBy(groupKeys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"),
         min(col(valueCol)).as("min_val"), max(col(valueCol)).as("max_val"))
-    // untouched view rows pass through; affected rows are replaced
-    val kept = prior.alias("v")
-      .join(affSide.alias("a"), joinCond("v"), "left_anti")
-    kept.unionByName(recomputed)
+    replaceAffected(prior, affected, groupKeys, recomputed)
   }
 
   /** Incremental TOP-K view — the ranked generalization of
@@ -327,50 +265,23 @@ object ChangeHistory {
   def maintainTopKView(view: Option[DataFrame], base: DataFrame,
                        newBase: DataFrame, typedChanges: DataFrame,
                        rowKeys: Seq[String], groupKeys: Seq[String],
-                       orderCol: String, k: Int,
-                       broadcastKeyBound: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.types._
+                       orderCol: String, k: Int): DataFrame = {
     require(k > 0, s"maintainTopKView: k=$k")
-    val spark = typedChanges.sparkSession
-    val seqC = if (typedChanges.columns.contains("seq")) col("seq") else lit(0L)
-    val pos = struct(col("lsn"), seqC)
-    val tmax = typedChanges.agg(max(when(col("op") === "T", pos)).as("__tmax"))
-    val priorRaw = view.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(groupKeys.map(g => newBase.schema(g).copy(name = g)) ++
-        Seq(StructField("rank", IntegerType)) ++
+    val batch = new ApplyKernel(typedChanges)
+    val prior = batch.prune(view.getOrElse(emptyView(newBase, groupKeys,
+      (StructField("rank", IntegerType) +:
         rowKeys.map(rk => newBase.schema(rk).copy(name = rk)) :+
-        newBase.schema(orderCol).copy(name = orderCol))))
-    val prior = priorRaw.crossJoin(broadcast(tmax))
-      .filter(col("__tmax").isNull).drop("__tmax")
-    val basePruned = base.crossJoin(broadcast(tmax))
-      .filter(col("__tmax").isNull).drop("__tmax")
-    val changes = typedChanges.crossJoin(broadcast(tmax))
-      .filter(col("op") =!= "T" && (col("__tmax").isNull || pos > col("__tmax")))
-      .drop("__tmax")
-    val touchedKeys = changes.select(rowKeys.map(col): _*).distinct()
-    val keySide =
-      if (SizeDispatch.atMost(touchedKeys, broadcastKeyBound)) broadcast(touchedKeys)
-      else touchedKeys.hint("shuffle_hash")
-    val affected = changes.select(groupKeys.map(col): _*)
-      .unionByName(basePruned.join(keySide, rowKeys).select(groupKeys.map(col): _*))
-      .distinct()
-    val affSide =
-      if (SizeDispatch.atMost(affected, broadcastKeyBound)) broadcast(affected)
-      else affected.hint("shuffle_hash")
-    val joinCond = (b: String) => groupKeys.map(g =>
-      col(s"$b.$g") <=> col(s"a.$g")).reduce(_ && _)
+        newBase.schema(orderCol).copy(name = orderCol)): _*)))
+    val affected = keySide(
+      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct())
     val w = Window.partitionBy(groupKeys.map(col): _*)
       .orderBy(col(orderCol).desc +: rowKeys.map(col(_).asc): _*)
-    val recomputed = newBase.alias("b")
-      .join(affSide.alias("a"), joinCond("b"), "left_semi")
+    val recomputed = restrict(newBase, affected, groupKeys)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(groupKeys.map(col) ++ (col("rank") +: rowKeys.map(col)) :+
         col(orderCol): _*)
-    val kept = prior.alias("v")
-      .join(affSide.alias("a"), joinCond("v"), "left_anti")
-    kept.unionByName(recomputed)
+    replaceAffected(prior, affected, groupKeys, recomputed)
   }
 
   /** One side of a [[maintainJoinView]] maintenance step: the
@@ -403,61 +314,34 @@ object ChangeHistory {
     * construction). The maintained view EQUALS `newL ⋈ newR` after
     * every batch — the q146 oracle and JoinViewSpec assert it. */
   def maintainJoinView(view: Option[DataFrame], left: IvmSide, right: IvmSide,
-                       joinKeys: Seq[String],
-                       broadcastKeyBound: Long = 10000000L): DataFrame = {
+                       joinKeys: Seq[String]): DataFrame = {
     // the truncate probe is a DRIVER-side one-row aggregate per side —
     // the SizeDispatch cost class this verb already pays; folding it
     // into the plan instead would lazily full-scan newBase every batch
     // just in case a truncate happened. Only the BOOLEAN crosses to the
     // driver (the truncated/untouched split is control flow); the
-    // watermark VALUE stays columnar via the same broadcast crossJoin
-    // as the sibling verbs, so lsn/seq types never round-trip through
-    // Row accessors (ADVICE r15: getLong threw on non-Long lsn).
+    // watermark VALUE stays columnar in the kernel's broadcast
+    // crossJoin, so lsn/seq types never round-trip through Row
+    // accessors (ADVICE r15: getLong threw on non-Long lsn).
     def sidePieces(s: IvmSide): (DataFrame, Boolean) = {
-      val seqC = if (s.typedChanges.columns.contains("seq")) col("seq") else lit(0L)
-      val pos = struct(col("lsn"), seqC)
-      val tmax = s.typedChanges.agg(max(when(col("op") === "T", pos)).as("__tmax"))
-      val truncated = !tmax.head().isNullAt(0)
-      val changes = s.typedChanges.crossJoin(broadcast(tmax))
-        .filter(col("op") =!= "T" && (col("__tmax").isNull || pos > col("__tmax")))
-        .drop("__tmax")
+      val batch = new ApplyKernel(s.typedChanges)
+      val truncated = !batch.watermark.head().isNullAt(0)
+      // truncated: every pre-existing join row dies; every key of the
+      // side's new state recomputes
       val affected =
-        if (truncated)
-          // every pre-existing join row dies; every key of the side's
-          // new state recomputes
-          s.newBase.select(joinKeys.map(col): _*)
-        else {
-          val touched = changes.select(s.rowKeys.map(col): _*).distinct()
-          val keySide =
-            if (SizeDispatch.atMost(touched, broadcastKeyBound)) broadcast(touched)
-            else touched.hint("shuffle_hash")
-          val oldKeys = s.base.join(keySide, s.rowKeys)
-            .select(joinKeys.map(col): _*)
-          changes.select(joinKeys.map(col): _*).unionByName(oldKeys)
-        }
+        if (truncated) s.newBase.select(joinKeys.map(col): _*)
+        else affectedGroups(batch, s.base, s.rowKeys, joinKeys)
       (affected, truncated)
     }
     val (affL, truncL) = sidePieces(left)
     val (affR, truncR) = sidePieces(right)
-    val affected = affL.unionByName(affR).distinct()
-    val affSide =
-      if (SizeDispatch.atMost(affected, broadcastKeyBound)) broadcast(affected)
-      else affected.hint("shuffle_hash")
-    def restrict(df: DataFrame): DataFrame = {
-      val cond = joinKeys.map(k => df(k) <=> affSide(k)).reduce(_ && _)
-      df.join(affSide, cond, "left_semi")
-    }
-    val recomputed = restrict(left.newBase).join(restrict(right.newBase), joinKeys)
+    val affected = keySide(affL.unionByName(affR).distinct())
+    val recomputed = restrict(left.newBase, affected, joinKeys)
+      .join(restrict(right.newBase, affected, joinKeys), joinKeys)
     val prior = view.getOrElse(recomputed.limit(0))
-    // untouched rows pass through — unless a TRUNCATE on either side
-    // invalidated every pre-existing join row
-    val kept =
-      if (truncL || truncR) prior.limit(0)
-      else {
-        val keptCond = joinKeys.map(k => prior(k) <=> affSide(k)).reduce(_ && _)
-        prior.join(affSide, keptCond, "left_anti")
-      }
-    kept.unionByName(recomputed)
+    // a TRUNCATE on either side invalidates every pre-existing join row
+    replaceAffected(if (truncL || truncR) prior.limit(0) else prior,
+      affected, joinKeys, recomputed)
   }
 
   /** Incremental DISTINCT-COUNT view via persisted mergeable HLL
@@ -501,46 +385,31 @@ object ChangeHistory {
                            groupKeys: Seq[String], valueCol: String,
                            quantiles: Seq[(Double, String)],
                            relativeError: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.types._
     require(quantiles.nonEmpty, "maintainQuantileView: no quantiles requested")
-    val spark = typedChanges.sparkSession
     val delta = typedChanges
       .filter(col("op").isin("I", "U", "R") && col(valueCol).isNotNull)
       .groupBy(groupKeys.map(col): _*)
       .agg(QuantileSketch.sketchAgg(col(valueCol).cast("double"), relativeError)
         .as("__qs"))
-    val prior = view.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(groupKeys.map(g => typedChanges.schema(g).copy(name = g)) ++
-        (StructField("sketch", BinaryType) +: StructField("n_val", LongType) +:
-          quantiles.map { case (_, n) => StructField(n, DoubleType) }))))
-    val l = prior.alias("v"); val r = delta.alias("d")
-    val cond = groupKeys.map(g => col(s"v.$g") <=> col(s"d.$g")).reduce(_ && _)
+    val prior = view.getOrElse(emptyView(typedChanges, groupKeys,
+      (StructField("sketch", BinaryType) +: StructField("n_val", LongType) +:
+        quantiles.map { case (_, n) => StructField(n, DoubleType) }): _*))
     val merged = QuantileSketch.mergeSketches(col("sketch"), col("__qs"))
-    l.join(r, cond, "full_outer")
-      .select(groupKeys.map(g => coalesce(col(s"v.$g"), col(s"d.$g")).as(g)) ++
-        (merged.as("sketch") +: QuantileSketch.countOf(merged).as("n_val") +:
-          quantiles.map { case (q, n) =>
-            QuantileSketch.quantileOf(q)(merged).as(n)
-          }): _*)
+    mergeByGroup(prior, delta, groupKeys,
+      (merged.as("sketch") +: QuantileSketch.countOf(merged).as("n_val") +:
+        quantiles.map { case (q, n) => QuantileSketch.quantileOf(q)(merged).as(n) }): _*)
   }
 
   def maintainDistinctView(view: Option[DataFrame], typedChanges: DataFrame,
                            groupKeys: Seq[String], valueCol: String,
                            lgConfigK: Int = 12): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = typedChanges.sparkSession
     val delta = typedChanges
       .filter(col("op").isin("I", "U", "R") && col(valueCol).isNotNull)
       .groupBy(groupKeys.map(col): _*)
       .agg(hll_sketch_agg(col(valueCol), lit(lgConfigK)).as("__ds"))
       .filter(col("__ds").isNotNull)
-    val prior = view.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(groupKeys.map(g => typedChanges.schema(g).copy(name = g)) ++
-        Seq(StructField("sketch", BinaryType), StructField("uniques", LongType)))))
-    val l = prior.alias("v"); val r = delta.alias("d")
-    val cond = groupKeys.map(g => col(s"v.$g") <=> col(s"d.$g")).reduce(_ && _)
+    val prior = view.getOrElse(emptyView(typedChanges, groupKeys,
+      StructField("sketch", BinaryType), StructField("uniques", LongType)))
     // allowDifferentLgConfigK: a view resumed with a different lgConfigK
     // than its persisted sketches unions at the SMALLER lgK (slightly
     // higher rsd on those groups) instead of throwing mid-batch deep
@@ -549,9 +418,63 @@ object ChangeHistory {
     val merged = when(col("sketch").isNotNull && col("__ds").isNotNull,
         hll_union(col("sketch"), col("__ds"), allowDifferentLgConfigK = true))
       .otherwise(coalesce(col("sketch"), col("__ds")))
-    l.join(r, cond, "full_outer")
-      .select(groupKeys.map(g => coalesce(col(s"v.$g"), col(s"d.$g")).as(g)) ++ Seq(
-        merged.as("sketch"),
-        hll_sketch_estimate(merged).as("uniques")): _*)
+    mergeByGroup(prior, delta, groupKeys,
+      merged.as("sketch"), hll_sketch_estimate(merged).as("uniques"))
   }
+
+  /** Broadcast bound for [[keySide]]. */
+  private val KeySideBound = 10000000L
+
+  /** A batch-sized key side joined against state: broadcast under
+    * [[KeySideBound]] (exact shuffle-hash above it), so the state side
+    * does not shuffle. The size guard stays explicit: a streaming
+    * micro-batch reports no statistics, so the planner cannot choose the
+    * broadcast on its own. */
+  private def keySide(keys: DataFrame): DataFrame =
+    if (SizeDispatch.atMost(keys, KeySideBound)) broadcast(keys)
+    else keys.hint("shuffle_hash")
+
+  /** The empty view a first batch merges into: `groupKeys` typed as in
+    * `source`, then `fields`. */
+  private def emptyView(source: DataFrame, groupKeys: Seq[String],
+                        fields: StructField*): DataFrame =
+    source.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(groupKeys.map(g => source.schema(g).copy(name = g)) ++ fields))
+
+  /** Null-safe full-outer merge of a view with its per-group delta: a
+    * NULL group key is a group like any other. Group keys coalesce
+    * across the sides; `merged` projects the rest from the prior view's
+    * and the delta's columns. */
+  private def mergeByGroup(prior: DataFrame, delta: DataFrame, groupKeys: Seq[String],
+                           merged: Column*): DataFrame = {
+    prior.alias("v").join(delta.alias("d"), sameKeys("v", "d", groupKeys), "full_outer")
+      .select(groupKeys.map(g => coalesce(col(s"v.$g"), col(s"d.$g")).as(g)) ++ merged: _*)
+  }
+
+  /** The groups a batch may change: those its surviving changes carry
+    * (the arriving side) and those its touched keys held in `base` (the
+    * departing side — a replica-identity-DEFAULT DELETE and a
+    * group-moving UPDATE carry nothing else). Recomputing an unchanged
+    * group is value-idempotent, so this superset is safe. */
+  private def affectedGroups(batch: ApplyKernel, base: DataFrame, rowKeys: Seq[String],
+                             groupKeys: Seq[String]): DataFrame = {
+    val touched = batch.changes.select(rowKeys.map(col): _*).distinct()
+    batch.changes.select(groupKeys.map(col): _*).unionByName(
+      base.join(keySide(touched), rowKeys).select(groupKeys.map(col): _*))
+  }
+
+  /** The rows of `df` in the `affected` groups (null-safe semi join). */
+  private def restrict(df: DataFrame, affected: DataFrame, keys: Seq[String]): DataFrame =
+    df.alias("b").join(affected.alias("a"), sameKeys("b", "a", keys), "left_semi")
+
+  /** `prior` with its affected groups replaced: untouched rows pass
+    * through an anti join verbatim, `recomputed` supplies the rest. */
+  private def replaceAffected(prior: DataFrame, affected: DataFrame, keys: Seq[String],
+                              recomputed: DataFrame): DataFrame =
+    prior.alias("v").join(affected.alias("a"), sameKeys("v", "a", keys), "left_anti")
+      .unionByName(recomputed)
+
+  /** `l.k <=> r.k` over every key of two aliased sides: NULL keys match. */
+  private def sameKeys(l: String, r: String, keys: Seq[String]): Column =
+    keys.map(k => col(s"$l.$k") <=> col(s"$r.$k")).reduce(_ && _)
 }

@@ -353,18 +353,6 @@ object StreamingOps {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
 
-  /** CDC end-to-end: replay envelope stream → tx-atomic batches applied
-    * to an in-memory "current state" via foreachBatch (the consumer
-    * callback surface, `CdcConsumer.java:6-12` → SURVEY §1.4). Returns
-    * the started query; caller stops it. */
-  def applyChangesSink(envelope: DataFrame, checkpoint: String)(
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(onBatch)
-      .start()
-
   /** Streaming incremental ingest — the cross-corpus dedup pattern as a
     * sink: per micro-batch, documents that are near-dups of the standing
     * corpus are dropped (`Dedup.dedupAgainstCorpus`: the corpus streams
@@ -1222,7 +1210,7 @@ object StreamingOps {
     changes.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      .foreachBatch { (microBatch: DataFrame, id: Long) => withPinnedBatch(microBatch) { batch =>
         val spark = batch.sparkSession
         import graft.operators.ChangeHistory
         val merged = latestOpenSnapshot(spark, s"$storePath/open", beforeBatch = id)
@@ -1246,8 +1234,16 @@ object StreamingOps {
           pinned.filter(col("is_current")).write.mode("overwrite")
             .parquet(s"$storePath/open/$IngestBatchCol=$id")
         } finally pinned.unpersist()
-      }
+      }}
       .start()
+
+  /** Runs a CDC sink's batch body on the micro-batch persisted: the
+    * apply verbs read the batch in several jobs, and every read of an
+    * unpinned batch re-runs the source scan. */
+  private def withPinnedBatch(batch: DataFrame)(body: DataFrame => Unit): Unit = {
+    val pinned = batch.persist()
+    try body(pinned) finally pinned.unpersist()
+  }
 
   /** Streaming incremental aggregate-view maintenance — the live end
     * of q143's batch verb (the batch ↔ incremental ↔ streaming triple,
@@ -1279,7 +1275,7 @@ object StreamingOps {
     changes.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      .foreachBatch { (microBatch: DataFrame, id: Long) => withPinnedBatch(microBatch) { batch =>
         val spark = batch.sparkSession
         import graft.operators.ChangeHistory
         val meta = Set("op", "lsn", "seq", graft.cdc.Envelope.UnchangedCol)
@@ -1303,7 +1299,7 @@ object StreamingOps {
           .parquet(s"$storePath/base/$IngestBatchCol=$id")
         newView.coalesce(1).write.mode("overwrite")
           .parquet(s"$storePath/view/$IngestBatchCol=$id")
-      }
+      }}
       .start()
 
   /** Streaming incremental QUANTILE view — the sink for
