@@ -19,9 +19,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Small dimension tables that should always broadcast in joins. */
-  val broadcastable: Set[String] = Set("region", "nation")
-
   // Memoized per (session, dir, table): DataFrame plans are immutable, and
   // re-calling spark.read.parquet rebuilds the file index + re-reads the
   // footer schema on every query — measurable fixed overhead when dozens

@@ -140,16 +140,6 @@ object Envelope {
       element_at(col("columns"), "type_schema").as("type_schema"),
       element_at(col("columns"), "type_name").as("type_name"))
 
-  /** Typed view of the ORIGIN ('O') markers: (lsn, txid, origin_lsn,
-    * origin_name), in stream order — txid ties the marker to the
-    * transaction it tags, which is what a replication-loop guard
-    * filters on. */
-  def origins(envelope: DataFrame): DataFrame =
-    envelope.filter(col("op") === "O").select(
-      col("lsn"), col("txid"),
-      element_at(col("columns"), "origin_lsn").cast(LongType).as("origin_lsn"),
-      element_at(col("columns"), "origin_name").as("origin_name"))
-
   /** Cell accessor honoring the NULL-vs-UNCHANGED distinction: NULL when
     * the name is in `nulls` OR absent entirely (UNCHANGED surfaces as
     * NULL in the typed view; callers can inspect the envelope if they
@@ -226,25 +216,6 @@ object Envelope {
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(meta.columns.map(c =>
         StructField(c.name, sparkTypeFor(c.typeOid, c.typeMod)))))
-
-  /** Materialize EVERY relation of a decoded envelope in one call: per
-    * relation, [[typedView]] + [[applyChanges]] keyed by its
-    * replica-identity columns (RELATION column flag bit 1 — what the
-    * publisher actually keys U/D tuples by), falling back to the first
-    * column for replica identity DEFAULT on keyless tables. `current`
-    * supplies existing state per (schema, table) — the full relation
-    * identity, so same-named tables in different schemas never collide
-    * (absent tables start empty). Returns (schema, table) ->
-    * materialized state. The reference leaves this whole layer to
-    * consumers (`CdcConsumer.java:6-12`). */
-  def applyAll(envelope: DataFrame, metas: Seq[RelationMeta],
-               current: Map[(String, String), DataFrame] = Map.empty): Map[(String, String), DataFrame] =
-    metas.map { m =>
-      val identity = m.columns.filter(c => (c.flags & 1) != 0).map(_.name)
-      val keys = if (identity.nonEmpty) identity else Seq(m.columns.head.name)
-      val cur = current.getOrElse((m.schema, m.table), emptyFor(envelope.sparkSession, m))
-      (m.schema, m.table) -> applyChanges(cur, typedView(envelope, m), keys)
-    }.toMap
 
   /** The apply discipline shared by [[applyChanges]] and the incremental
     * view verbs of [[graft.operators.ChangeHistory]]: one batch of typed

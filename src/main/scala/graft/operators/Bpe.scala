@@ -182,22 +182,4 @@ object Bpe {
         round(col("chars").cast("double") / col("tokens"), 4))
       .orderBy("grp")
   }
-
-  import org.apache.spark.sql.SparkSession
-
-  /** Merge list as a DataFrame (rank, left, right) — the persistable
-    * tokenizer artifact. */
-  def mergesDf(spark: SparkSession, merges: Seq[Merge]): DataFrame = {
-    import spark.implicits._
-    merges.toDF("rank", "left", "right")
-  }
-
-  /** Persist the tokenizer artifact (kilobytes — one parquet file). */
-  def writeMerges(spark: SparkSession, merges: Seq[Merge], path: String): Unit =
-    mergesDf(spark, merges).coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Load a persisted tokenizer artifact in training order. */
-  def readMerges(spark: SparkSession, path: String): Seq[Merge] =
-    spark.read.parquet(path).orderBy("rank").collect()
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2))).toSeq
 }

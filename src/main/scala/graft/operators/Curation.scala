@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *    [[Storage]]) so the next stage and the manifest count read the
   *    pinned result instead of recomputing the prefix chain — the local
   *    analogue of the parquet write a cluster-scale pipeline puts
-  *    between stages (swap `pin` for a parquet round-trip via
-  *    [[Sinks]] to get exactly that).
+  *    between stages (swap `pin` for a parquet round-trip to get
+  *    exactly that).
   *  - **Per-row gates are filters, not joins.** Quality and repetition
   *    are pure row-local signals (r11 — `topBigramFrac` folds inside
   *    the row), so stages 1–2 are plain filters that ride the scan.
@@ -308,13 +308,6 @@ object Curation {
           .when(col("__ha") === col("__hb"), "unchanged")
           .otherwise("changed").as("status"))
   }
-
-  /** The release-notes rollup of [[snapshotDiff]]: status → count. */
-  def snapshotDiffSummary(before: DataFrame, after: DataFrame,
-                          key: String = "doc_id",
-                          textCol: String = "text"): DataFrame =
-    snapshotDiff(before, after, key, textCol)
-      .groupBy("status").agg(count(lit(1)).as("n")).orderBy("status")
 
   /** The per-increment gate prefix of [[curate]] for micro-batch /
     * incremental use: optional [[listGate]] blocklist FIRST, optional

@@ -129,14 +129,6 @@ object Dedup {
   private def materializedOnce(df: DataFrame): DataFrame =
     Storage.track(df.localCheckpoint(eager = true))
 
-  /** Deterministic release of operator-held storage — delegates to the
-    * shared [[Storage]] registry (which also covers Clustering's
-    * generations). NOTE the contract: a released locally-checkpointed
-    * plan becomes UNEXECUTABLE (lineage was truncated at checkpoint time,
-    * so the blocks cannot be rebuilt from source) — only call between
-    * queries, when no previously-returned result will run again. */
-  def releaseCheckpoints(): Unit = Storage.releaseAll()
-
   /** All intra-bucket pairs (a < b) from one inverted-index bucket —
     * sorted so pair order is deterministic regardless of collect_list's
     * arrival order. Emitting pairs by grouping the index produces each
@@ -557,45 +549,6 @@ object Dedup {
       .agg(collect_list(struct(col("doc_id"), col("sh_hi"), col("sh_lo"))).as("members"))
       .filter(size(col("members")) > 1)
       .select(explode(simPairsUdf(maxHamming)(col("members"))).as("pr"))
-      .select(col("pr._1").as("da"), col("pr._2").as("db"), col("pr._3").as("hamming"))
-      .distinct()
-      .orderBy("da", "db")
-  }
-
-  /** Hamming pairs over a 64-bit signature column — the [[simHashPairs]]
-    * pigeonhole specialized to 64 bits (4 x 16-bit chunks: a pair
-    * within Hamming 3 shares at least one intact chunk), for signature
-    * families that are natively 64-bit — e.g. image dHash
-    * (`Multimodal.imageHashes`). Same shape: zero-shuffle banding
-    * projection, ONE shuffle on (chunk, key), pairs born inside
-    * buckets with the Hamming test applied at birth. */
-  def hamming64Pairs(sigs: DataFrame, idCol: String = "doc_id",
-                     hashCol: String = "h", maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "4-chunk pigeonhole is only recall-exact for maxHamming <= 3")
-    val pairsUdf = udf { members: Seq[org.apache.spark.sql.Row] =>
-      val m = members.sortBy(_.getLong(0))
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var i = 0
-      while (i < m.length) {
-        var j = i + 1
-        while (j < m.length) {
-          val h = java.lang.Long.bitCount(m(i).getLong(1) ^ m(j).getLong(1))
-          if (h <= maxHamming) out += ((m(i).getLong(0), m(j).getLong(0), h.toLong))
-          j += 1
-        }
-        i += 1
-      }
-      out.toSeq
-    }
-    val base = sigs.select(col(idCol).as("__id"), col(hashCol).as("__h"))
-    val chunks = (0 until 4).map(c => struct(lit(c).as("chunk"),
-      shiftrightunsigned(col("__h"), 16 * c).bitwiseAND(0xFFFFL).as("key")))
-    base.select(col("__id"), col("__h"), explode(array(chunks: _*)).as("ck"))
-      .select(col("__id"), col("__h"), col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-      .groupBy("chunk", "key")
-      .agg(collect_list(struct(col("__id"), col("__h"))).as("members"))
-      .filter(size(col("members")) > 1)
-      .select(explode(pairsUdf(col("members"))).as("pr"))
       .select(col("pr._1").as("da"), col("pr._2").as("db"), col("pr._3").as("hamming"))
       .distinct()
       .orderBy("da", "db")

@@ -65,19 +65,6 @@ object Funnel {
         .otherwise(lit(null)).as("conv_s"))
   }
 
-  /** Funnel summary: users reaching AT LEAST each stage (the classic
-    * decreasing bar chart), from one [[funnelStages]] pass. */
-  def funnelSummary(events: DataFrame, steps: Seq[String],
-                    userCol: Column = col("user_id"),
-                    tsCol: Column = col("ts"),
-                    typeCol: Column = col("event_type")): DataFrame = {
-    val stages = funnelStages(events, steps, userCol, tsCol, typeCol)
-    val k = steps.size
-    val exprs = (1 to k).map(i =>
-      sum(when(col("stage") >= i, 1L).otherwise(0L)).as(s"ge_$i"))
-    stages.agg(exprs.head, exprs.tail: _*)
-  }
-
   private val WeekMicros = 604800000000L // 7 * 86400 * 1e6
 
   /** Cohort retention: users grouped by the epoch-week of their FIRST

@@ -130,14 +130,6 @@ object HeuristicRules {
   def gopherKeepCol(cfg: GopherConfig = GopherConfig()): Column =
     ruleCols(signalCols().toMap, cfg).map(_._2).reduce(_ && _)
 
-  /** [[gopherKeepCol]] over pre-staged lowered text / lowered token
-    * array / RAW line array — the staged form for multi-signal
-    * projections (q128): the battery reads the staged columns instead of
-    * re-lowering and re-splitting the text per rule. Bit-equal verdicts. */
-  def gopherKeepColFrom(t: Column, ws: Column, lines: Column,
-                        cfg: GopherConfig = GopherConfig()): Column =
-    ruleCols(signalColsFrom(t, ws, lines).toMap, cfg).map(_._2).reduce(_ && _)
-
   /** The battery verdict rebuilt over pre-counted INTEGER signals (the
     * attribute-sheet kernel, `TextAnalysis.attributeSignalsUdf`): the
     * fraction ASTs mirror [[signalColsFrom]] operand-for-operand

@@ -1,51 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Physical-layout operators for the 100 TB posture: bucketed co-located
-  * joins (kill the shuffle on repeated fact-fact joins) and salted joins
-  * (kill the straggler on skewed keys). Both are library surface — the
-  * reference has no physical layout at all (single stream, one thread,
-  * SURVEY.md §4.1), so these are where the Spark engine earns its scale.
+/** Z-order (Morton) layout: the aligned-quadrant clustering that store
+  * compaction ([[graft.streaming.StreamingOps.compactStore]]'s
+  * `clusterBy`) writes, so every compacted file spans a narrow
+  * rectangle of the two clustering dimensions and parquet min/max
+  * stats prune scans filtered on EITHER one. The reference has no
+  * physical layout at all (single stream, one thread, SURVEY.md §4.1).
   */
 object Layout {
-
-  /** Write a table bucketed+sorted by the join key. Bucketed scans expose
-    * `HashPartitioning(key, n)` so equi-joins and aggregations on the key
-    * plan with ZERO exchanges (verify: no ShuffleExchange in the plan).
-    * On a cluster this is the layout for fact tables that join repeatedly
-    * on the same key (orders⋈lineitem at every SF). */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-                    path: Option[String] = None): Unit = {
-    val w = df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-    path.fold(w)(p => w.option("path", s"$p/$table")).saveAsTable(table)
-  }
-
-  /** Equi-join two bucketed tables on their bucket key — planned as a
-    * SortMergeJoin over the co-located buckets, no exchange on either
-    * side. */
-  def coLocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                    key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-
-  /** Salted inner equi-join for skewed keys: the skewed (large) side gets
-    * a random salt in [0, saltFactor); the small side is replicated
-    * saltFactor times. The hot key's rows spread over saltFactor
-    * partitions instead of one straggler task. AQE's skew-join handles
-    * moderate skew automatically — explicit salting is for the pathological
-    * keys AQE can't split (single-key hot spots in the billions of rows).
-    * Semantics: exactly an inner equi-join on `key`. */
-  def saltedJoin(skewed: DataFrame, small: DataFrame, key: String,
-                 saltFactor: Int = 8): DataFrame = {
-    val salted = skewed.withColumn("__salt", (rand(seed = 7) * saltFactor).cast("int"))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Spread the low 16 bits of `x` to the even bit positions of a
     * 32-bit lane (the classic magic-constant bit dilation — public
@@ -70,12 +35,11 @@ object Layout {
   def zValue(a: Column, b: Column): Column =
     spreadBits16(a).bitwiseOR(shiftleft(spreadBits16(b), 1))
 
-  /** Write `df` Z-ordered on two (16-bit-bucketized) dimensions:
-    * range-partition by the interleaved value, sort within partitions,
-    * one file per range — every file then spans a narrow rectangle of
-    * (a, b) space, and parquet min/max stats prune scans filtered on
-    * EITHER dimension. The write is one range shuffle, same cost as
-    * any global sort.
+  /** Cluster `df` Z-ordered on two (16-bit-bucketized) dimensions:
+    * range-partition by the interleaved value and sort within
+    * partitions, so writing the result gives one file per range, each
+    * spanning a narrow rectangle of (a, b) space. The cost is one range
+    * shuffle, the same as any global sort.
     *
     * File cuts snap to ALIGNED Morton quadrants: the range key is the
     * z-value's top ceil(log2(files)) OCCUPIED bits, so a cut can only
@@ -92,15 +56,6 @@ object Layout {
     * note: a hot quadrant cannot split across files under aligned
     * cuts; for heavily skewed dimensions raise `files` (deeper, finer
     * quadrants) rather than relying on the sampler. */
-  def writeZOrdered(df: DataFrame, a: String, b: String, path: String,
-                    files: Int = 16): Unit =
-    zClustered(df, a, b, files).write.mode("overwrite").parquet(path)
-
-  /** The aligned-quadrant z-order clustering itself, factored so store
-    * compaction ([[graft.streaming.StreamingOps.compactStore]]'s
-    * `clusterBy`) reuses the EXACT cut discipline writeZOrdered ships
-    * (aligned Morton quadrants — see above; an independent
-    * reimplementation would re-introduce the straddling-file risk). */
   private[graft] def zClustered(df: DataFrame, a: String, b: String,
                                 files: Int): DataFrame = {
     val z = df.withColumn("__z", zValue(col(a), col(b)))

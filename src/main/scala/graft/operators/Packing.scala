@@ -238,20 +238,16 @@ object Packing {
     if (n >= 65536L) "g" else f"$n%04x"
   }
 
-  /** Stable hash sampling: keep a row iff the first 4 md5 hex digits of
-    * its key sort lexicographically below the cutoff. md5 is
-    * bytewise-identical across engines and platforms and fixed-width
-    * lowercase-hex prefixes compare identically as strings, so the SAME
-    * rows are selected everywhere, forever — reproducible subsets
-    * without seeds, resumable across reruns, shardable. The predicate is
-    * a pure projection: at 100 TB it rides the scan with zero shuffle. */
-  def hashSampleCond(key: Column, pct: Double): Column =
-    substring(md5(key.cast("string")), 1, 4) < lit(pctCutoffHex(pct))
-
   /** Stratified stable sampling: per-stratum keep percentages (e.g.
     * up-sample a rare language, down-sample boilerplate-heavy sources).
-    * Strata absent from `rates` keep `defaultPct`. Cutoffs are literal
-    * hex strings baked into one codegen'd CASE — no join, no shuffle. */
+    * Strata absent from `rates` keep `defaultPct`. A row is kept iff
+    * the first 4 md5 hex digits of its key sort lexicographically below
+    * its stratum's cutoff. md5 is bytewise-identical across engines and
+    * platforms and fixed-width lowercase-hex prefixes compare
+    * identically as strings, so the SAME rows are selected everywhere,
+    * forever — reproducible subsets without seeds, resumable across
+    * reruns, shardable. Cutoffs are literal hex strings baked into one
+    * codegen'd CASE — no join, no shuffle. */
   def stratifiedHashSample(df: DataFrame, key: Column, stratum: Column,
                            rates: Map[String, Double],
                            defaultPct: Double = 100.0): DataFrame = {
@@ -294,8 +290,8 @@ object Packing {
   /** Deterministic train/val/test split assignment: label each row by
     * where its 16-bit md5 prefix falls among CUMULATIVE weight cutoffs
     * (train < c1, val in [c1,c2), ... last split takes the rest) — the
-    * same seedless primitive [[hashSampleCond]] keeps/drops by, so split
-    * membership is engine-portable and reproducible forever. `salt`
+    * same seedless primitive [[stratifiedHashSample]] keeps/drops by, so
+    * split membership is engine-portable and reproducible forever. `salt`
     * re-deals the assignment (a different eval fold) without touching
     * the weights.
     *
@@ -329,8 +325,8 @@ object Packing {
     * over a stable hash order — "a 60/30/10 web/code/books mix totalling
     * N tokens" as a reproducible, engine-portable selection. Per source,
     * documents are ordered by (md5(key), key) — the same seedless order
-    * [[hashSampleCond]] samples by — and a document is kept while the
-    * running token total BEFORE it is under the source's budget (so the
+    * [[stratifiedHashSample]] samples by — and a document is kept while
+    * the running token total BEFORE it is under the source's budget (so the
     * document that crosses the budget is the last one in, and a source
     * with fewer tokens than its budget is kept whole). Sources without a
     * budget entry are dropped: the mixture is exactly what was asked
@@ -401,20 +397,6 @@ object Packing {
       .withColumn("__mix_budget", budgetCol)
   }
 
-  /** [[temperatureMix]] denominated in TRAINED-BPE tokens (VERDICT r12
-    * missing #5): budgets and the per-source spend are measured in the
-    * token unit training actually consumes, not whitespace words —
-    * `Bpe.encode` is a pure projection (the merge list is driver
-    * metadata), so the only additional cost over the whitespace mix is
-    * the encode expression riding the scan. The encoded columns
-    * (`tokens`, `token_count`) are carried on the output. */
-  def temperatureMixBpe(docs: DataFrame, merges: Seq[Bpe.Merge],
-                        totalTokens: Long, alpha: Double,
-                        sourceCol: Column, key: Column,
-                        budgetGrain: Long = 50L): DataFrame =
-    temperatureMix(Bpe.encode(docs, merges), totalTokens, alpha,
-      sourceCol, col("token_count"), key, budgetGrain)
-
   /** Deterministic global training-order shuffle + fixed-size shard
     * assignment (r13): the post-curation step every training run needs —
     * a seeded, reproducible-forever random permutation of the corpus cut
@@ -437,11 +419,8 @@ object Packing {
       .withColumn("__h", md5(concat_ws(":", lit(salt), key.cast("string"))))
       .withColumn("__bkt", conv(substring(col("__h"), 1, 2), 16, 10).cast("int"))
     // 256-row bucket-count table; the cumulative window below runs over
-    // THAT aggregate (one tiny single-group exchange), never the corpus —
-    // the constant-valued, non-foldable partition key (pmod(__bkt,1)==0;
-    // EliminateWindowPartitions would fold a literal away) marks the
-    // boundedness without WindowExec's "No Partition Defined" warning (r19)
-    val wOff = Window.partitionBy(pmod(col("__bkt"), lit(1))).orderBy("__bkt")
+    // THAT aggregate (one tiny single-group exchange), never the corpus
+    val wOff = Window.partitionBy(Windows.singleGroupKey(col("__bkt"))).orderBy("__bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = base.groupBy("__bkt").agg(count(lit(1)).as("__n"))
       .withColumn("__off", coalesce(sum("__n").over(wOff), lit(0L)))

@@ -10,14 +10,13 @@ import org.apache.spark.sql.functions._
   *    One pass, codegen'd higher-order functions, broadcast probe; at
   *    100 TB this is a full scan (fine for one-off probes, wrong for
   *    high-QPS serving).
-  *  - `lshTopK`: random-hyperplane LSH. Vectors are bucketed by a b-bit
-  *    sign signature; a probe searches only its own bucket plus all
-  *    Hamming<=1 neighbor buckets (multiprobe). The bucket join is a hash
-  *    join on a short int key — candidate count ~ N * (b+1) / 2^b, which
-  *    at b=8 touches ~3.5% of the data, and the signature computation is
-  *    a shuffle-free projection. Recall is probabilistic; the ScalaTest
-  *    suite measures it against `cosineTopK` (IVF with learned centroids
-  *    is the next step up and shares this bucket-join shape).
+  *  - `ivfTopK` / `probeIvf`: IVF with learned (k-means) centroids. A
+  *    probe searches only its nearest centroid lists, so candidate count
+  *    follows the data's cluster structure; recall is probabilistic and
+  *    the q36_check_recall contract bounds it against `cosineTopK`.
+  *
+  * `hyperplanes`/`signature` (random-hyperplane sign LSH) serve the
+  * near-dup tier (`Dedup.embeddingNearDupPairsLsh`), not top-k retrieval.
   *
   * (No similarity surface exists in the reference; north-star addition
   * per BASELINE.json.)
@@ -1325,36 +1324,6 @@ object Similarity {
     val probe = broadcast(v.filter(col("vec_id") === probeId).select(col("e").as("pe")))
     v.join(broadcast(cand), "vec_id")
       .crossJoin(probe)
-      .select(col("vec_id"),
-        round(dot(col("e"), col("pe")) / (norm(col("e")) * norm(col("pe"))), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** LSH-bucketed approximate top-k: candidates share the probe's bucket
-    * or any Hamming<=1 neighbor bucket; exact cosine ranks candidates.
-    *
-    * Applicability: sign-LSH recalls HIGH-similarity neighbors (near-dup
-    * grade, cos >~ 0.8, where per-plane agreement is >~0.9). For
-    * moderate-similarity retrieval (cos 0.2-0.4 — e.g. nearest neighbors
-    * in a diffuse corpus) per-plane agreement is ~0.6 and recall collapses
-    * at any bucket width tight enough to prune; use `ivfTopK`, whose
-    * centroid lists follow the data's cluster structure, for that regime
-    * (measured: IVF recall 1.0 vs LSH 0.0-0.2 on the clustered test
-    * embeddings — the q36_check_recall contract pins the IVF path). */
-  def lshTopK(emb: DataFrame, probeId: Long, k: Int,
-              numPlanes: Int = 8, dim: Int = 64, seed: Long = 7L): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val v = asDouble(emb).withColumn("sig", signature(col("e"), planes))
-    val probeRow = v.filter(col("vec_id") === probeId)
-      .select(col("e").as("pe"), col("sig").as("psig"))
-    // multiprobe: the probe's signature and every 1-bit flip of it
-    val probeSigs = broadcast(
-      probeRow.select(col("pe"),
-        explode(array(col("psig") +: (0 until numPlanes)
-          .map(i => col("psig").bitwiseXOR(lit(1L << i))): _*)).as("sig")))
-    v.filter(col("vec_id") =!= probeId)
-      .join(probeSigs, "sig") // broadcast hash join on the bucket key
       .select(col("vec_id"),
         round(dot(col("e"), col("pe")) / (norm(col("e")) * norm(col("pe"))), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))

@@ -126,8 +126,6 @@ object SizeDispatch {
     n
   }
 
-  /** Test hook: entry count (not part of the operator surface). */
-  private[graft] def cacheSize: Int = cache.synchronized(cache.size())
   /** Test hook: does the memo hold an entry for exactly this
     * (plan, bound, tag)? Specs assert on keys THEY own instead of the
     * global entry count — other suites run concurrently in this JVM and

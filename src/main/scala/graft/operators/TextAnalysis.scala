@@ -229,10 +229,8 @@ object TextAnalysis {
       k.getField("_4").as("mixed"))
   }
 
-  /** Punctuation ratio: chars outside [a-z0-9 ] over total chars. */
-  def punctRatio(text: Column): Column = punctRatioFrom(lower(text))
-
-  /** [[punctRatio]] over pre-lowered text — the staged-input form for
+  /** Punctuation ratio over pre-lowered text: chars outside
+    * [a-z0-9 ] over total chars. This is the staged-input form for
     * plans that compute several signals per row (HOF lambdas are exempt
     * from Catalyst subexpression elimination, so a multi-signal
     * projection built on the text-taking forms re-lowers and re-splits
@@ -241,15 +239,14 @@ object TextAnalysis {
     * CollapseProject keeps separate exactly because the staged
     * expressions are non-cheap and multiply referenced — makes each
     * signal a cheap attribute consumer). The expression AST is
-    * operand-identical to the unstaged form, so values are bit-equal. */
+    * operand-identical to inlining `lower(text)`, so values are
+    * bit-equal. */
   def punctRatioFrom(lt: Column): Column =
     (length(lt) - length(regexp_replace(lt, "[^a-z0-9 ]", ""))).cast(DoubleType) /
       greatest(length(lt).cast(DoubleType), lit(1.0))
 
-  /** Stopword ratio over whitespace tokens (all languages' stopword sets). */
-  def stopwordRatio(text: Column): Column = stopwordRatioFrom(words(lower(text)))
-
-  /** [[stopwordRatio]] over a pre-split lowered token array. */
+  /** Stopword ratio over a pre-split lowered token array (all
+    * languages' stopword sets). */
   def stopwordRatioFrom(ws: Column): Column = {
     val all = StopWords.flatMap(_._2)
     stopHits(ws, all).cast(DoubleType) / greatest(size(ws), lit(1)).cast(DoubleType)
@@ -707,18 +704,6 @@ object TextAnalysis {
     "n_emails" -> size(regexp_extract_all(text, lit(EmailPattern), lit(0))).cast(LongType),
     "n_phones" -> size(regexp_extract_all(text, lit(PhonePattern), lit(0))).cast(LongType),
     "n_ips" -> size(regexp_extract_all(text, lit(Ipv4Pattern), lit(0))).cast(LongType))
-
-  /** Convenience: full per-document annotation (one codegen'd projection). */
-  def annotate(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs
-      .withColumn("ws_tokens", wsTokenCount(t))
-      .withColumn("bpe_tokens", bpeTokenCount(t))
-      .withColumn("pred_lang", langId(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("fp", bagFingerprint(t))
-      .withColumn("rhash", rollingHash(t))
-  }
 
   /** Exact 4-decimal view for order-independent averaging of scores. */
   def dec4(c: Column): Column = c.cast(DecimalType(14, 4))

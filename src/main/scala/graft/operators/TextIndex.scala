@@ -137,9 +137,6 @@ object TextIndex {
     (row.getAs[Int]("n_buckets"), analyzer, positions)
   }
 
-  private def nBucketsOf(spark: SparkSession, path: String): Int =
-    metaOf(spark, path)._1
-
   /** Bucket of one token, evaluated LOCALLY through the SAME Catalyst
     * expression the write path plans (`pmod(xxhash64(tok), n)`; seed 42
     * is `functions.xxhash64`'s seed): hash parity with [[perDoc]] is by
@@ -152,27 +149,6 @@ object TextIndex {
     val h = XxHash64(Seq(CatLit.create(tok, org.apache.spark.sql.types.StringType)), 42L)
       .eval(null).asInstanceOf[Long]
     (((h % nBuckets) + nBuckets) % nBuckets).toInt
-  }
-
-  /** Pin the bucket count for a PURE-STREAMING index (no offline
-    * build): idempotent — an existing meta sidecar wins, so replays
-    * and restarts can never re-shard the layout. The gate is a
-    * successfully READABLE meta, not mere directory existence (ADVICE
-    * r15): a crash mid-meta-write leaves the directory without a
-    * committed parquet footer, and gating on the dir would brick the
-    * index (every later ensureMeta a no-op, every nBucketsOf a read
-    * failure) — an unreadable meta is rewritten instead. */
-  def ensureMeta(spark: SparkSession, path: String, nBuckets: Int,
-                 analyzer: String = Analyzer.Simple): Unit = {
-    val readable =
-      try { nBucketsOf(spark, path); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!readable) {
-      import spark.implicits._
-      Seq((nBuckets, analyzer, "raw"))
-        .toDF("n_buckets", "analyzer", "positions").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/meta")
-    }
   }
 
   /** Incremental append: the batch writes ONLY its own partitions in

@@ -300,19 +300,4 @@ object Unigram {
         round(col("chars").cast("double") / col("tokens"), 4))
       .orderBy("grp")
   }
-
-  /** Persist / reload the artifact (piece, logprob) + maxPieceLen. */
-  def writeModel(spark: SparkSession, model: UnigramModel, path: String): Unit = {
-    import spark.implicits._
-    model.logProbs.toSeq.sortBy(_._1)
-      .map { case (p, lp) => (p, lp, model.maxPieceLen) }
-      .toDF("piece", "logprob", "max_piece_len")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def readModel(spark: SparkSession, path: String): UnigramModel = {
-    val rows = spark.read.parquet(path).collect()
-    UnigramModel(rows.map(r => r.getString(0) -> r.getDouble(1)).toMap,
-      rows.head.getInt(2))
-  }
 }

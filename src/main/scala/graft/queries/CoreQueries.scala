@@ -328,8 +328,7 @@ object CoreQueries {
 
   // ---------------------------------------------------------------- Q38
   /** Batch sessionization (gaps-and-islands): a new session starts after
-    * a >30-minute gap; classic LAG + running-sum window pair. The
-    * streaming twin is StreamingOps.sessionAgg (session_window). */
+    * a >30-minute gap; classic LAG + running-sum window pair. */
   def q38Sessionize(spark: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     // Gap in exact integer microseconds (epochMicros works on both

@@ -1,376 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Structured-Streaming operator surface over event/CDC streams: the
-  * reference's only streaming constructs are tx batching and ack
-  * (`CdcEngine.java:110-137`) — watermarks, windows, dedup, and custom
-  * state are the analytics-grade additions (SURVEY.md §2.B "Streaming").
+/** Structured-Streaming store surface: the `foreachBatch` sinks that
+  * persist a CDC or document stream into a batch-partitioned store
+  * (dedup corpus, SCD2, IVM view, curated corpus), the store's readers,
+  * compaction, expiry, stats and GC, and the windowed quality-drift
+  * monitor. The reference's only streaming constructs are tx batching
+  * and ack (`CdcEngine.java:110-137`).
   *
-  * All helpers take an un-terminated streaming DataFrame and return one,
-  * so tests drive them with the replay/memory sources and assert sink
-  * contents; watermark columns ride along for late-data handling.
+  * Each sink takes an un-terminated streaming DataFrame and returns the
+  * started query; each batch overwrites its own `__ingest_batch=<id>`
+  * partition, so a replayed batch is idempotent.
   */
 object StreamingOps {
-
-  /** Tumbling-window counts/sums with a watermark: append-mode safe.
-    * State per (window, key) is bounded by the watermark horizon. */
-  def tumblingAgg(events: DataFrame, tsCol: String, keyCol: String,
-                  window_ : String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_), col(keyCol))
-      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sv"))
-      .select(col("window.start").as("w"), col(keyCol), col("cnt"), col("sv"))
-
-  /** Sliding-window variant. */
-  def slidingAgg(events: DataFrame, tsCol: String, keyCol: String,
-                 window_ : String = "1 hour", slide: String = "15 minutes",
-                 watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_, slide), col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("w"), col(keyCol), col("cnt"))
-
-  /** Tumbling-window approximate distincts — HLL++ per (window, key),
-    * the streaming twin of q12: unique users/ids per window at a FIXED
-    * state size per group (the sketch registers), where an exact
-    * distinct would hold every id seen in the window. Append-mode safe
-    * under the watermark; rsd matches the batch q12 setting so the
-    * streaming and batch answers agree on the same slice. */
-  def tumblingDistinctAgg(events: DataFrame, tsCol: String, keyCol: String,
-                          distinctCol: String, window_ : String = "1 hour",
-                          watermark: String = "2 hours",
-                          rsd: Double = 0.05): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_), col(keyCol))
-      .agg(approx_count_distinct(col(distinctCol), rsd).as("approx_uniques"),
-        count(lit(1)).as("cnt"))
-      .select(col("window.start").as("w"), col(keyCol),
-        col("approx_uniques"), col("cnt"))
-
-  /** Session windows (gap-based) — Catalyst's native session_window. */
-  def sessionAgg(events: DataFrame, tsCol: String, keyCol: String,
-                 gap: String = "30 minutes", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("session_window.start").as("s"), col("session_window.end").as("e"),
-        col(keyCol), col("cnt"))
-
-  /** Watermarked streaming dedup — state bounded by the watermark (exact
-    * dedup within the horizon; pair with batch Dedup for the backfill). */
-  def dedupeByKey(events: DataFrame, tsCol: String, idCols: Seq[String],
-                  watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicates(idCols :+ tsCol)
-
-  final case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Custom keyed state via mapGroupsWithState: running per-user counters
-    * (the generalization of the reference's only state — the open-tx
-    * buffer, `CdcEngine.java:110-129`). Production deployments pass
-    * ProcessingTimeTimeout + state.setTimeoutDuration to expire idle
-    * keys; the default NoTimeout keeps test triggers quiescent. */
-  def runningUserTotals(events: Dataset[(Long, Double)],
-                        timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout())
-      : Dataset[UserRunning] = {
-    implicit val enc = Encoders.product[UserRunning]
-    events.groupByKey(_._1)(Encoders.scalaLong)
-      .mapGroupsWithState[UserRunning, UserRunning](timeout) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[UserRunning]) =>
-          val prev = state.getOption.getOrElse(UserRunning(user, 0L, 0.0))
-          val (n, v) = rows.foldLeft((prev.n_events, prev.total_value)) {
-            case ((cn, cv), (_, value)) => (cn + 1, cv + value)
-          }
-          val next = UserRunning(user, n, v)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Stream-stream inner join with an event-time interval: left events
-    * join right events of the same key within [0, maxDelay] after them.
-    * Watermarks on BOTH sides bound the join state (Spark drops buffered
-    * rows once the watermark passes the interval). */
-  def intervalJoin(left: DataFrame, right: DataFrame, key: String, tsL: String,
-                   tsR: String, maxDelay: String = "30 minutes",
-                   watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark(tsL, watermark)
-    val r = right.withWatermark(tsR, watermark)
-    l.join(r,
-      l(key) === r(key) &&
-        r(tsR) >= l(tsL) &&
-        r(tsR) <= l(tsL) + expr(s"INTERVAL $maxDelay"))
-      .drop(r(key))
-  }
-
-  final case class SessionOut(user_id: Long, n_events: Long, start_ts: Long, end_ts: Long)
-  // public: the state encoder's generated code must reach the accessors
-  final case class SessionState(n: Long, start: Long, last: Long)
-
-  /** Sessionization with flatMapGroupsWithState (SURVEY.md §7.1 M5):
-    * events accumulate per user; a session closes — and EMITS, the
-    * flatMap shape — either when a same-user event arrives past the gap,
-    * or when the WATERMARK passes last+gap (event-time timeout: closure
-    * is data-driven and replayable, no processing-time scheduling).
-    * The streaming twin of the batch gaps-and-islands q38. */
-  def sessionizeWithState(events: Dataset[(Long, java.sql.Timestamp)],
-                          gapSeconds: Long = 1800,
-                          watermark: String = "0 seconds"): Dataset[SessionOut] = {
-    implicit val outEnc = Encoders.product[SessionOut]
-    implicit val stEnc = Encoders.product[SessionState]
-    implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
-    events.toDF("user_id", "ts")
-      .withWatermark("ts", watermark)
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp)], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(user, s.n, s.start, s.last))
-          } else {
-            val ts = rows.map(_._2.getTime / 1000).toSeq.sorted
-            val closed = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            var cur = state.getOption
-            ts.foreach { t =>
-              cur = cur match {
-                case Some(s) if t - s.last <= gapSeconds =>
-                  Some(s.copy(n = s.n + 1, last = t))
-                case Some(s) => // gap exceeded: close and start fresh
-                  closed += SessionOut(user, s.n, s.start, s.last)
-                  Some(SessionState(1, t, t))
-                case None => Some(SessionState(1, t, t))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp((s.last + gapSeconds) * 1000)
-            }
-            closed.iterator
-          }
-      }
-  }
-
-  final case class FunnelHit(user_id: Long, stage: Int, at_us: Long,
-                             conv_s: Option[Long])
-  // public: the state encoder's generated code must reach the accessors
-  final case class FunnelProgress(stage: Int, firstT: Long, lastT: Long)
-
-  /** Live funnel tracking with flatMapGroupsWithState — the streaming
-    * twin of the batch greedy-earliest funnel (q75,
-    * [[graft.operators.Funnel.funnelStages]]): per-user state holds
-    * (stage reached, first/last witness micros); each batch's step
-    * events advance the stage greedily under the SAME rule (type matches
-    * the next step, strictly increasing timestamp) and every advancement
-    * EMITS a [[FunnelHit]] — `conv_s` is set on the final stage (whole
-    * seconds from the stage-1 witness, the batch formula). Non-step
-    * events are pruned before the shuffle, exactly like the batch scan
-    * filter.
-    *
-    * Ordering contract: events are time-sorted WITHIN a batch; across
-    * batches the greedy fold follows arrival order past the watermark,
-    * so a late event older than the accepted witness cannot
-    * retroactively advance a stage — identical to batch output whenever
-    * events arrive in watermark order (the spec pins parity on an
-    * in-order replay of the events table).
-    *
-    * State at 100 TB: one (int, long, long) per user seen in a step
-    * event — but on a forever-stream "users ever seen" grows without
-    * bound, so `expireAfterSeconds` (event-time timeout against the
-    * watermark) drops users idle past the horizon; an expired user
-    * re-entering simply restarts the funnel. 0 keeps state forever —
-    * only for bounded replays. */
-  def funnelWithState(events: Dataset[(Long, java.sql.Timestamp, String)],
-                      steps: Seq[String],
-                      watermark: String = "0 seconds",
-                      expireAfterSeconds: Long = 0L): Dataset[FunnelHit] = {
-    require(steps.nonEmpty, "funnelWithState: empty step list")
-    implicit val outEnc = Encoders.product[FunnelHit]
-    implicit val stEnc = Encoders.product[FunnelProgress]
-    implicit val inEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.STRING)
-    val timeout =
-      if (expireAfterSeconds > 0) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    // full-precision epoch micros (getTime alone truncates to millis);
-    // floorDiv: getNanos is non-negative, so pre-1970 fractional seconds
-    // must floor (not truncate) to match unix_micros and the batch ops
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.toDF("user_id", "ts", "event_type")
-      .withWatermark("ts", watermark)
-      .filter(col("event_type").isin(steps: _*))
-      .as[(Long, java.sql.Timestamp, String)]
-      .groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[FunnelProgress, FunnelHit](
-        OutputMode.Append, timeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, String)],
-         state: GroupState[FunnelProgress]) =>
-          if (state.hasTimedOut) {
-            state.remove() // abandoned funnel: emit nothing, free the slot
-            Iterator.empty
-          } else {
-            val evs = rows.map(r => (micros(r._2), r._3)).toArray.sortBy(_._1)
-            var st = state.getOption.getOrElse(FunnelProgress(0, 0L, Long.MinValue))
-            val out = scala.collection.mutable.ArrayBuffer.empty[FunnelHit]
-            evs.foreach { case (t, y) =>
-              if (st.stage < steps.size && y == steps(st.stage) && t > st.lastT) {
-                val first = if (st.stage == 0) t else st.firstT
-                st = FunnelProgress(st.stage + 1, first, t)
-                out += FunnelHit(user, st.stage, t,
-                  if (st.stage == steps.size) Some((t - first) / 1000000L)
-                  else None)
-              }
-            }
-            if (st.stage > 0) state.update(st)
-            if (expireAfterSeconds > 0 && st.stage > 0)
-              // clamp past the watermark: a late straggler's horizon may
-              // already be behind it, and Spark rejects a timeout at or
-              // before the current watermark
-              state.setTimeoutTimestamp(
-                math.max(st.lastT / 1000L + expireAfterSeconds * 1000L,
-                  state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  final case class RetentionHit(cohort_week: Long, week_offset: Long)
-  // public: the state encoder's generated code must reach the accessors
-  final case class CohortSeen(cohortWeek: Long, recentWeeks: Seq[Long])
-
-  /** Live cohort retention with flatMapGroupsWithState — the streaming
-    * twin of the batch grid (q76, [[graft.operators.Funnel.retention]]):
-    * a user's FIRST event pins their cohort week forever; each new
-    * (user, week) emits ONE [[RetentionHit]] increment, so a downstream
-    * `groupBy(cohort_week, week_offset).count()` (or any additive sink)
-    * reproduces exactly the batch grid's `n_users` — the operator ships
-    * increments, not running totals, which keeps it append-mode and
-    * sink-agnostic (counters, a key-value store, a parquet ledger).
-    * Week = floor(epoch_us / 7 days), the batch formula.
-    *
-    * State at 100 TB: cohortWeek is one long per user ever seen —
-    * irreducible if returning users must keep their cohort (expiring it
-    * would silently re-cohort them, corrupting every later cell) — plus
-    * the seen-week set PRUNED to the watermark horizon: a week whose
-    * whole span is older than the watermark can receive no further
-    * event, so its dedup entry is dead weight and is dropped. Bounded
-    * by horizon-weeks per user, not stream length. */
-  def retentionWithState(events: Dataset[(Long, java.sql.Timestamp)],
-                         watermark: String = "0 seconds"): Dataset[RetentionHit] = {
-    implicit val outEnc = Encoders.product[RetentionHit]
-    implicit val stEnc = Encoders.product[CohortSeen]
-    implicit val inEnc = Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
-    val weekMicros = 604800000000L
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.toDF("user_id", "ts")
-      .withWatermark("ts", watermark)
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[CohortSeen, RetentionHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, rows, state: GroupState[CohortSeen]) =>
-          val wks = rows.map(r => micros(r._2) / weekMicros).toArray.sorted
-          var st = state.getOption.getOrElse(CohortSeen(wks.head, Seq.empty))
-          val seen = scala.collection.mutable.Set(st.recentWeeks: _*)
-          val out = scala.collection.mutable.ArrayBuffer.empty[RetentionHit]
-          wks.foreach { wk =>
-            if (seen.add(wk)) out += RetentionHit(st.cohortWeek, wk - st.cohortWeek)
-          }
-          // prune dedup entries for weeks fully behind the watermark —
-          // no further event can land in them (the watermark filters
-          // older rows before this function runs)
-          val horizonWeek = state.getCurrentWatermarkMs() * 1000L / weekMicros
-          st = CohortSeen(st.cohortWeek,
-            seen.filter(_ >= horizonWeek).toSeq.sorted)
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  final case class TableStats(schema: String, table: String, net_rows: Long,
-                              n_insert: Long, n_update: Long, n_delete: Long)
-
-  /** Per-table live statistics over the CDC envelope via Spark 4's
-    * `transformWithState` (the successor of mapGroupsWithState:
-    * named/typed state cells, timers, TTL, RocksDB-backed). Maintains a
-    * net row count (+insert, -delete) and per-op totals per
-    * (schema, table) in a single ValueState cell; every micro-batch
-    * emits each touched table's updated stats (Update mode). The query
-    * must run with the RocksDB state-store provider —
-    * `transformWithStateSessionConfs` has the settings. */
-  class TableStatsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, String), (String, String, String), TableStats] {
-    @transient private var stats: org.apache.spark.sql.streaming.ValueState[TableStats] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      stats = getHandle.getValueState[TableStats]("stats", Encoders.product[TableStats],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: (String, String),
-                                 rows: Iterator[(String, String, String)],
-                                 timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[TableStats] = {
-      var s = if (stats.exists()) stats.get()
-      else TableStats(key._1, key._2, 0L, 0L, 0L, 0L)
-      rows.foreach { case (_, _, op) =>
-        op match {
-          case "I" => s = s.copy(net_rows = s.net_rows + 1, n_insert = s.n_insert + 1)
-          case "U" => s = s.copy(n_update = s.n_update + 1)
-          case "D" => s = s.copy(net_rows = s.net_rows - 1, n_delete = s.n_delete + 1)
-          case _ => ()
-        }
-      }
-      stats.update(s)
-      Iterator.single(s)
-    }
-  }
-
-  /** Session configs `transformWithState` requires (RocksDB provider —
-    * the HDFS-backed default store does not support the operator). */
-  val transformWithStateSessionConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-  /** envelope (op, schema, table, ...) → live per-table stats stream. */
-  def tableStats(envelope: DataFrame): Dataset[TableStats] = {
-    val spark = envelope.sparkSession
-    import spark.implicits._
-    envelope.selectExpr("schema", "table", "op").as[(String, String, String)]
-      .groupByKey(r => (r._1, r._2))
-      .transformWithState(new TableStatsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Streaming incremental ingest — the cross-corpus dedup pattern as a
-    * sink: per micro-batch, documents that are near-dups of the standing
-    * corpus are dropped (`Dedup.dedupAgainstCorpus`: the corpus streams
-    * through a broadcast probe and never self-pairs) and only the
-    * SURVIVORS reach `onBatch`, which is expected to append them to the
-    * corpus store — so the next batch dedups against the grown corpus.
-    * `corpus` is a thunk re-evaluated per batch for exactly that reason
-    * (pass a closure reading the store, not a captured DataFrame). */
-  def dedupedIngestSink(docs: DataFrame, corpus: () => DataFrame,
-                        checkpoint: String, threshold: Double = 0.5, n: Int = 3)(
-      onBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        onBatch(graft.operators.Dedup.dedupAgainstCorpus(corpus(), batch, threshold, n), id)
-      }
-      .start()
 
   /** The column the persistent corpus store partitions by: each
     * micro-batch's admitted survivors live in their own
@@ -1049,30 +694,6 @@ object StreamingOps {
       graft.operators.Manifests.gcSuperseded(path, IngestBatchCol)
     }
 
-  /** [[dedupedIngestSink]] with the survivor-persistence contract built
-    * in (VERDICT r8 missing #5): the corpus store is a parquet
-    * directory partitioned by micro-batch id, and each batch's admitted
-    * survivors are written by OVERWRITING its own `__ingest_batch=<id>`
-    * subdirectory — never appending to shared files. That makes the
-    * at-least-once foreachBatch contract effectively exactly-once:
-    *
-    *  - a crash between the dedup and the write, or between the write
-    *    and the checkpoint commit, replays the batch on restart with
-    *    the SAME batch id;
-    *  - the replayed dedup probes the corpus AS OF batches strictly
-    *    before it (`__ingest_batch < id` — partition-pruned), so the
-    *    batch's own half-written survivors never flag themselves as
-    *    corpus duplicates (which would silently admit zero rows and
-    *    wipe the partition on replay);
-    *  - the recomputed survivors are therefore identical, and the
-    *    overwrite of the batch's partition is idempotent — no
-    *    double-admit, no loss.
-    *
-    * At 100 TB the store is the standing corpus: the probe reads it
-    * once per batch through the broadcast inverted-index join (q60's
-    * asymmetry — the corpus never shuffles), and the per-batch
-    * partition layout keeps writes bounded by the increment. Compact
-    * old partitions offline if small-batch file counts accumulate. */
   /** Streaming corpus-quality drift monitor — the data-quality
     * dashboard a live ingest runs NEXT TO the gates (the gates decide
     * per document; this watches the DISTRIBUTION drift per source that
@@ -1142,6 +763,33 @@ object StreamingOps {
     * `readCorpusStore(spark, s"$store/_aliases")`. */
   val AliasesDir = "_aliases"
 
+  /** Streaming incremental ingest with cross-corpus dedup: per
+    * micro-batch, documents that are near-dups of the standing corpus
+    * are dropped (`Dedup.dedupAgainstCorpus`: the corpus streams
+    * through a broadcast probe and never self-pairs) and the survivors
+    * are persisted (VERDICT r8 missing #5): the corpus store is a parquet
+    * directory partitioned by micro-batch id, and each batch's admitted
+    * survivors are written by OVERWRITING its own `__ingest_batch=<id>`
+    * subdirectory — never appending to shared files. That makes the
+    * at-least-once foreachBatch contract effectively exactly-once:
+    *
+    *  - a crash between the dedup and the write, or between the write
+    *    and the checkpoint commit, replays the batch on restart with
+    *    the SAME batch id;
+    *  - the replayed dedup probes the corpus AS OF batches strictly
+    *    before it (`__ingest_batch < id` — partition-pruned), so the
+    *    batch's own half-written survivors never flag themselves as
+    *    corpus duplicates (which would silently admit zero rows and
+    *    wipe the partition on replay);
+    *  - the recomputed survivors are therefore identical, and the
+    *    overwrite of the batch's partition is idempotent — no
+    *    double-admit, no loss.
+    *
+    * At 100 TB the store is the standing corpus: the probe reads it
+    * once per batch through the broadcast inverted-index join (q60's
+    * asymmetry — the corpus never shuffles), and the per-batch
+    * partition layout keeps writes bounded by the increment. Compact
+    * old partitions offline if small-batch file counts accumulate. */
   def dedupedIngestToStore(docs: DataFrame, storePath: String, checkpoint: String,
                            threshold: Double = 0.5, n: Int = 3,
                            aliases: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
@@ -1300,55 +948,6 @@ object StreamingOps {
         newView.coalesce(1).write.mode("overwrite")
           .parquet(s"$storePath/view/$IngestBatchCol=$id")
       }}
-      .start()
-
-  /** Streaming incremental QUANTILE view — the sink for
-    * [[graft.operators.ChangeHistory.maintainQuantileView]] (r16). The
-    * quantile view is SELF-maintainable (insert-monotone GK sketches —
-    * no base table read), so the store is the `view/` snapshot area
-    * alone: each batch reads the newest committed snapshot strictly
-    * before it, folds in, and overwrites its own
-    * `view/__ingest_batch=id` — the ivmIngestToStore crash-replay
-    * contract with half the writes. Read with [[readIvmView]]; GC with
-    * [[gcIvmSnapshots]] (the absent `base/` area is a no-op). */
-  def quantileIngestToStore(changes: DataFrame, storePath: String,
-                            checkpoint: String, groupKeys: Seq[String],
-                            valueCol: String,
-                            quantiles: Seq[(Double, String)],
-                            relativeError: Double = 0.01): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val prevView = latestOpenSnapshot(spark, s"$storePath/view", beforeBatch = id)
-        invalidateAreaStats(s"$storePath/view", id) // see invalidateAreaStats
-        graft.operators.ChangeHistory.maintainQuantileView(prevView, batch,
-            groupKeys, valueCol, quantiles, relativeError)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$storePath/view/$IngestBatchCol=$id")
-      }
-      .start()
-
-  /** Streaming ingest into the persisted inverted text index — the
-    * text twin of the vector-ingest sink: each micro-batch of
-    * (doc_id, text) appends its postings and doclens under its OWN
-    * `__ingest_batch=id` partitions ([[graft.operators.TextIndex.append]]),
-    * so the at-least-once foreachBatch contract is idempotent by the
-    * store convention, and a search mid-stream is exact over whatever
-    * batches have landed. The bucket count pins at first batch
-    * (`ensureMeta` — an existing layout always wins, so restarts can
-    * never re-shard). Compact with [[graft.operators.TextIndex.compact]]
-    * at quiet moments; take down with `TextIndex.delete`. */
-  def textIndexIngest(docs: DataFrame, indexPath: String, checkpoint: String,
-                      nBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.TextIndex.ensureMeta(batch.sparkSession, indexPath, nBuckets)
-        graft.operators.TextIndex.append(batch, indexPath, id)
-      }
       .start()
 
   /** The latest maintained aggregate view of an [[ivmIngestToStore]]
@@ -1632,42 +1231,4 @@ object StreamingOps {
       }
       .start()
   }
-
-  /** Vector-side [[dedupedIngestToStore]] — the embedding ingest
-    * end-state: the standing corpus IS a persisted, GROWING IVF index
-    * (`Similarity.writeIvfIndex` base + `appendIvfBatch` increments).
-    * Per micro-batch:
-    *
-    *  1. re-open the index and restrict the assignment scan to batches
-    *     strictly before this one (`__ingest_batch < id` — partition-
-    *     pruned), so a replayed batch never probes its own half-written
-    *     rows;
-    *  2. `Dedup.dedupVectorsAgainstCorpus` drops vectors whose exact
-    *     cosine against any indexed vector in the probed lists reaches
-    *     `threshold` (the q64 contract);
-    *  3. survivors are assigned to the FIXED centroids and overwrite
-    *     the batch's own index partition (`appendIvfBatch`) — the same
-    *     idempotent-replay argument as the text store, so a crash at
-    *     any point between dedup and checkpoint commit neither
-    *     double-admits nor loses rows.
-    *
-    * Centroids never move; at 100 TB each batch costs one pruned probe
-    * of ~nProbe/nLists of the index plus a write bounded by the batch.
-    * Rebuild the index offline when drift degrades the recall gate. */
-  def dedupedVectorIngestToStore(vectors: DataFrame, indexPath: String, checkpoint: String,
-                                 threshold: Double = 0.95, nProbe: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import graft.operators.{Dedup, Similarity}
-        val spark = batch.sparkSession
-        val idx = Similarity.readIvfIndex(spark, indexPath)
-        val asOf = idx.copy(assigned = idx.assigned
-          .filter(org.apache.spark.sql.functions.col(Similarity.IngestBatchCol) < id))
-        val survivors = Dedup.dedupVectorsAgainstCorpus(asOf, batch, threshold, nProbe)
-        Similarity.appendIvfBatch(idx, survivors, indexPath, id)
-        () // foreachBatch wants Unit; the staleness report is the batch's to drop
-      }
-      .start()
 }

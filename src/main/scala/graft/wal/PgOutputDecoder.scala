@@ -136,9 +136,6 @@ object PgOutput {
     * dropped" seam stays explicit if a future protocol version adds
     * frames worth skipping. */
   val DroppedTypes: Set[Char] = Set.empty
-  val KnownTypes: Set[Char] =
-    Set('R', 'B', 'C', 'I', 'U', 'D', 'T', 'M', 'Y', 'O', 'S', 'E', 'c', 'A',
-      'b', 'P', 'K', 'r', 'p')
 }
 
 /** Stateful decoder: the relation registry makes it order-dependent

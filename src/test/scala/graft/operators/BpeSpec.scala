@@ -92,18 +92,6 @@ class BpeSpec extends SparkSpec {
     assert(got === Seq(("a", 6L, 6L, 1.0), ("b", 7L, 7L, 1.0)))
   }
 
-  test("tokenizer artifact round-trips through parquet") {
-    val docs = spark.read.parquet(s"$sfDirDocs/documents.parquet").limit(60)
-    val merges = Bpe.train(docs, numMerges = 4)
-    val dir = java.nio.file.Files.createTempDirectory("bpe-merges").toString
-    Bpe.writeMerges(spark, merges, dir)
-    val loaded = Bpe.readMerges(spark, dir)
-    assert(loaded === merges)
-    val a = Bpe.encode(docs, merges).agg(sum("token_count")).head().getLong(0)
-    val b = Bpe.encode(docs, loaded).agg(sum("token_count")).head().getLong(0)
-    assert(a === b)
-  }
-
   test("train is deterministic") {
     val docs = spark.read.parquet(s"$sfDirDocs/documents.parquet").limit(60)
     val a = Bpe.train(docs, numMerges = 4)

@@ -259,28 +259,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(PlanAudit.scalaUdfSites(Dedup.simHashPairs(docs, 3)) === 3)
   }
 
-  test("LSH ANN achieves high recall on planted near neighbors") {
-    import spark.implicits._
-    // 200 random unit-ish vectors + 10 planted neighbors of vector 0
-    val dim = 16
-    val rnd = new scala.util.Random(1)
-    def vec(): Array[Float] = Array.fill(dim)(rnd.nextGaussian().toFloat)
-    val base = vec()
-    val rows =
-      (0 until 200).map { i =>
-        val e = if (i == 0) base
-        else if (i <= 10) base.map(x => x + 0.1f * rnd.nextGaussian().toFloat) // cos ~ 0.98
-        else vec()
-        (i.toLong, e)
-      }
-    val df = rows.toDF("vec_id", "embedding")
-    val exactTop = Similarity.cosineTopK(df, 0L, 10).collect().map(_.getLong(0)).toSet
-    val annTop = Similarity.lshTopK(df, 0L, 10, numPlanes = 8, dim = dim).collect().map(_.getLong(0)).toSet
-    val recall = (annTop & exactTop).size.toDouble / 10
-    assert(exactTop === (1L to 10L).toSet, "planted neighbors should be the exact top-10")
-    assert(recall >= 0.8, s"LSH recall too low: $recall")
-  }
-
   test("IVF ANN achieves high recall on planted near neighbors") {
     import spark.implicits._
     val dim = 16

@@ -54,15 +54,6 @@ class FunnelSpec extends SparkSpec {
     assert(got === Map(1L -> ((3, Some(59L)))))
   }
 
-  test("funnelSummary counts users reaching at least each stage") {
-    val df = Seq(
-      (1L, ts(1), "view"), (1L, ts(2), "click"), (1L, ts(3), "purchase"),
-      (2L, ts(1), "view"), (2L, ts(2), "click"),
-      (3L, ts(1), "view")).toDF("user_id", "ts", "event_type")
-    val r = Funnel.funnelSummary(df, steps).head()
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((3L, 2L, 1L)))
-  }
-
   test("one shuffle: the fold runs in a single hash-aggregate exchange") {
     val df = Seq((1L, ts(1), "view")).toDF("user_id", "ts", "event_type")
     val plan = Funnel.funnelStages(df, steps).queryExecution.executedPlan.toString

@@ -1,39 +1,12 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 
-/** Layout operators: the assertions inspect the PHYSICAL plan — the
-  * point of bucketing is the absence of exchanges, not the row values. */
+/** Z-order layout: the interleave is bit-exact and the aligned-quadrant
+  * clustering prunes files on either dimension. */
 class LayoutSpec extends SparkSpec {
-
-  test("bucketed tables join and aggregate with zero shuffle exchanges") {
-    val wh = Files.createTempDirectory("wh").toString
-    // unique table names: the catalog is shared across suites and sbt
-    // runs suites in parallel — fixed names collide (flaky full runs)
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val (tOrders, tLineitem) = (s"b_orders_$tag", s"b_lineitem_$tag")
-    val orders = Tables.load(spark, sfDir, "orders")
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
-    try {
-      Layout.writeBucketed(orders.withColumnRenamed("o_orderkey", "okey"), tOrders, "okey", 4, Some(wh))
-      Layout.writeBucketed(lineitem.withColumnRenamed("l_orderkey", "okey"), tLineitem, "okey", 4, Some(wh))
-
-      val joined = Layout.coLocatedJoin(spark, tOrders, tLineitem, "okey")
-        .groupBy("okey").agg(count(lit(1)).as("n"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("ShuffleExchange"), s"expected exchange-free plan:\n$plan")
-      // and it is still correct
-      val viaShuffle = orders.join(lineitem, col("o_orderkey") === col("l_orderkey")).count()
-      assert(joined.agg(sum("n")).collect()(0).getLong(0) === viaShuffle)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $tOrders")
-      spark.sql(s"DROP TABLE IF EXISTS $tLineitem")
-    }
-  }
 
   test("zValue interleaves bits exactly (reference implementation parity)") {
     def spreadRef(x: Long): Long = {
@@ -65,7 +38,7 @@ class LayoutSpec extends SparkSpec {
     val grid = (for (a <- 0 until 256; b <- 0 until 256) yield (a.toLong, b.toLong))
       .toDF("a", "b").repartition(8)
     val zDir = java.nio.file.Files.createTempDirectory("zorder").toString
-    Layout.writeZOrdered(grid, "a", "b", zDir, files = 16)
+    Layout.zClustered(grid, "a", "b", files = 16).write.mode("overwrite").parquet(zDir)
     def fileRanges(dir: String): Seq[(Long, Long, Long, Long)] =
       new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
         val r = spark.read.parquet(f.getAbsolutePath)
@@ -91,18 +64,5 @@ class LayoutSpec extends SparkSpec {
     val aRanges = fileRanges(aDir)
     assert(hits(aRanges, 100, 110, onB = true) === aRanges.size,
       s"single-dim sort should leave b unprunable, got $aRanges")
-  }
-
-  test("salted join returns exactly the plain inner-join result") {
-    val lineitem = Tables.load(spark, sfDir, "lineitem").limit(2000)
-    val part = Tables.load(spark, sfDir, "part")
-      .select(col("p_partkey").as("l_partkey"), col("p_brand"))
-    val plain = lineitem.join(part, "l_partkey")
-      .groupBy("p_brand").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Layout.saltedJoin(lineitem, part, "l_partkey", saltFactor = 4)
-      .groupBy("p_brand").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted === plain)
   }
 }

@@ -72,25 +72,26 @@ class PackingSpec extends SparkSpec {
     assert(got === Set((0, 0L, 2L), (0, 3L, 1L), (1, 0L, 1L)))
   }
 
-  test("hashSampleCond: deterministic, repartition-invariant, ~pct of rows") {
+  test("stratifiedHashSample: deterministic and repartition-invariant") {
     val df = spark.range(0, 10000).select(col("id").as("doc_id"))
-    val kept1 = df.filter(Packing.hashSampleCond(col("doc_id"), 20.0))
-      .as[Long].collect().toSet
-    val kept2 = df.repartition(7).filter(Packing.hashSampleCond(col("doc_id"), 20.0))
-      .as[Long].collect().toSet
+    def sample(d: org.apache.spark.sql.DataFrame, pct: Double) =
+      Packing.stratifiedHashSample(d, col("doc_id"), lit("s"), rates = Map.empty,
+        defaultPct = pct).as[Long].collect().toSet
+    val kept1 = sample(df, 20.0)
+    val kept2 = sample(df.repartition(7), 20.0)
     assert(kept1 === kept2, "sampling must not depend on partitioning")
     assert(math.abs(kept1.size - 2000) < 200, s"~20% expected, got ${kept1.size}")
     // nested property: a 10% sample is a subset of the 20% sample
     // (cutoff monotonicity — what makes hash sampling resumable)
-    val kept10 = df.filter(Packing.hashSampleCond(col("doc_id"), 10.0))
-      .as[Long].collect().toSet
-    assert(kept10.subsetOf(kept1))
+    assert(sample(df, 10.0).subsetOf(kept1))
   }
 
   test("pctCutoffHex edge cases: 0% keeps nothing, 100% keeps everything") {
     val df = spark.range(0, 1000).select(col("id").as("doc_id"))
-    assert(df.filter(Packing.hashSampleCond(col("doc_id"), 0.0)).count() === 0L)
-    assert(df.filter(Packing.hashSampleCond(col("doc_id"), 100.0)).count() === 1000L)
+    def kept(pct: Double) = Packing.stratifiedHashSample(df, col("doc_id"), lit("s"),
+      rates = Map.empty, defaultPct = pct).count()
+    assert(kept(0.0) === 0L)
+    assert(kept(100.0) === 1000L)
   }
 
   test("stratifiedHashSample applies per-stratum rates") {

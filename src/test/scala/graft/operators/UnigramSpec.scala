@@ -62,19 +62,11 @@ class UnigramSpec extends SparkSpec {
     assert(enc === Map(1L -> 4L, 2L -> 2L))
   }
 
-  test("artifact round-trip; fertility sheet shape") {
+  test("fertility sheet shape") {
     val docs = Seq.tabulate(20)(i => (i.toLong, s"alpha beta src_${i % 2}"))
       .toDF("doc_id", "text")
     val (model, _) = Unigram.train(docs, vocabSize = 30, maxPieceLen = 3,
       seedSize = 64, emIters = 1)
-    val path = java.nio.file.Files.createTempDirectory("uni-model").toString
-    Unigram.writeModel(spark, model, path)
-    val back = Unigram.readModel(spark, path)
-    assert(back.maxPieceLen === model.maxPieceLen)
-    assert(back.logProbs.keySet === model.logProbs.keySet)
-    back.logProbs.foreach { case (p, lp) =>
-      assert(math.abs(lp - model.logProbs(p)) < 1e-12)
-    }
     val fert = Unigram.fertilityStats(docs, model, col("doc_id") % 2)
     val rows = fert.collect()
     assert(rows.length === 2)

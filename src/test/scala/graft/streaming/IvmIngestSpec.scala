@@ -95,34 +95,4 @@ class IvmIngestSpec extends SparkSpec {
     // reads still serve the surviving snapshot
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === before)
   }
-
-  test("quantileIngestToStore: insert-monotone sketches fold per batch; replay idempotent") {
-    val inDir = java.nio.file.Files.createTempDirectory("qv-in")
-    val store = java.nio.file.Files.createTempDirectory("qv-store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("qv-ck").toString
-    val t0 = System.currentTimeMillis() - 60000
-    writeInput(inDir, "0.json", t0, b0)
-    writeInput(inDir, "1.json", t0 + 30000, b1)
-    def run(): Unit = {
-      val changes = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(inDir.toString)
-      val q = StreamingOps.quantileIngestToStore(changes, store, ckpt,
-        groupKeys = Seq("g"), valueCol = "v", quantiles = Seq(0.5 -> "p50"))
-      q.processAllAvailable()
-      q.stop()
-    }
-    run()
-    def rows() = StreamingOps.readIvmView(spark, store).get
-      .select("g", "n_val", "p50")
-      .as[(String, Long, Double)].collect().sorted.toSeq
-    // insert-monotone: every I/U value ever seen contributes, deletes
-    // don't retract — a: 1,2,7 (p50=2); b: 3,10,4 (p50=4)
-    val got = rows()
-    assert(got === Seq(("a", 3L, 2.0), ("b", 3L, 4.0)))
-    // crash after batch-1 writes, before its commit: replay reproduces
-    assert(java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", "1")))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
-    run()
-    assert(rows() === got)
-  }
 }

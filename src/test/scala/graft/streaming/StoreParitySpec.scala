@@ -98,40 +98,6 @@ class StoreParitySpec extends SparkSpec {
     Seq(store, ckpt, tailCp).foreach(Manifests.rmTree)
   }
 
-  test("quantile stores share the view-snapshot tail (same layout, same offsets)") {
-    val inDir = java.nio.file.Files.createTempDirectory("parity-qin")
-    val store = tmp(); val ckpt = tmp(); val tailCp = tmp()
-    val t0 = System.currentTimeMillis() - 60000
-    writeInput(inDir, "0.json", t0,
-      (1L to 20L).map(i => ("I", i, i, i, "a", i.toDouble)))
-    writeInput(inDir, "1.json", t0 + 20000,
-      (21L to 40L).map(i => ("I", i, i, i, "a", i.toDouble)))
-    val changes = spark.readStream.schema(changeSchema)
-      .option("maxFilesPerTrigger", 1).json(inDir.toString)
-    val producer = StreamingOps.quantileIngestToStore(changes, store, ckpt,
-      groupKeys = Seq("g"), valueCol = "v",
-      quantiles = Seq((0.5, "p50")))
-    producer.processAllAvailable(); producer.stop()
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val q = spark.readStream.format("graft-store")
-      .option("layout", "ivm-view").load(store)
-      .writeStream.option("checkpointLocation", tailCp)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        seen.synchronized {
-          seen ++= df.select(col(bc).cast("long"), col("p50"))
-            .as[(Long, Double)].collect()
-        }
-        ()
-      }.start()
-    q.processAllAvailable(); q.stop()
-    // each committed quantile snapshot arrives once: p50 of 1..20 = 10
-    // (GK at 1% exact here), then of 1..40 = 20
-    assert(seen.sorted.toSeq.map(_._1) === Seq(0L, 1L), seen)
-    assert(math.abs(seen.sorted.toSeq.head._2 - 10.0) <= 1.0 &&
-      math.abs(seen.sorted.toSeq.last._2 - 20.0) <= 1.0, seen)
-    Seq(store, ckpt, tailCp).foreach(Manifests.rmTree)
-  }
-
   // --------------------------------------------------- scd2/ivm skipping
 
   /** An scd2-layout store by hand: closed history batches with

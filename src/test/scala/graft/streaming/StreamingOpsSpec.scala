@@ -1,111 +1,20 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 
-/** Streaming operator tests over MemoryStream (event-time semantics:
-  * watermarks, windows, dedup, custom state). */
+/** Streaming store sinks and monitors over file and MemoryStream sources
+  * (crash replay of the dedup store sink, the windowed quality monitor). */
 class StreamingOpsSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
-
-  private def runToCompletion(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.processAllAvailable(); q.stop()
-  }
-
-  test("tumbling window agg with watermark (append mode after watermark passes)") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val events = in.toDF().toDF("ts", "event_type", "value")
-    val out = StreamingOps.tumblingAgg(events, "ts", "event_type",
-      window_ = "10 minutes", watermark = "5 minutes")
-    val q = out.writeStream.format("memory").queryName("tumbling")
-      .outputMode(OutputMode.Append).start()
-    in.addData((ts(1), "click", 1.0), (ts(5), "click", 2.0), (ts(11), "view", 3.0))
-    q.processAllAvailable()
-    // advance watermark far enough to close the first two windows
-    in.addData((ts(59), "click", 4.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tumbling").collect()
-    val clickW0 = rows.find(r => r.getAs[String]("event_type") == "click"
-      && r.getAs[Timestamp]("w") == Timestamp.valueOf("2024-01-01 10:00:00"))
-    assert(clickW0.isDefined, s"rows: ${rows.mkString(",")}")
-    assert(clickW0.get.getAs[Long]("cnt") === 2L)
-    assert(clickW0.get.getAs[Double]("sv") === 3.0)
-  }
-
-  test("tumbling approx-distinct matches the exact uniques on a small window (HLL twin of q12)") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val events = in.toDF().toDF("ts", "event_type", "value")
-    val out = StreamingOps.tumblingDistinctAgg(events, "ts", "event_type", "value",
-      window_ = "10 minutes", watermark = "5 minutes")
-    val q = out.writeStream.format("memory").queryName("tumbling_hll")
-      .outputMode(OutputMode.Append).start()
-    // window 10:00: click values {1,2,1} -> 2 uniques; view {7} -> 1
-    in.addData((ts(1), "click", 1.0), (ts(3), "click", 2.0), (ts(5), "click", 1.0),
-      (ts(8), "view", 7.0))
-    q.processAllAvailable()
-    in.addData((ts(59), "click", 9.0)) // advance watermark, close the window
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tumbling_hll").collect()
-      .filter(_.getAs[Timestamp]("w") == Timestamp.valueOf("2024-01-01 10:00:00"))
-      .map(r => r.getAs[String]("event_type") ->
-        (r.getAs[Long]("approx_uniques"), r.getAs[Long]("cnt"))).toMap
-    // HLL at rsd=0.05 is exact at these cardinalities
-    assert(rows === Map("click" -> ((2L, 3L)), "view" -> ((1L, 1L))),
-      s"rows: $rows")
-  }
-
-  test("streaming dedupe drops exact duplicate events within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long, Double)]
-    val events = in.toDF().toDF("ts", "event_id", "value")
-    val out = StreamingOps.dedupeByKey(events, "ts", Seq("event_id"), "10 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup")
-      .outputMode(OutputMode.Append).start()
-    in.addData((ts(1), 1L, 1.0), (ts(1), 1L, 1.0), (ts(2), 2L, 2.0), (ts(1), 1L, 1.0))
-    runToCompletion(q)
-    assert(spark.table("dedup").count() === 2)
-  }
-
-  test("dedupedIngestSink: batches dedup against the GROWING corpus across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[(Long, String)]
-    val docs = in.toDF().toDF("doc_id", "text")
-    // corpus store the sink appends survivors to; the thunk re-reads it
-    var store = Seq((100L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val ckpt = java.nio.file.Files.createTempDirectory("ingest-ck").toString
-    val q = StreamingOps.dedupedIngestSink(docs, () => store, ckpt, threshold = 0.5) {
-      (survivors, _) =>
-        val s = survivors.collect() // test-sized; real sinks append to the store
-        if (s.nonEmpty)
-          store = store.unionByName(
-            spark.createDataFrame(java.util.Arrays.asList(s: _*), survivors.schema))
-    }
-    // batch 1: doc 1 near-dups the seeded corpus doc -> dropped; doc 2 admitted
-    in.addData((1L, "alpha beta gamma delta epsilon eta"),
-      (2L, "totally fresh words appear in this one"))
-    q.processAllAvailable()
-    assert(store.select("doc_id").as[Long].collect().sorted.toSeq === Seq(2L, 100L))
-    // batch 2: doc 3 near-dups the batch-1 SURVIVOR (now in the corpus) -> dropped
-    in.addData((3L, "totally fresh words appear in this two"),
-      (4L, "and another unrelated document body here"))
-    q.processAllAvailable()
-    q.stop()
-    assert(store.select("doc_id").as[Long].collect().sorted.toSeq === Seq(2L, 4L, 100L))
-  }
 
   test("dedupedIngestToStore: crash replay never double-admits or loses survivors") {
     import spark.implicits._
@@ -174,310 +83,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(!part1.exists)
     run()
     assert(storeRows() === expected)
-  }
-
-  test("dedupedVectorIngestToStore: growing IVF index, crash replay idempotent") {
-    import spark.implicits._
-    val dim = 16
-    val rnd = new scala.util.Random(23)
-    def vec() = Array.fill(dim)(rnd.nextGaussian().toFloat)
-    def near(b: Array[Float]) = b.map(x => x + 0.005f * rnd.nextGaussian().toFloat)
-    // base corpus: 5 bases + noise, indexed once
-    val bases = Seq.fill(5)(vec())
-    val corpus = (bases.zipWithIndex.map { case (b, i) => (i.toLong, b) } ++
-      (5 until 100).map(i => (i.toLong, vec()))).toDF("vec_id", "embedding")
-    val indexPath = java.nio.file.Files.createTempDirectory("ivf-ingest").toString
-    graft.operators.Similarity.writeIvfIndex(
-      graft.operators.Similarity.buildIvfIndex(corpus, nLists = 8), indexPath)
-    graft.operators.Storage.releaseAll()
-    // batch 0: 1000 near-dups base vector 0 (dropped), 1001 fresh (admitted)
-    // batch 1: 2000 near-dups the batch-0 SURVIVOR 1001 (dropped — proves
-    // the index grew), 2001 fresh (admitted)
-    val fresh1001 = vec()
-    val fresh2001 = vec()
-    val inDir = java.nio.file.Files.createTempDirectory("vec-in")
-    def writeInput(name: String, mtime: Long, rows: Seq[(Long, Array[Float])]): Unit = {
-      val lines = rows.map { case (id, e) =>
-        s"""{"vec_id":$id,"embedding":[${e.mkString(",")}]}"""
-      }
-      val f = inDir.resolve(name)
-      java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
-      assert(f.toFile.setLastModified(mtime))
-    }
-    val t0 = System.currentTimeMillis() - 60000
-    writeInput("0.json", t0, Seq((1000L, near(bases(0))), (1001L, fresh1001)))
-    writeInput("1.json", t0 + 30000, Seq((2000L, near(fresh1001)), (2001L, fresh2001)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    val ckpt = java.nio.file.Files.createTempDirectory("vec-ck").toString
-    def run(): Unit = {
-      val in = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(inDir.toString)
-      val q = StreamingOps.dedupedVectorIngestToStore(in, indexPath, ckpt,
-        threshold = 0.99, nProbe = 3)
-      q.processAllAvailable()
-      q.stop()
-    }
-    run()
-    import graft.operators.Similarity
-    def indexRows(): Seq[(Long, Long)] = Similarity.readIvfIndex(spark, indexPath)
-      .assigned.filter(col(Similarity.IngestBatchCol) >= 0L)
-      .select(col("vec_id"), col(Similarity.IngestBatchCol).cast("long"))
-      .as[(Long, Long)].collect().sorted.toSeq
-    val expected = Seq((1001L, 0L), (2001L, 1L))
-    assert(indexRows() === expected)
-    assert(Similarity.readIvfIndex(spark, indexPath).assigned.count() === 102L)
-
-    // crash after the batch-1 append but before its checkpoint commit
-    assert(java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", "1")))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
-    run()
-    assert(indexRows() === expected)
-    assert(Similarity.readIvfIndex(spark, indexPath).assigned.count() === 102L)
-
-    // the grown index serves probes: a near-dup of the batch-1 survivor
-    // is found by the vector cross-dup probe
-    val probeBatch = Seq((9000L, near(fresh2001))).toDF("vec_id", "embedding")
-    val hits = graft.operators.Dedup.crossDupVectors(
-      Similarity.readIvfIndex(spark, indexPath), probeBatch, threshold = 0.99, nProbe = 3)
-      .select("corpus_id").as[Long].collect().toSet
-    assert(hits.contains(2001L))
-  }
-
-  test("session window groups events by gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val events = in.toDF().toDF("ts", "user", "value")
-    val out = StreamingOps.sessionAgg(events, "ts", "user", gap = "5 minutes",
-      watermark = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append).start()
-    // two sessions for u1: (10:01,10:03) and (10:20); close them with a late tick
-    in.addData((ts(1), "u1", 1.0), (ts(3), "u1", 1.0), (ts(20), "u1", 1.0))
-    q.processAllAvailable()
-    in.addData((ts(59), "u2", 1.0))
-    runToCompletion(q)
-    val u1 = spark.table("sessions").filter(col("user") === "u1").collect()
-    assert(u1.length === 2, s"got: ${u1.mkString(",")}")
-    assert(u1.map(_.getAs[Long]("cnt")).sorted.toSeq === Seq(1L, 2L))
-  }
-
-  test("flatMapGroupsWithState sessionization: gap closure and watermark timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
-    val out = StreamingOps.sessionizeWithState(in.toDS(), gapSeconds = 1800)
-    val q = out.writeStream.format("memory").queryName("fmgws")
-      .outputMode(OutputMode.Append).start()
-    in.addData((1L, ts(1)), (1L, ts(3)), (2L, ts(2)))
-    q.processAllAvailable()
-    assert(spark.table("fmgws").count() === 0) // all sessions open
-    // 11:00 is >30min past user 1's last event: same-user gap closure AND
-    // the watermark advance times out user 2's idle session
-    in.addData((1L, Timestamp.valueOf("2024-01-01 11:00:00")))
-    q.processAllAvailable()
-    q.processAllAvailable() // timeout fires on the batch after the watermark moves
-    q.stop()
-    val rows = spark.table("fmgws").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"))).sorted
-    assert(rows.toSeq === Seq((1L, 2L), (2L, 1L)), s"got ${rows.mkString(",")}")
-  }
-
-  test("stream-stream interval join pairs events within the delay window") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val out = StreamingOps.intervalJoin(
-      clicks.toDF().toDF("user", "cts"), buys.toDF().toDF("user", "bts"),
-      "user", "cts", "bts", maxDelay = "30 minutes")
-    val q = out.writeStream.format("memory").queryName("ssj")
-      .outputMode(OutputMode.Append).start()
-    clicks.addData((1L, ts(0)), (2L, ts(0)))
-    buys.addData((1L, ts(20)), (2L, ts(59))) // u1 within 30min, u2 outside
-    runToCompletion(q)
-    val rows = spark.table("ssj").collect()
-    assert(rows.map(_.getAs[Long]("user")).toSeq === Seq(1L))
-  }
-
-  test("transformWithState tracks per-table CDC stats across batches (RocksDB state)") {
-    implicit val sqlCtx = spark.sqlContext
-    StreamingOps.transformWithStateSessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val in = MemoryStream[(String, String, String)]
-      val envelope = in.toDF().toDF("op", "schema", "table")
-      val out = StreamingOps.tableStats(envelope)
-      val ckpt = Files.createTempDirectory("ckpt-tws").toString
-      val q = out.writeStream.format("memory").queryName("tstats")
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update).start()
-      in.addData(("I", "public", "accounts"), ("I", "public", "accounts"),
-        ("I", "public", "orders"))
-      q.processAllAvailable()
-      // state survives into the next batch: update + delete land on top
-      in.addData(("U", "public", "accounts"), ("D", "public", "accounts"))
-      q.processAllAvailable()
-      q.stop()
-      val last = spark.table("tstats").collect()
-        .filter(_.getAs[String]("table") == "accounts")
-        .maxBy(r => r.getAs[Long]("n_insert") + r.getAs[Long]("n_update") +
-          r.getAs[Long]("n_delete"))
-      assert(last.getAs[Long]("net_rows") === 1L) // 2 inserts - 1 delete
-      assert(last.getAs[Long]("n_insert") === 2L)
-      assert(last.getAs[Long]("n_update") === 1L)
-      assert(last.getAs[Long]("n_delete") === 1L)
-      val orders = spark.table("tstats").collect()
-        .filter(_.getAs[String]("table") == "orders")
-      assert(orders.nonEmpty && orders.forall(_.getAs[Long]("net_rows") == 1L))
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("mapGroupsWithState keeps running totals across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Double)]
-    val out = StreamingOps.runningUserTotals(in.toDS())
-    val q = out.writeStream.format("memory").queryName("running")
-      .outputMode(OutputMode.Update).start()
-    in.addData((1L, 1.0), (1L, 2.0), (2L, 5.0))
-    q.processAllAvailable()
-    in.addData((1L, 4.0))
-    runToCompletion(q)
-    val last = spark.table("running").collect()
-      .filter(_.getAs[Long]("user_id") == 1L)
-      .maxBy(_.getAs[Long]("n_events"))
-    assert(last.getAs[Long]("n_events") === 3L)
-    assert(last.getAs[Double]("total_value") === 7.0)
-  }
-
-  test("streaming funnel advances greedily across batches and emits per transition") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val out = StreamingOps.funnelWithState(in.toDS(),
-      Seq("view", "click", "purchase"))
-    val q = out.writeStream.format("memory").queryName("sfunnel")
-      .outputMode(OutputMode.Append).start()
-    // batch 1: u1 view→click (two hits), noise pruned, u2 click-only (no
-    // view yet: cannot advance)
-    in.addData((1L, ts(1), "view"), (1L, ts(2), "error"),
-      (1L, ts(3), "click"), (2L, ts(2), "click"))
-    q.processAllAvailable()
-    val b1 = spark.table("sfunnel").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Int]("stage"))).sorted
-    assert(b1.toSeq === Seq((1L, 1), (1L, 2)), s"got ${b1.mkString(",")}")
-    // batch 2: u1 purchases (final stage, conv_s from the stage-1
-    // witness), u2 views (stage 1 only — the earlier click is spent)
-    in.addData((1L, ts(10), "purchase"), (2L, ts(5), "view"))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("sfunnel").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Int]("stage"),
-        Option(r.getAs[java.lang.Long]("conv_s")).map(_.longValue)))
-    val u1Final = all.find(x => x._1 == 1L && x._2 == 3).get
-    assert(u1Final._3 === Some(9L * 60L), "conv_s = purchase - first view")
-    assert(all.count(_._1 == 2L) === 1 && all.find(_._1 == 2L).get._2 === 1,
-      "u2's pre-view click must not count toward a later funnel")
-  }
-
-  test("streaming funnel expires idle users at the event-time horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val out = StreamingOps.funnelWithState(in.toDS(),
-      Seq("view", "click"), expireAfterSeconds = 600L)
-    val q = out.writeStream.format("memory").queryName("sfunnel_exp")
-      .outputMode(OutputMode.Append).start()
-    in.addData((1L, ts(1), "view")) // stage 1; horizon = 10:11
-    q.processAllAvailable()
-    // another user's event drives the watermark far past u1's horizon;
-    // the expiry fires on the following batch
-    in.addData((9L, Timestamp.valueOf("2024-01-01 12:00:00"), "view"))
-    q.processAllAvailable()
-    // u1 re-enters with a CLICK after expiry: the funnel restarted, so
-    // a click with no prior view in the new incarnation cannot advance
-    in.addData((1L, Timestamp.valueOf("2024-01-01 12:01:00"), "click"))
-    q.processAllAvailable()
-    q.stop()
-    val u1 = spark.table("sfunnel_exp").collect()
-      .filter(_.getAs[Long]("user_id") == 1L)
-      .map(r => r.getAs[Int]("stage"))
-    assert(u1.toSeq === Seq(1), s"post-expiry click must not reach stage 2: ${u1.mkString(",")}")
-  }
-
-  test("streaming retention emits one increment per new (user, week); cohort sticks") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp)]
-    val out = StreamingOps.retentionWithState(in.toDS())
-    val q = out.writeStream.format("memory").queryName("sret")
-      .outputMode(OutputMode.Append).start()
-    def t(d: String) = Timestamp.valueOf(d)
-    // u1 twice in week A (one increment), u2 once
-    in.addData((1L, t("2024-01-01 10:00:00")), (1L, t("2024-01-02 10:00:00")),
-      (2L, t("2024-01-03 10:00:00")))
-    q.processAllAvailable()
-    assert(spark.table("sret").count() === 2)
-    // next week: u1 returns (offset 1 for u1's cohort); u1 again same
-    // week (no new increment)
-    in.addData((1L, t("2024-01-09 10:00:00")), (1L, t("2024-01-10 10:00:00")))
-    q.processAllAvailable()
-    q.stop()
-    val cells = spark.table("sret").collect()
-      .map(r => (r.getAs[Long]("cohort_week"), r.getAs[Long]("week_offset")))
-      .groupBy(identity).map { case (k, v) => (k._2, v.length) }
-    assert(cells.toSet === Set((0L, 2), (1L, 1)),
-      s"offsets (0: both users, 1: u1's return): $cells")
-  }
-
-  test("streaming retention matches the batch grid on an in-order replay") {
-    implicit val sqlCtx = spark.sqlContext
-    val events = graft.Tables.load(spark, sfDir, "events")
-      .filter(col("user_id") < 40)
-    val batch = graft.operators.Funnel.retention(events).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    val ordered = events.select("user_id", "ts")
-      .orderBy("ts", "user_id").as[(Long, Timestamp)].collect()
-    val in = MemoryStream[(Long, Timestamp)]
-    val q = StreamingOps.retentionWithState(in.toDS())
-      .writeStream.format("memory").queryName("sret_par")
-      .outputMode(OutputMode.Append).start()
-    val (a, b) = ordered.splitAt(ordered.length / 2)
-    in.addData(a.toSeq); q.processAllAvailable()
-    in.addData(b.toSeq); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sret_par").collect()
-      .map(r => (r.getAs[Long]("cohort_week"), r.getAs[Long]("week_offset")))
-      .groupBy(identity).map { case (k, v) => (k, v.length.toLong) }
-    assert(streamed === batch)
-  }
-
-  test("streaming funnel matches the batch funnel on an in-order replay") {
-    implicit val sqlCtx = spark.sqlContext
-    val steps = Seq("view", "click", "purchase")
-    val events = graft.Tables.load(spark, sfDir, "events")
-      .filter(col("user_id") < 40)
-    val batch = graft.operators.Funnel
-      .funnelStages(events, steps).collect()
-      .map(r => (r.getLong(0), r.getInt(1),
-        Option(r.getAs[java.lang.Long]("conv_s")).map(_.longValue)))
-      .filter(_._2 > 0).sortBy(x => (x._1, x._2))
-    val ordered = events.select("user_id", "ts", "event_type")
-      .orderBy("ts", "user_id").as[(Long, Timestamp, String)].collect()
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val q = StreamingOps.funnelWithState(in.toDS(), steps)
-      .writeStream.format("memory").queryName("sfunnel_par")
-      .outputMode(OutputMode.Append).start()
-    // feed in two arrival-ordered chunks to exercise cross-batch state
-    val (a, b) = ordered.splitAt(ordered.length / 2)
-    in.addData(a.toSeq); q.processAllAvailable()
-    in.addData(b.toSeq); q.processAllAvailable()
-    q.stop()
-    // the stream emits one hit per transition: a user's DEEPEST hit is
-    // the batch operator's (stage, conv_s) row
-    val streamed = spark.table("sfunnel_par").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Int]("stage"),
-        Option(r.getAs[java.lang.Long]("conv_s")).map(_.longValue)))
-      .groupBy(_._1).map(_._2.maxBy(_._2)).toArray.sortBy(x => (x._1, x._2))
-    assert(streamed.toSeq === batch.toSeq)
   }
 
   test("qualityDriftMonitor: per-source drift surfaces in the windowed sheet") {

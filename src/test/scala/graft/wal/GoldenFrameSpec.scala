@@ -173,17 +173,12 @@ class GoldenFrameSpec extends SparkSpec {
     assert(rows(14).getAs[Long]("txid") === 2100L)
     assert(rows(16).getAs[Long]("txid") === 2400L)
 
-    // typed catalog views: the Y row maps the user-type OID to its name;
-    // the O row carries the origin node and its commit LSN
+    // typed catalog view: the Y row maps the user-type OID to its name
     val types = Envelope.types(env).collect()
     assert(types.length === 1)
     assert(types(0).getAs[Int]("type_oid") === 600001)
     assert(types(0).getAs[String]("type_schema") === "public")
     assert(types(0).getAs[String]("type_name") === "mood")
-    val origins = Envelope.origins(env).collect()
-    assert(origins.length === 1)
-    assert(origins(0).getAs[Long]("origin_lsn") === 0x01000000L)
-    assert(origins(0).getAs[String]("origin_name") === "origin_node_1")
 
     // message view: fence scoped to its txn, tick standalone
     val msgs = Envelope.messages(env).orderBy("lsn").collect()
@@ -225,24 +220,6 @@ class GoldenFrameSpec extends SparkSpec {
     assert(w2.getAs[java.math.BigDecimal]("price").toPlainString === "0.01")
     assert(w2.getAs[Seq[String]]("tags") === Seq.empty)
     assert(w2.getAs[String]("note") === null)
-
-    // applyAll: every registered relation materializes by its replica
-    // identity in one call — widgets/gadgets wiped by the truncate,
-    // blobs carries both rows
-    val d2 = new PgOutputDecoder
-    FrameFile.read(goldenBytes).foreach { case (_, b) =>
-      d2.decode(java.nio.ByteBuffer.wrap(b))
-    }
-    val states = Envelope.applyAll(env, d2.relations.values.toSeq)
-    assert(states.keySet === Set(("public", "widgets"), ("public", "gadgets"), ("public", "blobs")))
-    // widgets: truncated mid-stream, then the two committed-PREPARED
-    // inserts (10 via b..P..K, 12 via streamed 'p'..K) land after it;
-    // the rolled-back prepared insert (11) never materializes
-    assert(states(("public", "widgets")).select("id").as[Long].collect().sorted.toSeq ===
-      Seq(10L, 12L))
-    assert(states(("public", "gadgets")).count() === 0L)
-    assert(states(("public", "blobs")).select("id").as[Long].collect().sorted.toSeq ===
-      Seq(1L, 2L, 3L, 4L))
 
     // applyChanges conformance: the mid-stream truncate wipes the
     // earlier widgets; the later prepared-committed inserts survive it
