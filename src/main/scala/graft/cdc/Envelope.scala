@@ -225,26 +225,53 @@ object Envelope {
     * (lsn, seq) totally orders the batch: LSNs repeat across consecutive
     * pgoutput frames, and a strictly-lsn truncate watermark would drop a
     * post-truncate insert sharing the truncate frame's WAL position.
-    * Hand-built change sets without a seq column order by lsn alone. */
+    * Hand-built change sets without a seq column order by lsn alone.
+    *
+    * Building a kernel runs ONE global aggregate over the batch, read
+    * back to the driver: its row count and the position of its last
+    * TRUNCATE. Every later plan over the batch uses these values: the
+    * watermark is a literal filter, and [[rows]] bounds every key set
+    * the batch can touch, so a consumer picks its broadcast side
+    * without a size probe. A caller that applies several verbs to one
+    * batch builds one kernel and shares it. */
   private[graft] final class ApplyKernel(typedChanges: DataFrame) {
-    private val seqC = if (typedChanges.columns.contains("seq")) col("seq") else lit(0L)
-    private val pos = struct(col("lsn"), seqC) // structs compare lexicographically
+    private val hasSeq = typedChanges.columns.contains("seq")
+    private val seqC = if (hasSeq) col("seq") else lit(0L)
+    // structs compare lexicographically; named fields so the batch's
+    // position and the literal watermark have the same struct type
+    private val pos = struct(col("lsn").as("lsn"), seqC.as("seq"))
 
-    /** One row: the position of the batch's last TRUNCATE, null when the
-      * batch carries no 'T' marker — then [[prune]] and [[changes]] pass
-      * everything through. */
-    val watermark: DataFrame =
-      typedChanges.agg(max(when(col("op") === "T", pos)).as("__tmax"))
+    private val stats = typedChanges
+      .agg(count(lit(1)), max(when(col("op") === "T", pos)))
+      .head()
+
+    /** The batch's row count, TRUNCATE markers included: an upper bound
+      * on the keys, and so on the groups, that the batch touches. */
+    val rows: Long = stats.getLong(0)
+
+    /** True when the batch carries a TRUNCATE marker. */
+    val truncated: Boolean = !stats.isNullAt(1)
+
+    /** The last TRUNCATE's position as a literal of the batch's own
+      * lsn and seq types: the values cross to the driver as a Row and
+      * back, never through a typed accessor (ADVICE r15: `getLong`
+      * threw on a non-Long lsn). */
+    private def watermark: Column = {
+      val t = stats.getStruct(1)
+      val seqType = if (hasSeq) typedChanges.schema("seq").dataType else LongType
+      struct(lit(t.get(0)).cast(typedChanges.schema("lsn").dataType).as("lsn"),
+        lit(t.get(1)).cast(seqType).as("seq"))
+    }
 
     /** `state` as of the batch's start, seen through its TRUNCATE: empty
       * when the batch truncates, unchanged otherwise. */
     def prune(state: DataFrame): DataFrame =
-      state.crossJoin(broadcast(watermark)).filter(col("__tmax").isNull).drop("__tmax")
+      if (truncated) state.filter(lit(false)) else state
 
     /** The batch's changes strictly after its last TRUNCATE, markers dropped. */
-    val changes: DataFrame = typedChanges.crossJoin(broadcast(watermark))
-      .filter(col("op") =!= "T" && (col("__tmax").isNull || pos > col("__tmax")))
-      .drop("__tmax")
+    val changes: DataFrame =
+      if (truncated) typedChanges.filter(col("op") =!= "T" && pos > watermark)
+      else typedChanges
 
     /** The latest of [[changes]] per `keys`; same-lsn tiebreak D < I < U
       * deterministic. */
@@ -262,9 +289,9 @@ object Envelope {
     *    pre-existing `current` row is dropped and only changes with lsn
     *    STRICTLY AFTER the latest truncate survive to be applied — so a
     *    truncated table serves zero rows and post-truncate inserts
-    *    repopulate it. The truncate watermark is a one-row broadcast
-    *    aggregate over the (batch-sized) change set — no extra pass over
-    *    `current`;
+    *    repopulate it. The truncate watermark is a literal filter
+    *    resolved by the [[ApplyKernel]]'s one aggregate over the change
+    *    set — no extra pass over `current`;
     *  - per key, only the HIGHEST-lsn change wins (whole-batch dedup makes
     *    redelivered/overflow-flushed records idempotent — the reference's
     *    at-least-once duplicate-tolerance, SURVEY.md §7.3.1);
@@ -276,8 +303,13 @@ object Envelope {
     * One shuffle on the key for the window + one key-partitioned full-outer
     * join against current: at scale, `current` should be bucketed/
     * partitioned by the same keys so the join co-locates. */
-  def applyChanges(current: DataFrame, typedChanges: DataFrame, keys: Seq[String]): DataFrame = {
-    val batch = new ApplyKernel(typedChanges)
+  def applyChanges(current: DataFrame, typedChanges: DataFrame, keys: Seq[String]): DataFrame =
+    applyChanges(current, new ApplyKernel(typedChanges), keys)
+
+  /** [[applyChanges]] over a batch whose kernel the caller already built
+    * (the streaming sink shares one between this and its view verb). */
+  private[graft] def applyChanges(current: DataFrame, batch: ApplyKernel,
+                                  keys: Seq[String]): DataFrame = {
     val latest = batch.latest(keys)
     val hasUnchanged = latest.columns.contains(UnchangedCol)
     val dataCols = current.columns.toSeq

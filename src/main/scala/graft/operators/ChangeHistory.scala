@@ -87,7 +87,9 @@ object ChangeHistory {
     val firstChange = batch
       .select(key.as("key"), tsMicros.cast("long").as("__ts"))
       .groupBy("key").agg(min(col("__ts")).as("__close_us"))
-    val closed = current.join(keySide(firstChange), Seq("key"), "left")
+    // no ApplyKernel here, so no row count bounds the batch's keys for
+    // free: the size probe stays
+    val closed = current.join(keySide(firstChange, Long.MaxValue), Seq("key"), "left")
       .withColumn("valid_to_us",
         when(col("is_current") && col("__close_us").isNotNull, col("__close_us"))
           .otherwise(col("valid_to_us")))
@@ -139,21 +141,27 @@ object ChangeHistory {
     * group-cardinality — small by construction). */
   def maintainAggView(view: Option[DataFrame], base: DataFrame,
                       typedChanges: DataFrame, rowKeys: Seq[String],
-                      groupKeys: Seq[String], valueCol: String): DataFrame = {
+                      groupKeys: Seq[String], valueCol: String): DataFrame =
+    maintainAggView(view, base, new ApplyKernel(typedChanges), rowKeys, groupKeys, valueCol)
+
+  /** [[maintainAggView]] over a batch whose kernel the caller already
+    * built (the streaming sink shares one with its applyChanges). */
+  private[graft] def maintainAggView(view: Option[DataFrame], base: DataFrame,
+                                     batch: ApplyKernel, rowKeys: Seq[String],
+                                     groupKeys: Seq[String], valueCol: String): DataFrame = {
     val sumType: DataType = base.schema(valueCol).dataType match {
       case d: DecimalType => DecimalType(38, d.scale)
       case _: ByteType | _: ShortType | _: IntegerType | _: LongType => LongType
       case _ => DoubleType
     }
-    val batch = new ApplyKernel(typedChanges)
-    val hasUnchanged = typedChanges.columns.contains(UnchangedCol)
+    val hasUnchanged = batch.changes.columns.contains(UnchangedCol)
     val needed = rowKeys ++ (groupKeys :+ valueCol).filterNot(rowKeys.contains)
     val latest = batch.latest(rowKeys)
       .select((Seq(col("op")) ++ needed.map(col) ++
         (if (hasUnchanged) Seq(col(UnchangedCol)) else Nil)): _*)
     // pre-batch rows of the touched keys: the base never shuffles
     val touched = latest.select(rowKeys.map(col): _*)
-    val oldRows = batch.prune(base).join(keySide(touched), rowKeys)
+    val oldRows = batch.prune(base).join(keySide(touched, batch.rows), rowKeys)
       .select(rowKeys.map(col) ++
         groupKeys.map(g => col(g).as(s"__old_$g")) :+
         col(valueCol).as("__old_v") :+ lit(true).as("__in_base"): _*)
@@ -240,7 +248,8 @@ object ChangeHistory {
     // TOAST-unchanged group columns contribute a harmless extra
     // NULL-group recompute
     val affected = keySide(
-      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct())
+      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct(),
+      AffectedPerRow * batch.rows)
     // recompute ONLY the affected groups from the post-batch base
     val recomputed = restrict(newBase, affected, groupKeys)
       .groupBy(groupKeys.map(col): _*)
@@ -273,7 +282,8 @@ object ChangeHistory {
         rowKeys.map(rk => newBase.schema(rk).copy(name = rk)) :+
         newBase.schema(orderCol).copy(name = orderCol)): _*)))
     val affected = keySide(
-      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct())
+      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct(),
+      AffectedPerRow * batch.rows)
     val w = Window.partitionBy(groupKeys.map(col): _*)
       .orderBy(col(orderCol).desc +: rowKeys.map(col(_).asc): _*)
     val recomputed = restrict(newBase, affected, groupKeys)
@@ -306,8 +316,9 @@ object ChangeHistory {
     * states, each restricted by one broadcast semi join (bases
     * bucketed on the join key prune to the affected partitions at any
     * scale). A TRUNCATE on either side empties the pass-through and
-    * recomputes from that side's full new key set — all distributed,
-    * riding the same broadcast watermark as applyChanges.
+    * recomputes from that side's full new key set — all distributed;
+    * only the side's truncate flag, resolved by its [[ApplyKernel]],
+    * steers the plan.
     *
     * Non-join column names must be disjoint across the sides (the
     * natural-join shape — TPC-H-style prefixed schemas satisfy it by
@@ -315,27 +326,21 @@ object ChangeHistory {
     * every batch — the q146 oracle and JoinViewSpec assert it. */
   def maintainJoinView(view: Option[DataFrame], left: IvmSide, right: IvmSide,
                        joinKeys: Seq[String]): DataFrame = {
-    // the truncate probe is a DRIVER-side one-row aggregate per side —
-    // the SizeDispatch cost class this verb already pays; folding it
-    // into the plan instead would lazily full-scan newBase every batch
-    // just in case a truncate happened. Only the BOOLEAN crosses to the
-    // driver (the truncated/untouched split is control flow); the
-    // watermark VALUE stays columnar in the kernel's broadcast
-    // crossJoin, so lsn/seq types never round-trip through Row
-    // accessors (ADVICE r15: getLong threw on non-Long lsn).
-    def sidePieces(s: IvmSide): (DataFrame, Boolean) = {
+    // each side's kernel resolves, in its one driver job, whether the
+    // side truncates (control flow: the truncated/untouched split) and
+    // how many rows it carries (the affected-key bound)
+    def sidePieces(s: IvmSide): (DataFrame, Boolean, Long) = {
       val batch = new ApplyKernel(s.typedChanges)
-      val truncated = !batch.watermark.head().isNullAt(0)
       // truncated: every pre-existing join row dies; every key of the
-      // side's new state recomputes
-      val affected =
-        if (truncated) s.newBase.select(joinKeys.map(col): _*)
-        else affectedGroups(batch, s.base, s.rowKeys, joinKeys)
-      (affected, truncated)
+      // side's new state recomputes, so the batch no longer bounds them
+      if (batch.truncated) (s.newBase.select(joinKeys.map(col): _*), true, Long.MaxValue)
+      else (affectedGroups(batch, s.base, s.rowKeys, joinKeys), false,
+        AffectedPerRow * batch.rows)
     }
-    val (affL, truncL) = sidePieces(left)
-    val (affR, truncR) = sidePieces(right)
-    val affected = keySide(affL.unionByName(affR).distinct())
+    val (affL, truncL, boundL) = sidePieces(left)
+    val (affR, truncR, boundR) = sidePieces(right)
+    val bound = if (truncL || truncR) Long.MaxValue else boundL + boundR
+    val affected = keySide(affL.unionByName(affR).distinct(), bound)
     val recomputed = restrict(left.newBase, affected, joinKeys)
       .join(restrict(right.newBase, affected, joinKeys), joinKeys)
     val prior = view.getOrElse(recomputed.limit(0))
@@ -425,13 +430,20 @@ object ChangeHistory {
   /** Broadcast bound for [[keySide]]. */
   private val KeySideBound = 10000000L
 
+  /** Affected groups per batch row: a row's arriving group plus the
+    * group its key held before the batch. */
+  private val AffectedPerRow = 2L
+
   /** A batch-sized key side joined against state: broadcast under
     * [[KeySideBound]] (exact shuffle-hash above it), so the state side
     * does not shuffle. The size guard stays explicit: a streaming
     * micro-batch reports no statistics, so the planner cannot choose the
-    * broadcast on its own. */
-  private def keySide(keys: DataFrame): DataFrame =
-    if (SizeDispatch.atMost(keys, KeySideBound)) broadcast(keys)
+    * broadcast on its own. `atMostRows` is an upper bound on `keys`
+    * that the caller already holds (an [[ApplyKernel]]'s row count);
+    * when it is within [[KeySideBound]] no probe job runs, otherwise a
+    * bounded count decides. */
+  private def keySide(keys: DataFrame, atMostRows: Long): DataFrame =
+    if (atMostRows <= KeySideBound || SizeDispatch.atMost(keys, KeySideBound)) broadcast(keys)
     else keys.hint("shuffle_hash")
 
   /** The empty view a first batch merges into: `groupKeys` typed as in
@@ -460,7 +472,7 @@ object ChangeHistory {
                              groupKeys: Seq[String]): DataFrame = {
     val touched = batch.changes.select(rowKeys.map(col): _*).distinct()
     batch.changes.select(groupKeys.map(col): _*).unionByName(
-      base.join(keySide(touched), rowKeys).select(groupKeys.map(col): _*))
+      base.join(keySide(touched, batch.rows), rowKeys).select(groupKeys.map(col): _*))
   }
 
   /** The rows of `df` in the `affected` groups (null-safe semi join). */

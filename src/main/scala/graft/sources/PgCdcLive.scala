@@ -6,7 +6,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -340,7 +339,7 @@ class PgCdcLiveStream(source: ReplicationFrameSource,
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[LivePartition]
       new PartitionReader[InternalRow] {
-        private val serializer = ExpressionEncoder[ChangeRecord]().createSerializer()
+        private val serializer = PgCdcReplayTable.encoder.createSerializer()
         private val it = LiveDecode.decode(p.relationFrames, p.frames, p.openTxid)
         private var current: InternalRow = _
         override def next(): Boolean =

@@ -915,40 +915,83 @@ object StreamingOps {
     * the part this sink exists for — touches only batch-sized deltas
     * and group-sized merges either way.
     *
+    * Per batch, one [[graft.cdc.Envelope.ApplyKernel]] resolves the
+    * batch's row count and TRUNCATE watermark in one job and is shared
+    * by both verbs. An EMPTY batch runs neither verb: its base equals
+    * the newest base snapshot below it, which is what the next batch
+    * reads ("newest id < batch") and what the commit-aware GC rule
+    * keeps, so it lands no base snapshot; after the first landed view
+    * it lands a copy of the previous view snapshot, because view ids
+    * are the offsets of the graft-store `ivm-view` tail and must stay
+    * dense. Each area's snapshot schema is inferred
+    * on its first read in a run and then reused, so later batches run
+    * no footer-reading inference job. The sink's jobs carry the call
+    * sites `ivm kernel stats`, `ivm view read`, `ivm base read`,
+    * `ivm base write` and `ivm view write`.
+    *
     * `changes` carries op/lsn(/seq) plus the table's data columns (the
     * typedView layout); everything else is data. */
   def ivmIngestToStore(changes: DataFrame, storePath: String, checkpoint: String,
                        rowKeys: Seq[String], groupKeys: Seq[String],
-                       valueCol: String): org.apache.spark.sql.streaming.StreamingQuery =
+                       valueCol: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val schemas = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.types.StructType]
     changes.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (microBatch: DataFrame, id: Long) => withPinnedBatch(microBatch) { batch =>
         val spark = batch.sparkSession
         import graft.operators.ChangeHistory
-        val meta = Set("op", "lsn", "seq", graft.cdc.Envelope.UnchangedCol)
-        val dataCols = batch.columns.filterNot(meta).toSeq
-        val prevBase = latestOpenSnapshot(spark, s"$storePath/base", beforeBatch = id)
-          .getOrElse(batch.select(dataCols.map(col): _*).limit(0))
-        val prevView = latestOpenSnapshot(spark, s"$storePath/view", beforeBatch = id)
-        val newView = ChangeHistory.maintainAggView(prevView, prevBase, batch,
-          rowKeys, groupKeys, valueCol)
-        val newBase = graft.cdc.Envelope.applyChanges(prevBase, batch, rowKeys)
-        // base FIRST, view LAST (ADVICE r15): the two writes are not one
-        // atomic commit, and readers join view->base — a crash between
-        // them must leave a reader on an at-worst STALE view over a
-        // newer base (consistent-enough until the replay), never a new
-        // view over a base that does not yet contain its rows
+        def snapshot(area: String): Option[DataFrame] = namedJobs(spark, s"ivm $area read") {
+          latestOpenSnapshot(spark, s"$storePath/$area", beforeBatch = id, schemas.get(area))
+            .map { df => schemas(area) = df.schema; df }
+        }
         // invalidate-before-overwrite for the ivm skip tier (replay is
         // deterministic; defense in depth — see invalidateAreaStats)
-        invalidateAreaStats(s"$storePath/base", id)
-        invalidateAreaStats(s"$storePath/view", id)
-        newBase.write.mode("overwrite")
-          .parquet(s"$storePath/base/$IngestBatchCol=$id")
-        newView.coalesce(1).write.mode("overwrite")
-          .parquet(s"$storePath/view/$IngestBatchCol=$id")
+        def land(area: String, df: DataFrame): Unit = {
+          invalidateAreaStats(s"$storePath/$area", id)
+          namedJobs(spark, s"ivm $area write") {
+            df.write.mode("overwrite").parquet(s"$storePath/$area/$IngestBatchCol=$id")
+          }
+        }
+        val kernel = namedJobs(spark, "ivm kernel stats")(new graft.cdc.Envelope.ApplyKernel(batch))
+        val prevView = snapshot("view")
+        if (kernel.rows > 0) {
+          val meta = Set("op", "lsn", "seq", graft.cdc.Envelope.UnchangedCol)
+          val dataCols = batch.columns.filterNot(meta).toSeq
+          val prevBase = snapshot("base").getOrElse(batch.select(dataCols.map(col): _*).limit(0))
+          val newView = ChangeHistory.maintainAggView(prevView, prevBase, kernel,
+            rowKeys, groupKeys, valueCol)
+          // base FIRST, view LAST (ADVICE r15): the two writes are not one
+          // atomic commit, and readers join view->base — a crash between
+          // them must leave a reader on an at-worst STALE view over a
+          // newer base (consistent-enough until the replay), never a new
+          // view over a base that does not yet contain its rows
+          land("base", graft.cdc.Envelope.applyChanges(prevBase, kernel, rowKeys))
+          land("view", newView.coalesce(1))
+        } else prevView.foreach { view =>
+          // an empty batch runs neither verb and lands no base snapshot;
+          // once a view has landed it lands a copy of the previous one,
+          // so view ids — the ivm-view tail's offsets — stay dense (the
+          // tail starts at the oldest landed id, so a fresh store's
+          // leading empty batches need none)
+          land("view", view.coalesce(1))
+        }
       }}
       .start()
+  }
+
+  /** Runs `body` with the Spark jobs it starts reporting `name` as their
+    * call site, so a listener or an event log attributes them to it;
+    * the caller's call site is restored afterwards. The keys are the
+    * thread-local properties `SparkContext.setCallSite` writes; AQE
+    * carries them to the threads that submit its stage jobs. */
+  private def namedJobs[T](spark: org.apache.spark.sql.SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    val prev = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, name))
+    try body finally keys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 
   /** The latest maintained aggregate view of an [[ivmIngestToStore]]
     * store (None before the first batch). Group-cardinality — a
@@ -972,17 +1015,21 @@ object StreamingOps {
       gcSnapshotDir(s"$storePath/view", checkpoint)
 
   /** The newest committed open-set snapshot strictly before
-    * `beforeBatch` — the as-of read a crash-replayed batch needs. */
+    * `beforeBatch` — the as-of read a crash-replayed batch needs. With
+    * `schema`, the read skips parquet's schema-inference job. */
   private def latestOpenSnapshot(spark: org.apache.spark.sql.SparkSession,
                                  openPath: String,
-                                 beforeBatch: Long): Option[DataFrame] = {
+                                 beforeBatch: Long,
+                                 schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] = {
     import graft.operators.Fs
     Fs.listDirNames(Fs.path(openPath))
       .filter(_.startsWith(s"$IngestBatchCol="))
       .flatMap(_.stripPrefix(s"$IngestBatchCol=").toLongOption)
       .filter(_ < beforeBatch)
       .maxOption
-      .map(b => spark.read.parquet(s"$openPath/$IngestBatchCol=$b"))
+      .map(b => schema.fold(spark.read)(spark.read.schema)
+        .parquet(s"$openPath/$IngestBatchCol=$b"))
   }
 
   /** Read a [[scd2IngestToStore]] history: every closed version ever

@@ -95,4 +95,64 @@ class IvmIngestSpec extends SparkSpec {
     // reads still serve the surviving snapshot
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === before)
   }
+
+  test("an empty batch lands no base and a copy of the view; replay and GC across it stay commit-aware") {
+    val inDir = java.nio.file.Files.createTempDirectory("ivm-in")
+    val store = java.nio.file.Files.createTempDirectory("ivm-store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ivm-ck").toString
+    val t0 = System.currentTimeMillis() - 60000
+    writeInput(inDir, "0.json", t0, b0)
+    writeInput(inDir, "1.json", t0 + 10000, Nil) // batch 1: no rows
+    writeInput(inDir, "2.json", t0 + 20000, b1)
+
+    def run(): Unit = {
+      val changes = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).json(inDir.toString)
+      val q = StreamingOps.ivmIngestToStore(changes, store, ckpt,
+        rowKeys = Seq("k"), groupKeys = Seq("g"), valueCol = "v")
+      q.processAllAvailable()
+      q.stop()
+    }
+    def snapshots(area: String): Seq[String] =
+      graft.operators.Fs.listDirNames(graft.operators.Fs.path(s"$store/$area"))
+        .filter(_.startsWith(s"${StreamingOps.IngestBatchCol}=")).sorted
+    def ids(bs: Int*): Seq[String] = bs.map(b => s"${StreamingOps.IngestBatchCol}=$b")
+    def viewAt(b: Int) = viewRows(spark.read.parquet(s"$store/view/${ids(b).head}"))
+    def baseRows = StreamingOps.readIvmBase(spark, store).get
+      .select("k", "g", "v").as[(Long, String, Double)].collect().toSeq.sorted
+    val wantView = Seq(("a", 1L, 1L, 7.0), ("b", 2L, 2L, 14.0))
+    val wantBase = Seq((1L, "b", 10.0), (3L, "b", 4.0), (4L, "a", 7.0))
+    def commit(id: Int) = java.nio.file.Paths.get(ckpt, "commits", id.toString)
+    run()
+    assert(java.nio.file.Files.exists(commit(2)), "three batches ran")
+
+    // the empty batch left the base alone and copied the view forward
+    assert(snapshots("base") === ids(0, 2))
+    assert(snapshots("view") === ids(0, 1, 2))
+    assert(viewAt(1) === viewAt(0))
+    assert(viewAt(0) === Seq(("a", 2L, 2L, 3.0), ("b", 1L, 1L, 3.0)))
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
+    assert(baseRows === wantBase)
+
+    // crash after batch 2's writes, before its commit: the last committed
+    // batch is the empty one — GC keeps base 0 (the newest at or below
+    // batch 1), view 1, and the uncommitted 2 in each area
+    assert(java.nio.file.Files.deleteIfExists(commit(2)))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".2.crc"))
+    assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 1)
+    assert(snapshots("base") === ids(0, 2))
+    assert(snapshots("view") === ids(1, 2))
+
+    // the replay of batch 2 reads base 0 and view 1 and reproduces both areas
+    run()
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
+    assert(baseRows === wantBase)
+
+    // committed through 2: base 0 and view 1 go
+    assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 2)
+    assert(snapshots("base") === ids(2))
+    assert(snapshots("view") === ids(2))
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
+    assert(baseRows === wantBase)
+  }
 }
