@@ -30,6 +30,29 @@ object Manifests {
 
   val CompactDir = "_compaction"
 
+  /** The batch half of the layout: every store keeps each ingest batch
+    * in its own `__ingest_batch=<id>` directory, and this object is the
+    * one place that names and parses those directories. */
+  val BatchCol = "__ingest_batch"
+
+  private def batchId(name: String): Option[Long] =
+    if (name.startsWith(s"$BatchCol=")) name.stripPrefix(s"$BatchCol=").toLongOption
+    else None
+
+  /** The batch directories directly under `root`, in numeric id order
+    * (9 before 10); empty when `root` is absent. A child is a batch only
+    * if it is a directory named `__ingest_batch=<long>`: `_stats`,
+    * `_compaction`, `.tmp-ingest-*` and non-numeric suffixes are skipped,
+    * by every reader and lifecycle verb alike. */
+  def batches(root: String): Seq[(Long, Path)] =
+    Fs.list(Fs.path(root)).filter(_.isDirectory)
+      .flatMap(f => batchId(f.getPath.getName).map((_, f.getPath)))
+      .sortBy(_._1)
+
+  /** The newest batch directory under `root` with id strictly below `b`. */
+  def newestBelow(root: String, b: Long): Option[(Long, Path)] =
+    batches(root).takeWhile(_._1 < b).lastOption
+
   private val ManifestRe = """manifest-(\d+)\.json""".r
   private val BodyRe = """"epoch"\s*:\s*(\d+).*"covers_upto"\s*:\s*(-?\d+)""".r
 
@@ -73,8 +96,8 @@ object Manifests {
 
   /** The compacted READ view of a store: the committed epoch (if any)
     * unioned with `live` partitions STRICTLY ABOVE the watermark —
-    * superseded partitions excluded even if the GC never ran, `batchCol`
-    * normalized to LONG so as-of `< id` filters work uniformly. Without
+    * superseded partitions excluded even if the GC never ran, the batch
+    * column normalized to LONG so as-of `< id` filters work uniformly. Without
     * a manifest, `live` passes through untouched. The epoch∪live union
     * is by NAME with missing columns null-filled on either side — the
     * schema-evolution policy (a column added after the last compaction
@@ -84,8 +107,7 @@ object Manifests {
     * epoch read's mergeSchema footer pass — one fewer Spark job per
     * scan on the serving path; None keeps full schema discovery (the
     * programmatic default). */
-  def readView(spark: SparkSession, storeDir: String, batchCol: String,
-               live: Option[DataFrame],
+  def readView(spark: SparkSession, storeDir: String, live: Option[DataFrame],
                knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[DataFrame] =
     read(storeDir) match {
@@ -99,16 +121,16 @@ object Manifests {
         Some(live match {
           case None => compacted
           case Some(l) =>
-            compacted.unionByName(l.filter(col(batchCol) > covers)
-              .withColumn(batchCol, col(batchCol).cast("long")),
+            compacted.unionByName(l.filter(col(BatchCol) > covers)
+              .withColumn(BatchCol, col(BatchCol).cast("long")),
               allowMissingColumns = true)
         })
     }
 
   /** Fold `view`'s rows with batch ≤ `uptoBatch` into the next epoch
     * and commit: epoch write (optionally `partitionCols`-partitioned,
-    * `batchCol` carried as a LONG data column), atomic manifest flip,
-    * then best-effort GC of superseded batch dirs and the previous
+    * the batch column carried as a LONG data column), atomic manifest
+    * flip, then best-effort GC of superseded batch dirs and the previous
     * epoch. The watermark is REQUIRED monotone (review r12): a shrunken
     * `uptoBatch` would write an epoch missing the previous epoch's
     * tail rows and then delete their only copy — silent data loss. */
@@ -119,7 +141,7 @@ object Manifests {
     * rectangle of BOTH). The point is per-FILE min/max tightness: the
     * stats sidecar records epoch bounds per file, so a clustered epoch
     * is skippable INSIDE the leaf (the Delta OPTIMIZE ZORDER model). */
-  def compactView(view: DataFrame, storeDir: String, batchCol: String,
+  def compactView(view: DataFrame, storeDir: String,
                   uptoBatch: Long, targetFileRows: Long,
                   partitionCols: Seq[String], gc: Boolean = true,
                   clusterBy: Seq[String] = Nil): (Long, Long) = {
@@ -134,8 +156,8 @@ object Manifests {
           s"previous covers_upto=$covers at $storeDir — rows above the new " +
           "watermark would be dropped from the epoch and their previous copy GC'd")
     }
-    val toCompact = view.filter(col(batchCol) <= uptoBatch)
-      .withColumn(batchCol, col(batchCol).cast("long"))
+    val toCompact = view.filter(col(BatchCol) <= uptoBatch)
+      .withColumn(BatchCol, col(BatchCol).cast("long"))
     val epoch = prev.map(_._1 + 1).getOrElse(0L)
     val n = toCompact.count()
     require(n > 0, s"no rows at batch <= $uptoBatch in $storeDir")
@@ -161,7 +183,7 @@ object Manifests {
     // a dedup probe. Run [[gcSuperseded]] later (next batch boundary,
     // a maintenance window) to reclaim; the committed view never
     // changes either way.
-    if (gc) { gcSuperseded(storeDir, batchCol); () }
+    if (gc) { gcSuperseded(storeDir); () }
     (epoch, uptoBatch)
   }
 
@@ -171,14 +193,11 @@ object Manifests {
     * whenever no reader is mid-execution on a view older than the
     * current manifest (readers built after the flip never touch these
     * files). Returns the number of dirs removed. */
-  def gcSuperseded(storeDir: String, batchCol: String): Int =
+  def gcSuperseded(storeDir: String): Int =
     read(storeDir) match {
       case None => 0
       case Some((epoch, covers)) =>
-        val batchDirs = Fs.list(Fs.path(storeDir))
-          .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$batchCol=") &&
-            f.getPath.getName.stripPrefix(s"$batchCol=").toLong <= covers)
-          .map(_.getPath)
+        val batchDirs = batches(storeDir).takeWhile(_._1 <= covers).map(_._2)
         val mdir = Fs.path(storeDir, CompactDir)
         val oldEpochs = Fs.list(mdir)
           .filter(f => f.isDirectory && f.getPath.getName.startsWith("epoch-") &&

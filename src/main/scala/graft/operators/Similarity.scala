@@ -23,6 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  // which ingest batch added a row to a persisted index: the base build
+  // writes batch -1, streaming appends (appendIvfBatch) their micro-batch id
+  import graft.streaming.StreamingOps.IngestBatchCol
+
   // vec_id casts to long so every tier (row-form BNLJ vs packed blocks,
   // whose Dataset encoder pins BIGINT) emits the SAME output schema
   // regardless of the size dispatch (ADVICE r18)
@@ -295,13 +299,6 @@ object Similarity {
     * quantize expressions. At 100 TB each list partition splits into
     * many parquet files; probes read nProbe/nLists of the data and the
     * planner never lists the rest. */
-  /** Partition column recording which ingest batch added a row to a
-    * persisted index: the base build writes batch -1; streaming appends
-    * ([[appendIvfBatch]]) write their micro-batch id. Same name and
-    * crash-replay role as the text corpus store's
-    * `StreamingOps.IngestBatchCol`. */
-  val IngestBatchCol = "__ingest_batch"
-
   def writeIvfIndex(index: IvfIndex, path: String): Unit =
     writeIvfBase(index, path, None)
 
@@ -632,7 +629,7 @@ object Similarity {
         // _compaction dir remains and the live read has no files
         case _: org.apache.spark.sql.AnalysisException => None
       }
-    val assigned = Manifests.readView(spark, aDir, IngestBatchCol, live)
+    val assigned = Manifests.readView(spark, aDir, live)
       .getOrElse(throw new IllegalStateException(s"no assignments at $aDir"))
     IvfIndex(centroids, assigned, centroids.length, readPqCodebook(spark, path))
   }
@@ -665,9 +662,9 @@ object Similarity {
     // hash-clustered on list so each list's rows land in few tasks; the
     // dynamic partitionBy writes one file per (task, list). Under a
     // live stream (checkpoint given) GC is deferred like compactStore's
-    // — reclaim later via Manifests.gcSuperseded(aDir, IngestBatchCol).
+    // — reclaim later via Manifests.gcSuperseded(aDir).
     Manifests.compactView(readIvfIndex(spark, path).assigned, aDir,
-      IngestBatchCol, uptoBatch, targetFileRows, partitionCols = Seq("list"),
+      uptoBatch, targetFileRows, partitionCols = Seq("list"),
       gc = checkpoint.isEmpty)
   }
 

@@ -140,7 +140,7 @@ object Takedown {
     // them — yet they can still hold a physical copy of a deleted id.
     // Reclaim them now; deleteFromStore is a quiet-moment maintenance
     // verb by contract, the same safety window gcStore itself needs.
-    Manifests.gcSuperseded(path, batchCol)
+    Manifests.gcSuperseded(path)
     val view = StreamingOps.readCorpusStore(spark, path).getOrElse(
       return TakedownReport(0L, Nil))
     // NULL-safe negation (ADVICE r14): under three-valued logic
@@ -281,10 +281,8 @@ object Takedown {
       recover(s"$storePath/$area")
       // ONE partition-pruned discovery job per area (the batch col
       // comes from the dir names; INT by discovery — cast)
-      val has = Fs.listDirNames(Fs.path(storePath, area))
-        .exists(_.startsWith(s"$bc="))
       val touched =
-        if (!has) Seq.empty[(Long, Long)]
+        if (Manifests.batches(s"$storePath/$area").isEmpty) Seq.empty[(Long, Long)]
         else spark.read.option("mergeSchema", "true")
           .parquet(s"$storePath/$area").filter(del)
           .groupBy(col(bc).cast("long").as(bc)).agg(count(lit(1)).as("n"))

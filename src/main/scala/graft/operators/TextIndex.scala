@@ -355,7 +355,7 @@ object TextIndex {
         // superseded live partitions are invisible to the merged view
         // but can still hold a copy of a victim after a deferred-GC
         // compaction — reclaim before discovery so no copy survives
-        Manifests.gcSuperseded(dir, IngestBatchCol)
+        Manifests.gcSuperseded(dir)
         val view = readCorpusStore(spark, dir).getOrElse(return removed)
         val groupCols = (IngestBatchCol +: extraCols).map {
           case IngestBatchCol => col(IngestBatchCol).cast("long").as(IngestBatchCol)
@@ -393,11 +393,11 @@ object TextIndex {
               targetFileRows: Long = 5000000L): Unit = {
     import graft.streaming.StreamingOps.readCorpusStore
     readCorpusStore(spark, s"$path/postings").foreach { v =>
-      Manifests.compactView(v, s"$path/postings", IngestBatchCol, uptoBatch,
+      Manifests.compactView(v, s"$path/postings", uptoBatch,
         targetFileRows, partitionCols = Seq("bucket"))
     }
     readCorpusStore(spark, s"$path/doclen").foreach { v =>
-      Manifests.compactView(v, s"$path/doclen", IngestBatchCol, uptoBatch,
+      Manifests.compactView(v, s"$path/doclen", uptoBatch,
         targetFileRows, partitionCols = Seq.empty)
     }
   }

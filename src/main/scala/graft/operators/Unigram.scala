@@ -280,24 +280,4 @@ object Unigram {
       .withColumn("tokens", kern(col(textCol)))
       .withColumn("token_count", size(col("tokens")).cast(LongType))
   }
-
-  /** Per-group fertility sheet over the unigram tokenizer — the q108
-    * diagnostics with this encoder (same output contract as
-    * `Bpe.fertilityStats`). */
-  def fertilityStats(docs: DataFrame, model: UnigramModel,
-                     groupCol: Column, textCol: String = "text"): DataFrame = {
-    val ws = filter(split(lower(col(textCol)), " "), w => length(w) > 0)
-    encode(docs, model, textCol)
-      .withColumn("__grp", groupCol.cast("string"))
-      .withColumn("__w", size(ws).cast(LongType))
-      .withColumn("__c", aggregate(ws, lit(0L), (a, w) => a + length(w)))
-      .groupBy(col("__grp").as("grp"))
-      .agg(count(lit(1)).as("n_docs"), sum("__w").as("words"),
-        sum("token_count").as("tokens"), sum("__c").as("chars"))
-      .withColumn("fertility",
-        round(col("tokens").cast("double") / col("words"), 4))
-      .withColumn("chars_per_token",
-        round(col("chars").cast("double") / col("tokens"), 4))
-      .orderBy("grp")
-  }
 }

@@ -972,16 +972,18 @@ object PipelineQueries {
     // in-memory pin per round (persist, NOT eager localCheckpoint —
     // measured 2x faster): each round's base feeds both verbs of the
     // next round; production materializes per-batch snapshots through
-    // the STORE instead (ivmIngestToStore)
+    // the STORE instead (ivmIngestToStore). One apply kernel per round
+    // serves both verbs, so the batch's stats aggregate runs once.
     var base = empty
     var view: Option[DataFrame] = None
     batches.foreach { batch =>
+      val kernel = new Envelope.ApplyKernel(batch)
       view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainAggView(view, base, batch,
+        ChangeHistory.maintainAggView(view, base, kernel,
           rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
           valueCol = "o_price").persist()))
       base = graft.operators.Storage.track(
-        Envelope.applyChanges(base, batch, Seq("o_orderkey")).persist())
+        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
     }
     // decimal arithmetic stays internal; the export is the exact
     // DECIMAL(18,2)'s nearest double — identical in both engines (the

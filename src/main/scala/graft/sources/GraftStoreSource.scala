@@ -296,11 +296,8 @@ object GraftStoreRelation {
     * need collision SAFETY land via [[landNextBatch]], whose rename
     * step turns a lost race into an error instead of a clobber. */
   private[graft] def nextBatchId(path: String): Long = {
-    import graft.operators.{Fs, Manifests}
-    val bc = graft.streaming.StreamingOps.IngestBatchCol
-    val live = Fs.listDirNames(Fs.path(path))
-      .filter(_.startsWith(s"$bc="))
-      .flatMap(_.stripPrefix(s"$bc=").toLongOption)
+    import graft.operators.Manifests
+    val live = Manifests.batches(path).map(_._1)
     val covers = Manifests.read(path).map(_._2)
     (live ++ covers).maxOption.map(_ + 1).getOrElse(0L)
   }
@@ -583,10 +580,10 @@ class GraftStoreRelation(spark: SparkSession, path: String, layout: String,
         StreamingOps.readScd2StorePruned(spark, path, skips)
           .getOrElse(empty)
       case "ivm-view" if skips.nonEmpty && hasStats(s"$path/view") =>
-        StreamingOps.readIvmSnapshotPruned(spark, path, "view", skips)
+        StreamingOps.newestSnapshot(spark, s"$path/view", ranges = skips)
           .getOrElse(empty)
       case "ivm-base" if skips.nonEmpty && hasStats(s"$path/base") =>
-        StreamingOps.readIvmSnapshotPruned(spark, path, "base", skips)
+        StreamingOps.newestSnapshot(spark, s"$path/base", ranges = skips)
           .getOrElse(empty)
       case _ => view(None)
     }
@@ -648,15 +645,18 @@ final case class GraftStoreOffset(n: Long) extends Offset {
   * a single capped window.)
   *
   * `layout = "ivm-view"` (r18, VERDICT r17 next #2) tails an
-  * [[graft.streaming.StreamingOps.ivmIngestToStore]] (or quantile)
-  * store's VIEW area instead: the snapshot-commit log
-  * (`view/__ingest_batch=<id>`) is the offset space, and each
-  * micro-batch delivers the COMPLETE committed view state(s) in its
-  * window, id carried — "notify me when the maintained view changes",
-  * the IVM family's natural push consumer. Snapshot ids are streaming
-  * epochs (dense); [[graft.streaming.StreamingOps.gcIvmSnapshots]]
-  * retains a suffix of them, so the frontier additionally fast-
-  * forwards past a GC'd prefix: a tail that fell behind the GC
+  * [[graft.streaming.StreamingOps.ivmIngestToStore]] store's VIEW area
+  * instead: the snapshot-commit log (`view/__ingest_batch=<id>`) is
+  * the offset space, and each micro-batch delivers the COMPLETE
+  * committed view state(s) in its window, id carried — "notify me
+  * when the maintained view changes", the IVM family's natural push
+  * consumer. Snapshot ids are the producer's streaming epochs but
+  * SPARSE (an epoch that changed nothing lands no snapshot), and one
+  * sequential stream owns the store, so the frontier is one past the
+  * newest snapshot whose `_SUCCESS` is visible: there are no holes to
+  * wait on, `maxBatchesPerTrigger` counts snapshots rather than ids,
+  * and a snapshot GC'd before delivery is simply absent. A tail that
+  * fell behind [[graft.streaming.StreamingOps.gcIvmSnapshots]]
   * resumes at the oldest RETAINED state (each state is complete, so
   * later states subsume elided ones — the state-changelog semantics;
   * sequence GC with the tail to never elide, exactly the corpus
@@ -668,6 +668,7 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
                              layout: String = "corpus")
     extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import graft.operators.Manifests
   import graft.streaming.StreamingOps
   private val bc = StreamingOps.IngestBatchCol
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -723,37 +724,34 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
   // because the frontier advances past every landed id).
   private var lastFrontier: Long = -1L
   private var stuckSinceMs: Long = 0L
-  @volatile private[sources] var holeWarning: Option[(Long, Long)] = None
+  @volatile private[graft] var holeWarning: Option[(Long, Long)] = None
 
   private def probeLanded(id: Long): Boolean = {
     frontierProbes.incrementAndGet()
     landed(id)
   }
 
-  /** The COMMITTED frontier: one past the last id of the gap-free
-    * committed prefix (ids at or below the compaction watermark count
-    * as committed — their data lives in the epoch). Writers land ids
-    * densely ascending (streaming epochs, landNextBatch), so a hole
-    * is an in-flight batch the tail must wait for, never skip. The
-    * walk resumes from `knownLanded` — immutability of landed ids
-    * makes the cache exact, never merely heuristic. */
-  private def uncappedFrontier(): Long = {
-    val base = layout match {
-      case "ivm-view" =>
-        // snapshot GC retains a SUFFIX of ids — fast-forward a frontier
-        // that fell below the oldest retained snapshot (state-changelog
-        // semantics: elided states are subsumed by the next retained one)
-        graft.operators.Fs.listDirNames(graft.operators.Fs.path(idRoot))
-          .filter(_.startsWith(s"$bc="))
-          .flatMap(_.stripPrefix(s"$bc=").toLongOption)
-          .minOption.getOrElse(0L)
-      case _ =>
-        graft.operators.Manifests.read(path).map(_._2 + 1L).getOrElse(0L)
-    }
-    var frontier = math.max(math.max(0L, base), knownLanded + 1L)
-    while (probeLanded(frontier)) { knownLanded = frontier; frontier += 1 }
-    checkHole(frontier)
-    frontier
+  /** The COMMITTED frontier. Corpus layout: one past the last id of
+    * the gap-free committed prefix (ids at or below the compaction
+    * watermark count as committed — their data lives in the epoch).
+    * Writers land ids densely ascending (streaming epochs,
+    * landNextBatch), so a hole is an in-flight batch the tail must
+    * wait for, never skip; the walk resumes from `knownLanded` —
+    * immutability of landed ids makes the cache exact, never merely
+    * heuristic. View layout: one past the newest landed snapshot (see
+    * the class doc); `knownLanded` keeps it from moving back while a
+    * replayed snapshot is rewritten. */
+  private def uncappedFrontier(): Long = layout match {
+    case "ivm-view" =>
+      Manifests.batches(idRoot).reverseIterator.map(_._1).find(probeLanded)
+        .foreach(id => knownLanded = math.max(knownLanded, id))
+      knownLanded + 1L
+    case _ =>
+      val base = Manifests.read(path).map(_._2 + 1L).getOrElse(0L)
+      var frontier = math.max(math.max(0L, base), knownLanded + 1L)
+      while (probeLanded(frontier)) { knownLanded = frontier; frontier += 1 }
+      checkHole(frontier)
+      frontier
   }
 
   private def checkHole(frontier: Long): Unit = {
@@ -761,9 +759,7 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
     if (frontier != lastFrontier) {
       lastFrontier = frontier; stuckSinceMs = now; holeWarning = None
     } else if (holeWarning.isEmpty && now - stuckSinceMs >= holeWarnMillis) {
-      val later = graft.operators.Fs.listDirNames(graft.operators.Fs.path(idRoot))
-        .filter(_.startsWith(s"$bc="))
-        .flatMap(_.stripPrefix(s"$bc=").toLongOption)
+      val later = Manifests.batches(idRoot).map(_._1)
         .filter(id => id > frontier && landed(id))
       later.maxOption match {
         case Some(mx) =>
@@ -792,11 +788,20 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
       case None => frontier0
     }
     val capped = maxBatchesPerTrigger match {
-      case Some(m) => math.min(frontier, math.max(anchor, 0L) + m)
+      case Some(m) => math.min(frontier, capEnd(math.max(anchor, 0L), m))
       case None => frontier
     }
     if (capped == 0L) None else Some(GraftStoreOffset(capped))
   }
+
+  /** The end of a window of at most `m` batches from id `from`: corpus
+    * ids are dense, view snapshot ids are sparse, so a view window ends
+    * just past its `m`-th snapshot. */
+  private def capEnd(from: Long, m: Long): Long =
+    if (layout != "ivm-view") from + m
+    else Manifests.batches(idRoot).map(_._1).dropWhile(_ < from)
+      .drop(math.min(m - 1, Int.MaxValue).toInt).headOption
+      .fold(Long.MaxValue)(_ + 1)
 
   override def getOffset: Option[Offset] = announce(delivered)
 
@@ -820,7 +825,7 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
     announce(Option(start).map(offVal).getOrElse(delivered)).orNull
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    import graft.operators.{Fs, Manifests}
+    import graft.operators.Fs
     val lo = start.map(offVal).getOrElse(0L)
     val hi = offVal(end)
     delivered = math.max(delivered, hi)
@@ -855,10 +860,7 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
         else if (s.isDirectory) filesUnder(s.getPath)
         else Seq(s.getPath.toString)
       }
-    val liveFiles = Fs.list(Fs.path(path))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$bc="))
-      .flatMap(f => f.getPath.getName.stripPrefix(s"$bc=").toLongOption
-        .map(id => (id, f.getPath)))
+    val liveFiles = Manifests.batches(path)
       // dirs at ids ≤ covers are superseded by the epoch — skip them
       .filter { case (id, _) => id >= lo && id < hi && id > covers }
       .flatMap { case (_, dir) => filesUnder(dir) }.sorted
@@ -907,14 +909,9 @@ class GraftStoreStreamSource(spark: SparkSession, path: String,
     * replay are skipped — their state is subsumed by a retained later
     * one (the state-changelog contract documented on the class). */
   private def ivmBatch(lo: Long, hi: Long): DataFrame = {
-    import graft.operators.Fs
     val dataCols = schema.fields.filterNot(_.name == bc)
-    val snaps = Fs.list(Fs.path(idRoot))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$bc="))
-      .flatMap(f => f.getPath.getName.stripPrefix(s"$bc=").toLongOption
-        .map(id => (id, f.getPath)))
+    val snaps = Manifests.batches(idRoot)
       .filter { case (id, _) => id >= lo && id < hi }
-      .sortBy(_._1)
       .map { case (id, dir) =>
         spark.read.schema(StructType(dataCols)).parquet(dir.toString)
           .withColumn(bc, lit(id))

@@ -277,13 +277,10 @@ object GraftSqlCommands {
       // the partitioned write commits ONE root _SUCCESS; the store
       // contract (and the tail's landed() gate) wants one per batch
       // dir — touch them (metadata-scale, one per cloned batch)
-      val dirs = Fs.list(Fs.path(dst))
-        .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$bc="))
-      dirs.foreach(d => Fs.writeString(
-        new org.apache.hadoop.fs.Path(d.getPath, "_SUCCESS"), ""))
-      val maxId = dirs.flatMap(_.getPath.getName.stripPrefix(s"$bc=").toLongOption)
-        .maxOption.getOrElse(-1L)
-      Seq(Row(dirs.length, maxId))
+      val dirs = graft.operators.Manifests.batches(dst)
+      dirs.foreach { case (_, d) =>
+        Fs.writeString(new org.apache.hadoop.fs.Path(d, "_SUCCESS"), "") }
+      Seq(Row(dirs.length, dirs.lastOption.fold(-1L)(_._1)))
     }
   }
 
@@ -301,13 +298,11 @@ object GraftSqlCommands {
       attr("bytes", LongType), attr("live", BooleanType))
     override def run(spark: SparkSession): Seq[Row] = {
       import graft.operators.{Fs, Manifests}
-      import graft.streaming.StreamingOps
       val (path, layout) = target.resolve(spark)
       require(layout == "corpus",
         s"DESCRIBE HISTORY: layout '$layout' — snapshot stores list their " +
           "areas' __ingest_batch dirs directly; the batch ledger is the " +
           "corpus layout's")
-      val bc = StreamingOps.IngestBatchCol
       def sizeOf(p: org.apache.hadoop.fs.Path): (Int, Long) = {
         val fs = Fs.list(p).filter(_.isFile)
           .filterNot(f => f.getPath.getName.startsWith("_") ||
@@ -316,15 +311,10 @@ object GraftSqlCommands {
       }
       val manifest = Manifests.read(path)
       val covers = manifest.map(_._2).getOrElse(-1L)
-      val live = Fs.list(Fs.path(path))
-        .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$bc="))
-        .flatMap(f => f.getPath.getName.stripPrefix(s"$bc=").toLongOption
-          .map(id => (id, f.getPath)))
-        .sortBy(_._1)
-        .map { case (id, dir) =>
-          val (n, b) = sizeOf(dir)
-          Row("batch", id, n, b, id > covers)
-        }
+      val live = Manifests.batches(path).map { case (id, dir) =>
+        val (n, b) = sizeOf(dir)
+        Row("batch", id, n, b, id > covers)
+      }
       val epoch = manifest.toSeq.flatMap { case (e, c) =>
         val (n, b) = sizeOf(Fs.path(Manifests.epochPath(path, e)))
         Seq(Row("epoch", e, n, b, true), Row("covers_upto", c, 0, 0L, true))

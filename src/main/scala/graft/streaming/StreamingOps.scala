@@ -19,8 +19,9 @@ object StreamingOps {
 
   /** The column the persistent corpus store partitions by: each
     * micro-batch's admitted survivors live in their own
-    * `__ingest_batch=<id>` directory. */
-  val IngestBatchCol = "__ingest_batch"
+    * `__ingest_batch=<id>` directory ([[graft.operators.Manifests]] owns
+    * the layout). */
+  val IngestBatchCol: String = graft.operators.Manifests.BatchCol
 
   /** A committed compaction ([[graft.operators.Manifests]] protocol):
     * `epoch` names the consolidated directory (`_compaction/epoch-<e>`,
@@ -68,17 +69,13 @@ object StreamingOps {
                       path: String,
                       knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Fs
     // explicit batch-dir roots + basePath instead of the store root:
     // partition dirs (name contains '=') are exempt from Spark's
     // underscore/dot path filter, so this read works even when the
     // store root ITSELF is underscore-prefixed (the `_attributes`
     // sidecar is a store in this layout and shares every verb,
     // including Takedown.deleteFromStore)
-    val batchDirs = Fs.list(Fs.path(path))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$IngestBatchCol="))
-      .map(_.getPath.toString).sorted
+    val batchDirs = graft.operators.Manifests.batches(path).map(_._2.toString)
     val live =
       if (batchDirs.isEmpty) None
       else
@@ -94,7 +91,7 @@ object StreamingOps {
           // infer a schema from; an empty store and no store are the same
           case _: org.apache.spark.sql.AnalysisException => None
         }
-    graft.operators.Manifests.readView(spark, path, IngestBatchCol, live, knownSchema)
+    graft.operators.Manifests.readView(spark, path, live, knownSchema)
   }
 
   /** Fold committed batch partitions into one consolidated epoch — the
@@ -144,7 +141,7 @@ object StreamingOps {
       val cur = readCorpusStore(spark, path).getOrElse(
         throw new IllegalStateException(s"nothing to compact at $path"))
       val (e, covers) = graft.operators.Manifests.compactView(
-        cur, path, IngestBatchCol, uptoBatch, targetFileRows, partitionCols = Nil,
+        cur, path, uptoBatch, targetFileRows, partitionCols = Nil,
         gc = checkpoint.isEmpty, clusterBy = clusterBy)
       CompactionState(e, covers)
     }
@@ -182,10 +179,7 @@ object StreamingOps {
     import graft.operators.{Fs, Manifests}
     graft.operators.StoreLease.withLease(path, "expireBatches") {
     def dropLive(root: String): Int = {
-      val dirs = Fs.list(Fs.path(root))
-        .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$IngestBatchCol=") &&
-          f.getPath.getName.stripPrefix(s"$IngestBatchCol=").toLongOption.exists(_ <= uptoBatch))
-        .map(_.getPath)
+      val dirs = Manifests.batches(root).takeWhile(_._1 <= uptoBatch).map(_._2)
       dirs.foreach(Fs.rmTree)
       dirs.length
     }
@@ -258,8 +252,7 @@ object StreamingOps {
     val preV2 = Fs.listDirNames(Fs.path(statsRoot))
       .filterNot(_.startsWith("leaf="))
     if (preV2.nonEmpty) Fs.rmTree(Fs.path(statsRoot)) // old layout: re-score
-    val liveLeaves = Fs.listDirNames(Fs.path(storePath))
-      .filter(_.startsWith(s"$IngestBatchCol="))
+    val liveLeaves = Manifests.batches(storePath).map(_._2.getName)
     val epochLeaf = Manifests.read(storePath).map { case (e, _) => s"epoch-$e" }
     val leaves = (liveLeaves ++ epochLeaf).toSeq
     val done = Fs.listDirNames(Fs.path(statsRoot))
@@ -486,11 +479,8 @@ object StreamingOps {
       case None => true // no stats yet -> must read
       case Some(ls) => satisfiable(ls.whole)
     }
-    val keptBatchDirs = Fs.list(Fs.path(path))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$IngestBatchCol="))
-      .map(_.getPath)
-      .filter(p => keep(p.getName))
-      .map(_.toString).sorted
+    val keptBatchDirs = Manifests.batches(path).map(_._2)
+      .filter(p => keep(p.getName)).map(_.toString)
     val live =
       if (keptBatchDirs.isEmpty) None
       else
@@ -551,64 +541,8 @@ object StreamingOps {
   def readScd2StorePruned(spark: org.apache.spark.sql.SparkSession,
                           storePath: String,
                           ranges: Seq[SkipPred]): Option[DataFrame] = {
-    import graft.operators.Fs
     require(ranges.nonEmpty, "readScd2StorePruned: no ranges — use readScd2Store")
-    val closedPath = s"$storePath/closed"
-    val closedStats = loadStoreStats(spark, closedPath)
-    def keepLeaf(stats: Map[String, LeafStats])(leaf: String): Boolean =
-      stats.get(leaf).forall(ls => boundsSatisfiable(ranges, ls.whole))
-    val keptClosed = Fs.list(Fs.path(closedPath))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$IngestBatchCol="))
-      .map(_.getPath)
-      .filter(p => keepLeaf(closedStats)(p.getName))
-      .map(_.toString).sorted
-    val closed =
-      if (keptClosed.isEmpty) None
-      else
-        try Some(spark.read.option("mergeSchema", "true")
-          .option("basePath", closedPath).parquet(keptClosed.toIndexedSeq: _*)
-          .drop(IngestBatchCol))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val openPath = s"$storePath/open"
-    val openStats = loadStoreStats(spark, openPath)
-    val open = Fs.listDirNames(Fs.path(openPath))
-      .filter(_.startsWith(s"$IngestBatchCol="))
-      .flatMap(_.stripPrefix(s"$IngestBatchCol=").toLongOption)
-      .maxOption
-      .filter(b => keepLeaf(openStats)(s"$IngestBatchCol=$b"))
-      .map(b => spark.read.parquet(s"$openPath/$IngestBatchCol=$b"))
-    (closed, open) match {
-      case (Some(c), Some(o)) =>
-        Some(c.unionByName(o, allowMissingColumns = true))
-      case (c, o) => c.orElse(o)
-    }
-  }
-
-  /** The latest ivm/quantile VIEW (or ivm BASE, `area = "base"`)
-    * snapshot, pruned all-or-nothing by its leaf row in the area's
-    * `_stats` sidecar (r18): a view read whose predicate bounds
-    * exclude the whole snapshot — "is there any group over the alert
-    * threshold?" — answers from metadata without opening a file. The
-    * base area is replica-scale, where the wholesale skip matters
-    * more. Maintain with [[upkeepStoreStats]] on the AREA directory
-    * (snapshot leaves score like batch leaves; vanished snapshots'
-    * rows drop at the next upkeep). None when absent or pruned. */
-  def readIvmSnapshotPruned(spark: org.apache.spark.sql.SparkSession,
-                            storePath: String, area: String,
-                            ranges: Seq[SkipPred]): Option[DataFrame] = {
-    import graft.operators.Fs
-    require(ranges.nonEmpty, "readIvmSnapshotPruned: no ranges")
-    val areaPath = s"$storePath/$area"
-    val stats = loadStoreStats(spark, areaPath)
-    Fs.listDirNames(Fs.path(areaPath))
-      .filter(_.startsWith(s"$IngestBatchCol="))
-      .flatMap(_.stripPrefix(s"$IngestBatchCol=").toLongOption)
-      .maxOption
-      .filter { b =>
-        stats.get(s"$IngestBatchCol=$b")
-          .forall(ls => boundsSatisfiable(ranges, ls.whole))
-      }
-      .map(b => spark.read.parquet(s"$areaPath/$IngestBatchCol=$b"))
+    scd2View(spark, storePath, ranges)
   }
 
   /** Drop the stats row for one snapshot/batch leaf of an AREA
@@ -643,9 +577,7 @@ object StreamingOps {
     val storeBatches = view.select(col(IngestBatchCol).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSet
     val attrRoot = s"$storePath/$AttributesDir"
-    val done = graft.operators.Fs.listDirNames(graft.operators.Fs.path(attrRoot))
-      .filter(_.startsWith(s"$IngestBatchCol="))
-      .flatMap(_.stripPrefix(s"$IngestBatchCol=").toLongOption).toSet
+    val done = graft.operators.Manifests.batches(attrRoot).map(_._1).toSet
     val todo = (storeBatches -- done).toSeq.sorted
     todo.foreach { b =>
       graft.operators.TextAnalysis.attributeSheet(
@@ -691,7 +623,7 @@ object StreamingOps {
     * touch these files. Returns the number of directories removed. */
   def gcStore(path: String): Int =
     graft.operators.StoreLease.withLease(path, "gcStore") {
-      graft.operators.Manifests.gcSuperseded(path, IngestBatchCol)
+      graft.operators.Manifests.gcSuperseded(path)
     }
 
   /** Streaming corpus-quality drift monitor — the data-quality
@@ -861,7 +793,7 @@ object StreamingOps {
       .foreachBatch { (microBatch: DataFrame, id: Long) => withPinnedBatch(microBatch) { batch =>
         val spark = batch.sparkSession
         import graft.operators.ChangeHistory
-        val merged = latestOpenSnapshot(spark, s"$storePath/open", beforeBatch = id)
+        val merged = newestSnapshot(spark, s"$storePath/open", beforeBatch = id)
           match {
             case Some(open) =>
               ChangeHistory.scd2Merge(open, batch, key, tsMicros, seq, op, values)
@@ -917,15 +849,13 @@ object StreamingOps {
     *
     * Per batch, one [[graft.cdc.Envelope.ApplyKernel]] resolves the
     * batch's row count and TRUNCATE watermark in one job and is shared
-    * by both verbs. An EMPTY batch runs neither verb: its base equals
-    * the newest base snapshot below it, which is what the next batch
-    * reads ("newest id < batch") and what the commit-aware GC rule
-    * keeps, so it lands no base snapshot; after the first landed view
-    * it lands a copy of the previous view snapshot, because view ids
-    * are the offsets of the graft-store `ivm-view` tail and must stay
-    * dense. Each area's snapshot schema is inferred
-    * on its first read in a run and then reused, so later batches run
-    * no footer-reading inference job. The sink's jobs carry the call
+    * by both verbs. An EMPTY batch runs neither verb and lands nothing:
+    * its base and view equal the newest snapshots below it, which is
+    * what the next batch reads ("newest id < batch"), what the
+    * commit-aware GC rule keeps, and what the graft-store `ivm-view`
+    * tail last delivered, so snapshot ids are sparse. Each area's
+    * snapshot schema is inferred on its first read in a run and then
+    * reused, so later batches run no footer-reading inference job. The sink's jobs carry the call
     * sites `ivm kernel stats`, `ivm view read`, `ivm base read`,
     * `ivm base write` and `ivm view write`.
     *
@@ -942,7 +872,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         import graft.operators.ChangeHistory
         def snapshot(area: String): Option[DataFrame] = namedJobs(spark, s"ivm $area read") {
-          latestOpenSnapshot(spark, s"$storePath/$area", beforeBatch = id, schemas.get(area))
+          newestSnapshot(spark, s"$storePath/$area", beforeBatch = id, schemas.get(area))
             .map { df => schemas(area) = df.schema; df }
         }
         // invalidate-before-overwrite for the ivm skip tier (replay is
@@ -954,8 +884,8 @@ object StreamingOps {
           }
         }
         val kernel = namedJobs(spark, "ivm kernel stats")(new graft.cdc.Envelope.ApplyKernel(batch))
-        val prevView = snapshot("view")
         if (kernel.rows > 0) {
+          val prevView = snapshot("view")
           val meta = Set("op", "lsn", "seq", graft.cdc.Envelope.UnchangedCol)
           val dataCols = batch.columns.filterNot(meta).toSeq
           val prevBase = snapshot("base").getOrElse(batch.select(dataCols.map(col): _*).limit(0))
@@ -968,13 +898,6 @@ object StreamingOps {
           // view over a base that does not yet contain its rows
           land("base", graft.cdc.Envelope.applyChanges(prevBase, kernel, rowKeys))
           land("view", newView.coalesce(1))
-        } else prevView.foreach { view =>
-          // an empty batch runs neither verb and lands no base snapshot;
-          // once a view has landed it lands a copy of the previous one,
-          // so view ids — the ivm-view tail's offsets — stay dense (the
-          // tail starts at the oldest landed id, so a fresh store's
-          // leading empty batches need none)
-          land("view", view.coalesce(1))
         }
       }}
       .start()
@@ -998,13 +921,13 @@ object StreamingOps {
     * dashboard-sized read regardless of stream volume. */
   def readIvmView(spark: org.apache.spark.sql.SparkSession,
                   storePath: String): Option[DataFrame] =
-    latestOpenSnapshot(spark, s"$storePath/view", beforeBatch = Long.MaxValue)
+    newestSnapshot(spark, s"$storePath/view")
 
   /** The latest materialized current state of an [[ivmIngestToStore]]
     * store (None before the first batch). */
   def readIvmBase(spark: org.apache.spark.sql.SparkSession,
                   storePath: String): Option[DataFrame] =
-    latestOpenSnapshot(spark, s"$storePath/base", beforeBatch = Long.MaxValue)
+    newestSnapshot(spark, s"$storePath/base")
 
   /** Reclaim superseded [[ivmIngestToStore]] snapshots in BOTH areas —
     * the [[gcScd2OpenSnapshots]] commit-aware survivor rule applied to
@@ -1014,23 +937,28 @@ object StreamingOps {
     gcSnapshotDir(s"$storePath/base", checkpoint) +
       gcSnapshotDir(s"$storePath/view", checkpoint)
 
-  /** The newest committed open-set snapshot strictly before
-    * `beforeBatch` — the as-of read a crash-replayed batch needs. With
-    * `schema`, the read skips parquet's schema-inference job. */
-  private def latestOpenSnapshot(spark: org.apache.spark.sql.SparkSession,
-                                 openPath: String,
-                                 beforeBatch: Long,
-                                 schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] = {
-    import graft.operators.Fs
-    Fs.listDirNames(Fs.path(openPath))
-      .filter(_.startsWith(s"$IngestBatchCol="))
-      .flatMap(_.stripPrefix(s"$IngestBatchCol=").toLongOption)
-      .filter(_ < beforeBatch)
-      .maxOption
-      .map(b => schema.fold(spark.read)(spark.read.schema)
-        .parquet(s"$openPath/$IngestBatchCol=$b"))
-  }
+  /** The newest snapshot of a versioned snapshot area (scd2 `open/`,
+    * ivm `view/` or `base/`) strictly below `beforeBatch` — the as-of
+    * read a crash-replayed batch needs, and with the default bound the
+    * latest state. With `schema`, the read skips parquet's
+    * schema-inference job. With `ranges`, the snapshot is pruned
+    * all-or-nothing by its leaf row in the area's `_stats` sidecar
+    * (r18): a read whose predicate bounds exclude the whole snapshot —
+    * "is there any group over the alert threshold?" — answers from
+    * metadata without opening a file; a snapshot without stats is
+    * read. Maintain the sidecar with [[upkeepStoreStats]] on the area
+    * directory. None when absent or pruned. */
+  private[graft] def newestSnapshot(spark: org.apache.spark.sql.SparkSession,
+                                    areaPath: String,
+                                    beforeBatch: Long = Long.MaxValue,
+                                    schema: Option[org.apache.spark.sql.types.StructType] = None,
+                                    ranges: Seq[SkipPred] = Nil): Option[DataFrame] =
+    graft.operators.Manifests.newestBelow(areaPath, beforeBatch)
+      .filter { case (_, dir) =>
+        ranges.isEmpty || loadStoreStats(spark, areaPath).get(dir.getName)
+          .forall(ls => boundsSatisfiable(ranges, ls.whole))
+      }
+      .map { case (_, dir) => schema.fold(spark.read)(spark.read.schema).parquet(dir.toString) }
 
   /** Read a [[scd2IngestToStore]] history: every closed version ever
     * written plus the latest open snapshot — exactly the table a full
@@ -1038,18 +966,27 @@ object StreamingOps {
     * would produce (Scd2IngestSpec ties them row-for-row). None before
     * the first batch. */
   def readScd2Store(spark: org.apache.spark.sql.SparkSession,
-                    storePath: String): Option[DataFrame] = {
+                    storePath: String): Option[DataFrame] =
+    scd2View(spark, storePath, ranges = Nil)
+
+  /** Closed ∪ open of an scd2 store, leaves pruned by `ranges` (none
+    * when empty) — see [[readScd2StorePruned]]. */
+  private def scd2View(spark: org.apache.spark.sql.SparkSession, storePath: String,
+                       ranges: Seq[SkipPred]): Option[DataFrame] = {
     val closedPath = s"$storePath/closed"
-    val hasClosed = graft.operators.Fs
-      .listDirNames(graft.operators.Fs.path(closedPath))
-      .exists(_.startsWith(s"$IngestBatchCol="))
+    lazy val closedStats = loadStoreStats(spark, closedPath)
+    val keptClosed = graft.operators.Manifests.batches(closedPath).map(_._2)
+      .filter(p => ranges.isEmpty ||
+        closedStats.get(p.getName).forall(ls => boundsSatisfiable(ranges, ls.whole)))
+      .map(_.toString)
     val closed =
-      if (!hasClosed) None
+      if (keptClosed.isEmpty) None
       else
-        try Some(spark.read.option("mergeSchema", "true").parquet(closedPath)
+        try Some(spark.read.option("mergeSchema", "true")
+          .option("basePath", closedPath).parquet(keptClosed: _*)
           .drop(IngestBatchCol))
         catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val open = latestOpenSnapshot(spark, s"$storePath/open", Long.MaxValue)
+    val open = newestSnapshot(spark, s"$storePath/open", ranges = ranges)
     // union by name, missing columns null-filled: a value column added
     // to the change stream mid-history exists only in newer closed
     // partitions and the current open snapshot (the corpus store's
@@ -1088,11 +1025,7 @@ object StreamingOps {
   private def gcSnapshotDir(dir: String,
                             checkpoint: Option[String]): Int = {
     import graft.operators.Fs
-    val parts = Fs.list(Fs.path(dir))
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith(s"$IngestBatchCol="))
-      .flatMap(f => f.getPath.getName.stripPrefix(s"$IngestBatchCol=")
-        .toLongOption.map((_, f.getPath)))
-      .sortBy(_._1)
+    val parts = graft.operators.Manifests.batches(dir)
     val ids = parts.map(_._1)
     val keep: Set[Long] = checkpoint match {
       case Some(cp) =>
@@ -1242,7 +1175,7 @@ object StreamingOps {
             import graft.operators.{Dedup, Similarity, Storage}
             val idx = Similarity.readIvfIndex(spark, vp)
             val asOf = idx.copy(assigned =
-              idx.assigned.filter(col(Similarity.IngestBatchCol) < id))
+              idx.assigned.filter(col(IngestBatchCol) < id))
             val cand = textAdmitted.localCheckpoint(true)
             try {
               val vecs = cand.select(col("doc_id").as("vec_id"), col("embedding"))

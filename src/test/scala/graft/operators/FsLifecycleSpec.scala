@@ -111,7 +111,7 @@ class FsLifecycleSpec extends SparkSpec {
     assert(names.contains("manifest-0.json") && names.contains("manifest-1.json"))
     // GC (with a data dir for the committed epoch so read stays valid)
     Seq((1L, 1L)).toDF("a", bc).write.parquet(Manifests.epochPath(store, 1L))
-    Manifests.gcSuperseded(store, bc)
+    Manifests.gcSuperseded(store)
     val after = Fs.list(mdir).filter(_.isFile).map(_.getPath.getName)
     assert(after.contains("manifest-1.json") && !after.contains("manifest-0.json"))
     assert(Manifests.read(store) === Some((1L, 9L)))

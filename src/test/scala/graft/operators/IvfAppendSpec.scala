@@ -103,16 +103,16 @@ class IvfAppendSpec extends SparkSpec {
       probeVec, k = 5, nProbe = 3, excludeId = Some(1L))
     val before = probe().as[(Long, Double)].collect().toSeq
     val rowsBefore = Similarity.readIvfIndex(spark, path).assigned
-      .select(col("vec_id"), col(Similarity.IngestBatchCol).cast("long"))
+      .select(col("vec_id"), col(Manifests.BatchCol).cast("long"))
       .as[(Long, Long)].collect().sorted.toSeq
     assert(rowsBefore.size === 128)
 
     assert(Similarity.compactIvfIndex(spark, path, uptoBatch = 0L) === ((0L, 0L)))
     // base and append partitions folded and GC'd; rows identical
-    assert(!new java.io.File(s"$path/assigned/${Similarity.IngestBatchCol}=-1").exists())
-    assert(!new java.io.File(s"$path/assigned/${Similarity.IngestBatchCol}=0").exists())
+    assert(!new java.io.File(s"$path/assigned/${Manifests.BatchCol}=-1").exists())
+    assert(!new java.io.File(s"$path/assigned/${Manifests.BatchCol}=0").exists())
     val rowsAfter = Similarity.readIvfIndex(spark, path).assigned
-      .select(col("vec_id"), col(Similarity.IngestBatchCol).cast("long"))
+      .select(col("vec_id"), col(Manifests.BatchCol).cast("long"))
       .as[(Long, Long)].collect().sorted.toSeq
     assert(rowsAfter === rowsBefore)
     // probe results identical, plan still pruned on list

@@ -131,14 +131,14 @@ class TakedownSpec extends SparkSpec {
       .select("list").as[Int].collect().toSet
     val untouched = (0 until 4).filterNot(lists.contains)
     val beforeHashes = untouched.map(l =>
-      l -> hashDir(s"$path/assigned/${Similarity.IngestBatchCol}=-1/list=$l")).toMap
+      l -> hashDir(s"$path/assigned/${Manifests.BatchCol}=-1/list=$l")).toMap
     val deleted = Similarity.deleteFromIvfIndex(spark, path, victims)
     assert(deleted === 2L)
     val after = Similarity.readIvfIndex(spark, path)
     assert(after.assigned.filter(col("vec_id").isin(victims: _*)).count() === 0L)
     assert(after.assigned.count() === 72L)
     untouched.foreach(l => assert(
-      hashDir(s"$path/assigned/${Similarity.IngestBatchCol}=-1/list=$l")
+      hashDir(s"$path/assigned/${Manifests.BatchCol}=-1/list=$l")
         === beforeHashes(l)))
     // a probe near a victim's position never returns it
     val probe = vec(3L).map(_.toDouble).toArray

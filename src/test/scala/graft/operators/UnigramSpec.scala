@@ -61,19 +61,4 @@ class UnigramSpec extends SparkSpec {
       .select("doc_id", "token_count").as[(Long, Long)].collect().toMap
     assert(enc === Map(1L -> 4L, 2L -> 2L))
   }
-
-  test("fertility sheet shape") {
-    val docs = Seq.tabulate(20)(i => (i.toLong, s"alpha beta src_${i % 2}"))
-      .toDF("doc_id", "text")
-    val (model, _) = Unigram.train(docs, vocabSize = 30, maxPieceLen = 3,
-      seedSize = 64, emIters = 1)
-    val fert = Unigram.fertilityStats(docs, model, col("doc_id") % 2)
-    val rows = fert.collect()
-    assert(rows.length === 2)
-    rows.foreach { r =>
-      assert(r.getAs[Double]("fertility") > 0.0 &&
-        r.getAs[Double]("chars_per_token") > 0.0)
-    }
-    Storage.releaseAll(true)
-  }
 }

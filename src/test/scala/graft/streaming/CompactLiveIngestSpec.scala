@@ -134,9 +134,8 @@ class CompactLiveIngestSpec extends SparkSpec {
     val (epoch, covers) = graft.operators.Similarity.compactIvfIndex(
       spark, path, uptoBatch = 0L, checkpoint = Some(ckpt.toString))
     assert(epoch === 0L && covers === 0L)
-    assert(new java.io.File(s"$path/assigned/${graft.operators.Similarity.IngestBatchCol}=-1")
+    assert(new java.io.File(s"$path/assigned/${StreamingOps.IngestBatchCol}=-1")
       .exists(), "live IVF compaction defers GC of the superseded base partition")
-    assert(graft.operators.Manifests.gcSuperseded(
-      s"$path/assigned", graft.operators.Similarity.IngestBatchCol) > 0)
+    assert(graft.operators.Manifests.gcSuperseded(s"$path/assigned") > 0)
   }
 }

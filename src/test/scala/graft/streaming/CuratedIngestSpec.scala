@@ -287,8 +287,8 @@ class CuratedIngestSpec extends SparkSpec {
         .select(col("doc_id"), col(StreamingOps.IngestBatchCol).cast("long"))
         .as[(Long, Long)].collect().sorted.toSeq
     def indexRows(): Seq[(Long, Long)] = Similarity.readIvfIndex(spark, indexPath)
-      .assigned.filter(col(Similarity.IngestBatchCol) >= 0L)
-      .select(col("vec_id"), col(Similarity.IngestBatchCol).cast("long"))
+      .assigned.filter(col(StreamingOps.IngestBatchCol) >= 0L)
+      .select(col("vec_id"), col(StreamingOps.IngestBatchCol).cast("long"))
       .as[(Long, Long)].collect().sorted.toSeq
     val expectedStore = Seq((60L, 0L), (71L, 1L))
     val expectedIndex = Seq((60L, 0L), (71L, 1L))
@@ -382,7 +382,7 @@ class CuratedIngestSpec extends SparkSpec {
     assert(committed.isDefined, "the staleness hook must commit a rebuild generation")
     val genDir = Manifests.epochPath(indexPath, committed.get._1)
     assert(new java.io.File(
-      s"$genDir/assigned/${Similarity.IngestBatchCol}=1").exists(),
+      s"$genDir/assigned/${StreamingOps.IngestBatchCol}=1").exists(),
       "post-rebuild appends must land in the committed generation")
     def indexIds(): Seq[Long] = Similarity.readIvfIndex(spark, indexPath)
       .assigned.select("vec_id").as[Long].collect().sorted.toSeq

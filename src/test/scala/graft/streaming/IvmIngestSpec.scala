@@ -96,7 +96,7 @@ class IvmIngestSpec extends SparkSpec {
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === before)
   }
 
-  test("an empty batch lands no base and a copy of the view; replay and GC across it stay commit-aware") {
+  test("an empty batch lands no base and no view; replay and GC across the gap stay commit-aware") {
     val inDir = java.nio.file.Files.createTempDirectory("ivm-in")
     val store = java.nio.file.Files.createTempDirectory("ivm-store").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ivm-ck").toString
@@ -126,29 +126,28 @@ class IvmIngestSpec extends SparkSpec {
     run()
     assert(java.nio.file.Files.exists(commit(2)), "three batches ran")
 
-    // the empty batch left the base alone and copied the view forward
+    // the empty batch landed nothing: both areas' ids are sparse
     assert(snapshots("base") === ids(0, 2))
-    assert(snapshots("view") === ids(0, 1, 2))
-    assert(viewAt(1) === viewAt(0))
+    assert(snapshots("view") === ids(0, 2))
     assert(viewAt(0) === Seq(("a", 2L, 2L, 3.0), ("b", 1L, 1L, 3.0)))
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
     assert(baseRows === wantBase)
 
     // crash after batch 2's writes, before its commit: the last committed
-    // batch is the empty one — GC keeps base 0 (the newest at or below
-    // batch 1), view 1, and the uncommitted 2 in each area
+    // batch is the empty one — GC keeps snapshot 0 (the newest at or
+    // below batch 1) and the uncommitted 2 in each area
     assert(java.nio.file.Files.deleteIfExists(commit(2)))
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".2.crc"))
-    assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 1)
+    assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 0)
     assert(snapshots("base") === ids(0, 2))
-    assert(snapshots("view") === ids(1, 2))
+    assert(snapshots("view") === ids(0, 2))
 
-    // the replay of batch 2 reads base 0 and view 1 and reproduces both areas
+    // the replay of batch 2 reads base 0 and view 0 and reproduces both areas
     run()
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
     assert(baseRows === wantBase)
 
-    // committed through 2: base 0 and view 1 go
+    // committed through 2: base 0 and view 0 go
     assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 2)
     assert(snapshots("base") === ids(2))
     assert(snapshots("view") === ids(2))

@@ -98,7 +98,7 @@ class StoreParitySpec extends SparkSpec {
     Seq(store, ckpt, tailCp).foreach(Manifests.rmTree)
   }
 
-  test("ivm-view tail: empty producer batches, first and between two non-empty ones, keep ids dense") {
+  test("ivm-view tail: empty producer batches land nothing; sparse view ids arrive once, no stall, GC keeps the replay target") {
     val inDir = java.nio.file.Files.createTempDirectory("parity-in")
     val store = tmp(); val ckpt = tmp(); val tailCp = tmp()
     val t0 = System.currentTimeMillis() - 60000
@@ -113,11 +113,16 @@ class StoreParitySpec extends SparkSpec {
     val producer = StreamingOps.ivmIngestToStore(changes, store, ckpt,
       rowKeys = Seq("k"), groupKeys = Seq("g"), valueCol = "v")
     producer.processAllAvailable(); producer.stop()
+    def snapshots(area: String): Seq[Long] =
+      Manifests.batches(s"$store/$area").map(_._1)
+    // neither empty batch lands a snapshot in either area
+    assert(snapshots("view") === Seq(1L, 3L))
+    assert(snapshots("base") === Seq(1L, 3L))
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double)]
-    val q = spark.readStream.format("graft-store")
+    val tailDf = spark.readStream.format("graft-store")
       .option("layout", "ivm-view").load(store)
-      .writeStream.option("checkpointLocation", tailCp)
+    val q = tailDf.writeStream.option("checkpointLocation", tailCp)
       .foreachBatch { (df: DataFrame, _: Long) =>
         seen.synchronized {
           seen ++= df.select(col(bc).cast("long"), col("g"), col("sum_val"))
@@ -126,18 +131,44 @@ class StoreParitySpec extends SparkSpec {
         ()
       }.start()
     q.processAllAvailable(); q.stop()
-    // a fresh store's empty batch lands nothing, and the tail starts at
-    // the first landed id; a later empty batch repeats the view before
-    // it and lands no base, and the tail walks past it
+    // each landed state arrives exactly once, across the gap at id 2
     assert(seen.sorted.toSeq === Seq(
-      (1L, "a", 1.0), (1L, "b", 3.0), (2L, "a", 1.0), (2L, "b", 3.0),
-      (3L, "a", 6.0), (3L, "b", 3.0)))
-    def snapshots(area: String): Seq[String] =
-      graft.operators.Fs.listDirNames(graft.operators.Fs.path(s"$store/$area"))
-        .filter(_.startsWith(s"$bc=")).sorted
-    assert(snapshots("view") === Seq(1, 2, 3).map(b => s"$bc=$b"))
-    assert(snapshots("base") === Seq(1, 3).map(b => s"$bc=$b"))
+      (1L, "a", 1.0), (1L, "b", 3.0), (3L, "a", 6.0), (3L, "b", 3.0)))
+    // the frontier is one past the newest landed snapshot: it never
+    // waits on the missing ids, so no hole warning is ever armed
+    val src = new graft.sources.GraftStoreStreamSource(spark, store,
+      tailDf.schema, holeWarnMillis = 0L, layout = "ivm-view")
+    (1 to 3).foreach(_ => assert(src.getOffset.map(_.json) === Some("4")))
+    assert(src.holeWarning.isEmpty)
+    // crash after batch 3's writes, before its commit: the last committed
+    // batch (2) landed nothing, and GC keeps snapshot 1 — the one the
+    // replay of batch 3 reads — beside the uncommitted 3 in each area
+    assert(java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", "3")))
+    assert(StreamingOps.gcIvmSnapshots(store, Some(ckpt)) === 0)
+    assert(snapshots("view") === Seq(1L, 3L))
+    assert(snapshots("base") === Seq(1L, 3L))
     Seq(store, ckpt, tailCp).foreach(Manifests.rmTree)
+  }
+
+  test("ivm-view tail: maxBatchesPerTrigger=1 counts snapshots, not ids, across a gap") {
+    val store = tmp(); val tailCp = tmp()
+    Seq(("a", 1.0)).toDF("g", "sum_val").write.parquet(s"$store/view/$bc=1")
+    Seq(("a", 6.0)).toDF("g", "sum_val").write.parquet(s"$store/view/$bc=4")
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Double)]]
+    val q = spark.readStream.format("graft-store")
+      .option("layout", "ivm-view").option("maxBatchesPerTrigger", "1").load(store)
+      .writeStream.option("checkpointLocation", tailCp)
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        batches.synchronized {
+          batches += df.select(col(bc).cast("long"), col("sum_val"))
+            .as[(Long, Double)].collect().toSeq
+        }
+        ()
+      }.start()
+    q.processAllAvailable(); q.stop()
+    // one snapshot per micro-batch, and no empty window for ids 0, 2, 3
+    assert(batches.toSeq === Seq(Seq((1L, 1.0)), Seq((4L, 6.0))))
+    Seq(store, tailCp).foreach(Manifests.rmTree)
   }
 
   // --------------------------------------------------- scd2/ivm skipping
