@@ -307,28 +307,47 @@ object Envelope {
     applyChanges(current, new ApplyKernel(typedChanges), keys)
 
   /** [[applyChanges]] over a batch whose kernel the caller already built
-    * (the streaming sink shares one between this and its view verb). */
+    * (q145 and q149 share one between this and their view verb). */
   private[graft] def applyChanges(current: DataFrame, batch: ApplyKernel,
-                                  keys: Seq[String]): DataFrame = {
-    val latest = batch.latest(keys)
-    val hasUnchanged = latest.columns.contains(UnchangedCol)
-    val dataCols = current.columns.toSeq
-    val nonKey = dataCols.filterNot(keys.contains)
+                                  keys: Seq[String]): DataFrame =
+    appliedState(applyJoin(current, batch, keys), current.columns.toSeq, keys)
+
+  /** The apply join of one batch: `current` as of the batch's start
+    * (pruned by its TRUNCATE), each non-key column renamed `__cur_<c>`
+    * and flagged `__in_cur`, full-outer joined on `keys` with the
+    * batch's latest change per key (`op`, the typed columns and
+    * `__unchanged`). A row with a NULL `op` is one the batch did not
+    * touch. [[appliedState]] lands the post-batch state from it and
+    * [[graft.operators.ChangeHistory.foldAggView]] folds the aggregate
+    * view from its touched rows, so a caller that needs both persists
+    * it once. */
+  private[graft] def applyJoin(current: DataFrame, batch: ApplyKernel,
+                               keys: Seq[String]): DataFrame = {
+    val nonKey = current.columns.toSeq.filterNot(keys.contains)
     val cur = batch.prune(current).select(
       keys.map(col) ++ nonKey.map(c => col(c).as(s"__cur_$c")) :+ lit(true).as("__in_cur"): _*)
-    val joined = cur.join(latest, keys, "full_outer")
-      .filter(col("op").isNull || col("op") =!= "D") // untouched current rows pass through; final D drops
-    val outCols = dataCols.map { c =>
-      if (keys.contains(c)) col(c) // USING-join key columns are side-coalesced
-      else {
-        val newV =
-          if (hasUnchanged)
-            when(array_contains(col(UnchangedCol), c) && col("__in_cur"), col(s"__cur_$c"))
-              .otherwise(col(c))
-          else col(c)
-        when(col("op").isNull, col(s"__cur_$c")).otherwise(newV).as(c)
-      }
-    }
-    joined.select(outCols: _*)
+    cur.join(batch.latest(keys), keys, "full_outer")
   }
+
+  /** The post-batch state of `dataCols` from an [[applyJoin]]:
+    * untouched rows pass through, a final D drops, I/U take
+    * [[newValue]]. */
+  private[graft] def appliedState(joined: DataFrame, dataCols: Seq[String],
+                                  keys: Seq[String]): DataFrame =
+    joined
+      .filter(col("op").isNull || col("op") =!= "D")
+      .select(dataCols.map { c =>
+        if (keys.contains(c)) col(c) // USING-join key columns are side-coalesced
+        else when(col("op").isNull, col(s"__cur_$c")).otherwise(newValue(joined, c)).as(c)
+      }: _*)
+
+  /** Non-key column `c` of a touched row of an [[applyJoin]] as the
+    * batch leaves it: a cell the change flags UNCHANGED/TOAST keeps
+    * the pre-batch value, any other takes the change's. The one
+    * resolution the applied state and the aggregate view share. */
+  private[graft] def newValue(joined: DataFrame, c: String): Column =
+    if (joined.columns.contains(UnchangedCol))
+      when(array_contains(col(UnchangedCol), c) && col("__in_cur"), col(s"__cur_$c"))
+        .otherwise(col(c))
+    else col(c)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.cdc.Envelope.{ApplyKernel, UnchangedCol}
+import graft.cdc.Envelope.ApplyKernel
 
 /** Type-2 slowly-changing-dimension (SCD2) history from a CDC change
   * stream — the canonical downstream materialization of the change
@@ -128,78 +128,91 @@ object ChangeHistory {
     * row-for-row): (lsn, seq)-latest change per key wins inside the
     * batch, a TRUNCATE marker resets view and retractions and only
     * strictly-later changes contribute, an UPDATE whose value/group
-    * column is UNCHANGED/TOAST resolves it from the pre-batch row, a
-    * group-key-changing UPDATE moves the row's mass between groups
-    * (retract old group, add new), and groups retracted to zero rows
-    * vanish.
+    * column is UNCHANGED/TOAST resolves it from the pre-batch row
+    * ([[graft.cdc.Envelope.newValue]], the resolution applyChanges
+    * uses), a group-key-changing UPDATE moves the row's mass between
+    * groups (retract old group, add new), and groups retracted to zero
+    * rows vanish.
+    *
+    * This verb feeds [[foldAggView]] the batch's latest change per key
+    * left-joined with the pre-batch rows of the touched keys. A caller
+    * that also lands the post-batch base (the streaming sink, q143)
+    * computes the full [[graft.cdc.Envelope.applyJoin]] once and folds
+    * the view from it instead.
     *
     * Scale shape: one key-window over the BATCH (batch-sized shuffle);
     * the base pays ONE inner join against the batch's touched keys
     * (a [[keySide]], so the base never shuffles in the normal case);
-    * contributions explode row-locally, aggregate at delta size, and
-    * merge into the view with one null-safe group-key join (view is
-    * group-cardinality — small by construction). */
+    * contributions explode row-locally and fold into the view with one
+    * group-key aggregate (the view is group-cardinality — small by
+    * construction). */
   def maintainAggView(view: Option[DataFrame], base: DataFrame,
                       typedChanges: DataFrame, rowKeys: Seq[String],
-                      groupKeys: Seq[String], valueCol: String): DataFrame =
-    maintainAggView(view, base, new ApplyKernel(typedChanges), rowKeys, groupKeys, valueCol)
+                      groupKeys: Seq[String], valueCol: String): DataFrame = {
+    val batch = new ApplyKernel(typedChanges)
+    val latest = batch.latest(rowKeys)
+    // pre-batch rows of the touched keys, in the apply join's shape:
+    // the base never shuffles
+    val touched = latest.select(rowKeys.map(col): _*)
+    val oldRows = batch.prune(base).join(keySide(touched, batch.rows), rowKeys)
+      .select(rowKeys.map(col) ++
+        (groupKeys :+ valueCol).distinct.filterNot(rowKeys.contains)
+          .map(c => col(c).as(s"__cur_$c")) :+ lit(true).as("__in_cur"): _*)
+    foldAggView(view, latest.join(oldRows, rowKeys, "left"), batch,
+      rowKeys, groupKeys, valueCol)
+  }
 
-  /** [[maintainAggView]] over a batch whose kernel the caller already
-    * built (the streaming sink shares one with its applyChanges). */
-  private[graft] def maintainAggView(view: Option[DataFrame], base: DataFrame,
-                                     batch: ApplyKernel, rowKeys: Seq[String],
-                                     groupKeys: Seq[String], valueCol: String): DataFrame = {
-    val sumType: DataType = base.schema(valueCol).dataType match {
+  /** The view [[maintainAggView]] maintains, folded from the rows of
+    * `joined` the batch touched (`op` non-null). `joined` has the
+    * [[graft.cdc.Envelope.applyJoin]] shape: row keys, `op`, the new
+    * columns, `__cur_<c>` and `__in_cur` for the pre-batch row, and
+    * `__unchanged` when the batch carries it. Each touched row
+    * retracts its pre-batch (group, value) when it had one and adds
+    * its resolved new row unless its final op is D; the prior view and
+    * the contributions merge in one group-key aggregate (NULL keys
+    * group together), and groups left with no rows drop. */
+  private[graft] def foldAggView(view: Option[DataFrame], joined: DataFrame,
+                                 batch: ApplyKernel, rowKeys: Seq[String],
+                                 groupKeys: Seq[String], valueCol: String): DataFrame = {
+    // a row key is one column on both sides of the join
+    def old(c: String): Column = if (rowKeys.contains(c)) col(c) else col(s"__cur_$c")
+    // the pre-batch columns: their types are the state's
+    val state = joined.select((groupKeys :+ valueCol).distinct.map(c => old(c).as(c)): _*)
+    val sumType: DataType = state.schema(valueCol).dataType match {
       case d: DecimalType => DecimalType(38, d.scale)
       case _: ByteType | _: ShortType | _: IntegerType | _: LongType => LongType
       case _ => DoubleType
     }
-    val hasUnchanged = batch.changes.columns.contains(UnchangedCol)
-    val needed = rowKeys ++ (groupKeys :+ valueCol).filterNot(rowKeys.contains)
-    val latest = batch.latest(rowKeys)
-      .select((Seq(col("op")) ++ needed.map(col) ++
-        (if (hasUnchanged) Seq(col(UnchangedCol)) else Nil)): _*)
-    // pre-batch rows of the touched keys: the base never shuffles
-    val touched = latest.select(rowKeys.map(col): _*)
-    val oldRows = batch.prune(base).join(keySide(touched, batch.rows), rowKeys)
-      .select(rowKeys.map(col) ++
-        groupKeys.map(g => col(g).as(s"__old_$g")) :+
-        col(valueCol).as("__old_v") :+ lit(true).as("__in_base"): _*)
-    val joined = latest.join(oldRows, rowKeys, "left")
-    // ---- contributions: retract the old row, add the final row — ONE
-    // row-local explode, no second pass over the join
-    def resolved(c: String, oldC: Column): Column =
-      if (!hasUnchanged) col(c)
-      else when(array_contains(col(UnchangedCol), c) &&
-        col("__in_base").isNotNull, oldC).otherwise(col(c))
-    val contribType = // shared struct shape so array() unifies; the
-      // sign rides BOTH the row count and the value mass
-      (sign: Int, g: Seq[Column], v: Column) =>
-        struct((g.zip(groupKeys).map { case (c, n) => c.as(s"__g_$n") } :+
-          lit(sign.toLong).as("__dn") :+
-          (v.cast(sumType) * lit(sign)).cast(sumType).as("__dv")): _*)
-    val retract = when(col("__in_base").isNotNull,
-      contribType(-1, groupKeys.map(g => col(s"__old_$g")), col("__old_v")))
+    def now(c: String): Column =
+      if (rowKeys.contains(c)) col(c) else graft.cdc.Envelope.newValue(joined, c)
+    // shared struct shape so array() unifies; the sign rides the row
+    // count, the value count and the value mass
+    def contribution(sign: Long, g: Seq[Column], v: Column): Column =
+      struct((g.zip(groupKeys).map { case (c, n) => c.as(n) } :+
+        lit(sign).as("n_rows") :+
+        when(v.isNotNull, lit(sign)).otherwise(lit(0L)).as("n_val") :+
+        coalesce(v.cast(sumType) * lit(sign), lit(0).cast(sumType)).cast(sumType)
+          .as("sum_val")): _*)
+    val retract = when(col("__in_cur").isNotNull,
+      contribution(-1L, groupKeys.map(old), old(valueCol)))
     val insert = when(col("op") =!= "D",
-      contribType(1, groupKeys.map(g => resolved(g, col(s"__old_$g"))),
-        resolved(valueCol, col("__old_v"))))
+      contribution(1L, groupKeys.map(now), now(valueCol)))
     val contrib = joined
+      .filter(col("op").isNotNull)
       .select(explode(array(retract, insert)).as("__c"))
       .filter(col("__c").isNotNull)
       .select(col("__c.*"))
-    val deltaView = contrib
-      .groupBy(groupKeys.map(n => col(s"__g_$n").as(n)): _*)
-      .agg(sum(col("__dn")).as("__ddn"),
-        sum(when(col("__dv").isNotNull, col("__dn")).otherwise(0L)).as("__ddnv"),
-        sum(coalesce(col("__dv"), lit(0).cast(sumType))).as("__ddv"))
-    val prior = batch.prune(view.getOrElse(emptyView(base, groupKeys,
+    val prior = batch.prune(view.getOrElse(emptyView(state, groupKeys,
       StructField("n_rows", LongType), StructField("n_val", LongType),
       StructField("sum_val", sumType))))
-    mergeByGroup(prior, deltaView, groupKeys,
-        (coalesce(col("n_rows"), lit(0L)) + coalesce(col("__ddn"), lit(0L))).as("n_rows"),
-        (coalesce(col("n_val"), lit(0L)) + coalesce(col("__ddnv"), lit(0L))).as("n_val"),
-        (coalesce(col("sum_val"), lit(0).cast(sumType)) +
-          coalesce(col("__ddv"), lit(0).cast(sumType))).cast(sumType).as("sum_val"))
+      .select(groupKeys.map(col) :+
+        coalesce(col("n_rows"), lit(0L)).as("n_rows") :+
+        coalesce(col("n_val"), lit(0L)).as("n_val") :+
+        coalesce(col("sum_val"), lit(0).cast(sumType)).cast(sumType).as("sum_val"): _*)
+    prior.unionByName(contrib)
+      .groupBy(groupKeys.map(col): _*)
+      .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_val")).as("n_val"),
+        sum(col("sum_val")).cast(sumType).as("sum_val"))
       .filter(col("n_rows") > 0)
   }
 
@@ -237,11 +250,19 @@ object ChangeHistory {
   def maintainMinMaxView(view: Option[DataFrame], base: DataFrame,
                          newBase: DataFrame, typedChanges: DataFrame,
                          rowKeys: Seq[String], groupKeys: Seq[String],
-                         valueCol: String): DataFrame = {
+                         valueCol: String): DataFrame =
+    maintainMinMaxView(view, base, newBase, new ApplyKernel(typedChanges),
+      rowKeys, groupKeys, valueCol)
+
+  /** [[maintainMinMaxView]] over a batch whose kernel the caller already
+    * built (q145 shares one with its applyChanges). */
+  private[graft] def maintainMinMaxView(view: Option[DataFrame], base: DataFrame,
+                                        newBase: DataFrame, batch: ApplyKernel,
+                                        rowKeys: Seq[String], groupKeys: Seq[String],
+                                        valueCol: String): DataFrame = {
     val vType = newBase.schema(valueCol).dataType
     // past a TRUNCATE every pre-existing group is affected (the view
     // resets)
-    val batch = new ApplyKernel(typedChanges)
     val prior = batch.prune(view.getOrElse(emptyView(newBase, groupKeys,
       StructField("n_rows", LongType),
       StructField("min_val", vType), StructField("max_val", vType))))
@@ -274,9 +295,17 @@ object ChangeHistory {
   def maintainTopKView(view: Option[DataFrame], base: DataFrame,
                        newBase: DataFrame, typedChanges: DataFrame,
                        rowKeys: Seq[String], groupKeys: Seq[String],
-                       orderCol: String, k: Int): DataFrame = {
+                       orderCol: String, k: Int): DataFrame =
+    maintainTopKView(view, base, newBase, new ApplyKernel(typedChanges),
+      rowKeys, groupKeys, orderCol, k)
+
+  /** [[maintainTopKView]] over a batch whose kernel the caller already
+    * built (q149 shares one with its applyChanges). */
+  private[graft] def maintainTopKView(view: Option[DataFrame], base: DataFrame,
+                                      newBase: DataFrame, batch: ApplyKernel,
+                                      rowKeys: Seq[String], groupKeys: Seq[String],
+                                      orderCol: String, k: Int): DataFrame = {
     require(k > 0, s"maintainTopKView: k=$k")
-    val batch = new ApplyKernel(typedChanges)
     val prior = batch.prune(view.getOrElse(emptyView(newBase, groupKeys,
       (StructField("rank", IntegerType) +:
         rowKeys.map(rk => newBase.schema(rk).copy(name = rk)) :+

@@ -926,22 +926,6 @@ object PipelineQueries {
         "scores_exact", "append_encoded", "deterministic")
   }
 
-  /** q143: incremental aggregate-view maintenance from CDC batches
-    * (r15 second session; Gupta & Mumick 1995 — classic IVM for the
-    * self-maintainable COUNT/SUM aggregates). A per-status order-value
-    * view is maintained across THREE change batches synthesized from
-    * the orders table — never recomputed from the base:
-    *   batch 0: INSERT every order (status, price DECIMAL(14,2));
-    *   batch 1: UPDATE keys %7==0 (price doubles, status moves to 'U'
-    *            — a cross-GROUP move), DELETE keys %5==0 ∧ %7≠0;
-    *   batch 2: re-INSERT keys %10==0 ∧ %7≠0 (price+1000, status 'R').
-    * Each round applies `ChangeHistory.maintainAggView` (the view) and
-    * `Envelope.applyChanges` (the base) to the same batch — the A13
-    * sink pairing. The oracle computes the NET final state directly:
-    * the maintained view must equal the from-scratch aggregate
-    * row-for-row (exact DECIMAL sums — hard oracle). Scale shape: the
-    * base never shuffles (touched keys broadcast in), deltas aggregate
-    * at batch size, the view merges at group cardinality. */
   /** The shared q143/q145 change-stream synthesis: three deterministic
     * CDC batches over orders (insert all → update %7 doubling the
     * price and moving status to 'U' + delete %5∧¬%7 → re-insert
@@ -965,25 +949,46 @@ object PipelineQueries {
       b0.select("o_orderkey", "c_custkey", "o_orderstatus", "o_price").limit(0))
   }
 
+  /** q143: incremental aggregate-view maintenance from CDC batches
+    * (r15 second session; Gupta & Mumick 1995 — classic IVM for the
+    * self-maintainable COUNT/SUM aggregates). A per-status order-value
+    * view is maintained across THREE change batches synthesized from
+    * the orders table — never recomputed from the base:
+    *   batch 0: INSERT every order (status, price DECIMAL(14,2));
+    *   batch 1: UPDATE keys %7==0 (price doubles, status moves to 'U'
+    *            — a cross-GROUP move), DELETE keys %5==0 ∧ %7≠0;
+    *   batch 2: re-INSERT keys %10==0 ∧ %7≠0 (price+1000, status 'R').
+    * Each round computes the batch's apply join against the base once
+    * (`Envelope.applyJoin`) and takes both outputs from it: the base
+    * (`Envelope.appliedState`) and the view
+    * (`ChangeHistory.foldAggView`) — the ivmIngestToStore sink
+    * pairing. The oracle computes the NET final state directly: the
+    * maintained view must equal the from-scratch aggregate row-for-row
+    * (exact DECIMAL sums — hard oracle). Scale shape: the view folds
+    * only the rows the batch touched, deltas aggregate at batch size,
+    * the view merges at group cardinality. */
   def q143IvmAgg(spark: SparkSession, dir: String): DataFrame = {
     import graft.cdc.Envelope
     import graft.operators.ChangeHistory
     val (batches, empty) = ivmOrderBatches(spark, dir)
     // in-memory pin per round (persist, NOT eager localCheckpoint —
-    // measured 2x faster): each round's base feeds both verbs of the
-    // next round; production materializes per-batch snapshots through
-    // the STORE instead (ivmIngestToStore). One apply kernel per round
-    // serves both verbs, so the batch's stats aggregate runs once.
+    // measured 2x faster): each round's base feeds the next round;
+    // production materializes per-batch snapshots through the STORE
+    // instead (ivmIngestToStore). One apply kernel and one pinned apply
+    // join per round serve both outputs, so the batch's stats aggregate,
+    // its latest-per-key window and the join against the base run once.
+    val keys = Seq("o_orderkey")
     var base = empty
     var view: Option[DataFrame] = None
     batches.foreach { batch =>
       val kernel = new Envelope.ApplyKernel(batch)
+      val joined = graft.operators.Storage.track(
+        Envelope.applyJoin(base, kernel, keys).persist())
       view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainAggView(view, base, kernel,
-          rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
-          valueCol = "o_price").persist()))
+        ChangeHistory.foldAggView(view, joined, kernel, keys,
+          groupKeys = Seq("o_orderstatus"), valueCol = "o_price").persist()))
       base = graft.operators.Storage.track(
-        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
+        Envelope.appliedState(joined, base.columns.toSeq, keys).persist())
     }
     // decimal arithmetic stays internal; the export is the exact
     // DECIMAL(18,2)'s nearest double — identical in both engines (the
@@ -1006,14 +1011,15 @@ object PipelineQueries {
     import graft.cdc.Envelope
     import graft.operators.ChangeHistory
     val (batches, empty) = ivmOrderBatches(spark, dir)
-    // in-memory pin per round — the q143 rationale
+    // in-memory pin and one apply kernel per round — the q143 rationale
     var base = empty
     var view: Option[DataFrame] = None
     batches.foreach { batch =>
+      val kernel = new Envelope.ApplyKernel(batch)
       val newBase = graft.operators.Storage.track(
-        Envelope.applyChanges(base, batch, Seq("o_orderkey")).persist())
+        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
       view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainMinMaxView(view, base, newBase, batch,
+        ChangeHistory.maintainMinMaxView(view, base, newBase, kernel,
           rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
           valueCol = "o_price").persist()))
       base = newBase
@@ -1037,13 +1043,15 @@ object PipelineQueries {
     import graft.cdc.Envelope
     import graft.operators.ChangeHistory
     val (batches, empty) = ivmOrderBatches(spark, dir)
+    // one apply kernel per round — the q143 rationale
     var base = empty
     var view: Option[DataFrame] = None
     batches.foreach { batch =>
+      val kernel = new Envelope.ApplyKernel(batch)
       val newBase = graft.operators.Storage.track(
-        Envelope.applyChanges(base, batch, Seq("o_orderkey")).persist())
+        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
       view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainTopKView(view, base, newBase, batch,
+        ChangeHistory.maintainTopKView(view, base, newBase, kernel,
           rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
           orderCol = "o_price", k = 3).persist()))
       base = newBase

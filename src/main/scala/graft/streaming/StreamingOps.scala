@@ -848,16 +848,30 @@ object StreamingOps {
     * and group-sized merges either way.
     *
     * Per batch, one [[graft.cdc.Envelope.ApplyKernel]] resolves the
-    * batch's row count and TRUNCATE watermark in one job and is shared
-    * by both verbs. An EMPTY batch runs neither verb and lands nothing:
-    * its base and view equal the newest snapshots below it, which is
-    * what the next batch reads ("newest id < batch"), what the
-    * commit-aware GC rule keeps, and what the graft-store `ivm-view`
-    * tail last delivered, so snapshot ids are sparse. Each area's
-    * snapshot schema is inferred on its first read in a run and then
-    * reused, so later batches run no footer-reading inference job. The sink's jobs carry the call
-    * sites `ivm kernel stats`, `ivm view read`, `ivm base read`,
-    * `ivm base write` and `ivm view write`.
+    * batch's row count and TRUNCATE watermark in one job. A non-empty
+    * batch then computes its APPLY JOIN once
+    * ([[graft.cdc.Envelope.applyJoin]]: the previous base snapshot,
+    * pruned by the batch's TRUNCATE, full-outer joined with the batch's
+    * latest change per row key) and keeps it persisted for the rest of
+    * the batch. Both outputs come from it: the new base is its applied
+    * state ([[graft.cdc.Envelope.appliedState]], the rows
+    * [[graft.cdc.Envelope.applyChanges]] gives), and the new view folds
+    * the rows the batch touched into the previous view snapshot
+    * ([[graft.operators.ChangeHistory.foldAggView]]). So the view write
+    * runs no latest-per-key window and no second read of `base/`; it
+    * pays one group-key aggregate. The apply join is unpersisted when
+    * the batch ends, whether its writes succeed or throw.
+    *
+    * An EMPTY batch lands nothing: its base and view equal the newest
+    * snapshots below it, which is what the next batch reads ("newest
+    * id < batch"), what the commit-aware GC rule keeps, and what the
+    * graft-store `ivm-view` tail last delivered, so snapshot ids are
+    * sparse. Each area's snapshot schema is inferred on its first read
+    * in a run and then reused, so later batches run no footer-reading
+    * inference job. The sink's jobs carry the call sites
+    * `ivm kernel stats`, `ivm view read`, `ivm base read`,
+    * `ivm base write` (which also fills the apply join's cache) and
+    * `ivm view write`.
     *
     * `changes` carries op/lsn(/seq) plus the table's data columns (the
     * typedView layout); everything else is data. */
@@ -889,15 +903,17 @@ object StreamingOps {
           val meta = Set("op", "lsn", "seq", graft.cdc.Envelope.UnchangedCol)
           val dataCols = batch.columns.filterNot(meta).toSeq
           val prevBase = snapshot("base").getOrElse(batch.select(dataCols.map(col): _*).limit(0))
-          val newView = ChangeHistory.maintainAggView(prevView, prevBase, kernel,
-            rowKeys, groupKeys, valueCol)
-          // base FIRST, view LAST (ADVICE r15): the two writes are not one
-          // atomic commit, and readers join view->base — a crash between
-          // them must leave a reader on an at-worst STALE view over a
-          // newer base (consistent-enough until the replay), never a new
-          // view over a base that does not yet contain its rows
-          land("base", graft.cdc.Envelope.applyChanges(prevBase, kernel, rowKeys))
-          land("view", newView.coalesce(1))
+          val joined = graft.cdc.Envelope.applyJoin(prevBase, kernel, rowKeys).persist()
+          try {
+            // base FIRST, view LAST (ADVICE r15): the two writes are not one
+            // atomic commit, and readers join view->base — a crash between
+            // them must leave a reader on an at-worst STALE view over a
+            // newer base (consistent-enough until the replay), never a new
+            // view over a base that does not yet contain its rows
+            land("base", graft.cdc.Envelope.appliedState(joined, prevBase.columns.toSeq, rowKeys))
+            land("view", ChangeHistory.foldAggView(prevView, joined, kernel,
+              rowKeys, groupKeys, valueCol).coalesce(1))
+          } finally joined.unpersist()
         }
       }}
       .start()

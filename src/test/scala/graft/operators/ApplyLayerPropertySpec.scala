@@ -18,9 +18,11 @@ import org.scalacheck.rng.{Seed => GenSeed}
   * from-scratch recomputation over the applyChanges output:
   * [[ChangeHistory.maintainAggView]], [[ChangeHistory.maintainMinMaxView]]
   * and [[ChangeHistory.maintainTopKView]] grouped by T.g, and
-  * [[ChangeHistory.maintainJoinView]] of T ⋈ D on g. Chained
-  * [[ChangeHistory.scd2Merge]] must equal [[ChangeHistory.scd2]] over
-  * every change so far.
+  * [[ChangeHistory.maintainJoinView]] of T ⋈ D on g. The aggregate view
+  * folded from the batch's [[Envelope.applyJoin]] (the streaming sink's
+  * path) must equal the public verb's, and the base applied from it must
+  * equal applyChanges. Chained [[ChangeHistory.scd2Merge]] must equal
+  * [[ChangeHistory.scd2]] over every change so far.
   *
   * The batches mix INSERT/UPDATE/DELETE, mid-batch TRUNCATE, equal-LSN
   * runs ordered by `seq`, delete-then-reinsert of one key, UPDATEs that
@@ -198,7 +200,7 @@ class ApplyLayerPropertySpec extends SparkSpec {
       val dim = new Table(0L to 4L, "g", "w", "x")
       var t = frame(Nil, fact.schema).select("k", "g", "v")
       var d = frame(Nil, dim.schema).select("g", "w", "x")
-      var agg, minMax, topK, join, hist: Option[DataFrame] = None
+      var agg, fused, minMax, topK, join, hist: Option[DataFrame] = None
       val factRows = mutable.ArrayBuffer.empty[Row]
       factActs.zip(dimActs).zipWithIndex.foreach { case ((fa, da), i) =>
         val fb = fact.batch(fa, seen)
@@ -210,6 +212,12 @@ class ApplyLayerPropertySpec extends SparkSpec {
         val nt = local(Envelope.applyChanges(t, bt, Seq("k")))
         val nd = local(Envelope.applyChanges(d, bd, Seq("g")))
         agg = Some(local(ChangeHistory.maintainAggView(agg, t, bt, Seq("k"), Seq("g"), "v")))
+        // the streaming sink's path: one apply join lands the base and
+        // folds the view
+        val kernel = new Envelope.ApplyKernel(bt)
+        val joined = Envelope.applyJoin(t, kernel, Seq("k"))
+        fused = Some(local(ChangeHistory.foldAggView(fused, joined, kernel,
+          Seq("k"), Seq("g"), "v")))
         minMax = Some(local(ChangeHistory.maintainMinMaxView(minMax, t, nt, bt,
           Seq("k"), Seq("g"), "v")))
         topK = Some(local(ChangeHistory.maintainTopKView(topK, t, nt, bt,
@@ -220,6 +228,10 @@ class ApplyLayerPropertySpec extends SparkSpec {
         hist = Some(local(history(bt, hist)))
         val aggCols = Seq("g", "n_rows", "n_val", "sum_val")
         assert(rows(agg.get, aggCols: _*) === rows(aggOf(nt), aggCols: _*), s"agg view\n$where")
+        assert(rows(fused.get, aggCols: _*) === rows(agg.get, aggCols: _*),
+          s"agg view folded from the apply join\n$where")
+        assert(rows(Envelope.appliedState(joined, t.columns.toSeq, Seq("k")), "k", "g", "v") ===
+          rows(nt, "k", "g", "v"), s"base from the apply join\n$where")
         val mmCols = Seq("g", "n_rows", "min_val", "max_val")
         assert(rows(minMax.get, mmCols: _*) === rows(minMaxOf(nt), mmCols: _*),
           s"min/max view\n$where")

@@ -132,6 +132,56 @@ class MaintainAggViewSpec extends SparkSpec {
     assert(v1.schema("sum_val").dataType.sql.startsWith("DECIMAL(38,2)"))
   }
 
+  test("the view folded from the apply join equals the public verb, by a group key and by the row key") {
+    def cells(df: DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
+    val none = array().cast("array<string>")
+    val batches = Seq(
+      batch(("I", 1L, 0L, 1L, "a", Some(1.0)), ("I", 2L, 0L, 2L, "a", Some(2.0)),
+        ("I", 3L, 0L, 3L, null.asInstanceOf[String], Some(3.0)), ("I", 4L, 0L, 4L, "b", None)),
+      // UNCHANGED cells on pre-batch keys (key 1: g and v; key 2: v, as it
+      // moves a -> c), key 3 moves out of the NULL group, a delete of an
+      // unknown key, and a new row with a NULL group and a NULL value
+      batch(("U", 10L, 0L, 1L, null.asInstanceOf[String], None),
+        ("U", 11L, 0L, 2L, "c", None), ("U", 12L, 0L, 3L, "b", Some(5.0)),
+        ("D", 13L, 0L, 99L, "zz", None), ("I", 14L, 0L, 5L, null.asInstanceOf[String], None))
+        .withColumn(Envelope.UnchangedCol,
+          when(col("k") === 1, array(lit("g"), lit("v")))
+            .when(col("k") === 2, array(lit("v"))).otherwise(none)),
+      // a TRUNCATE mid-batch: the change before it dies, those after it apply
+      batch(("U", 20L, 0L, 1L, "x", Some(9.0)), ("T", 21L, 0L, 0L, null, None),
+        ("I", 21L, 1L, 6L, "a", Some(6.0)), ("I", 22L, 0L, 1L, "d", Some(1.5))),
+      // after the truncate: an UNCHANGED value, a delete, a group move
+      batch(("U", 30L, 0L, 1L, "e", None), ("D", 31L, 0L, 6L, null.asInstanceOf[String], None),
+        ("I", 32L, 0L, 7L, "e", Some(0.5)))
+        .withColumn(Envelope.UnchangedCol,
+          when(col("k") === 1, array(lit("v"))).otherwise(none)))
+    Seq(Seq("g"), Seq("k")).foreach { groupKeys =>
+      val viewCols = groupKeys ++ Seq("n_rows", "n_val", "sum_val")
+      var base = emptyBase
+      var public, fused: Option[DataFrame] = None
+      batches.zipWithIndex.foreach { case (b, i) =>
+        val where = s"grouped by ${groupKeys.mkString}, batch $i"
+        val kernel = new Envelope.ApplyKernel(b)
+        val joined = Envelope.applyJoin(base, kernel, Seq("k"))
+        public = Some(ChangeHistory.maintainAggView(public, base, b,
+          Seq("k"), groupKeys, "v"))
+        fused = Some(ChangeHistory.foldAggView(fused, joined, kernel,
+          Seq("k"), groupKeys, "v"))
+        val next = Envelope.appliedState(joined, base.columns.toSeq, Seq("k"))
+        assert(cells(next, Seq("k", "g", "v")) ===
+          cells(Envelope.applyChanges(base, b, Seq("k")), Seq("k", "g", "v")), where)
+        assert(cells(fused.get, viewCols) === cells(public.get, viewCols), where)
+        val recomputed = next.groupBy(groupKeys.map(col): _*)
+          .agg(count(lit(1)).as("n_rows"), count(col("v")).as("n_val"),
+            sum(coalesce(col("v"), lit(0.0))).as("sum_val"))
+        assert(cells(fused.get, viewCols) === cells(recomputed, viewCols), where)
+        base = next
+      }
+      assert(cells(base, Seq("k", "g", "v")) === Seq("1|e|1.5", "7|e|0.5"))
+    }
+  }
+
   test("scale shape: the base never shuffles — touched keys broadcast into it") {
     val b = batch(("U", 10L, 0L, 1L, "a", Some(2.0)))
     val base = batch(("I", 1L, 0L, 1L, "a", Some(1.0))).select("k", "g", "v")

@@ -1,6 +1,17 @@
 package graft.streaming
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -9,7 +20,7 @@ import graft.SparkSpec
   * over the materialized state after every run, survive commit-drop
   * crash replay byte-for-value, and GC must keep exactly the
   * commit-aware survivor set. */
-class IvmIngestSpec extends SparkSpec {
+class IvmIngestSpec extends SparkSpec with AdaptiveSparkPlanHelper with Eventually {
   import spark.implicits._
 
   private val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -43,6 +54,20 @@ class IvmIngestSpec extends SparkSpec {
   private def viewRows(df: org.apache.spark.sql.DataFrame) =
     df.select("g", "n_rows", "n_val", "sum_val")
       .as[(String, Long, Long, Double)].collect().sorted.toSeq
+
+  private def recompute(base: org.apache.spark.sql.DataFrame) =
+    viewRows(base.groupBy("g")
+      .agg(count(lit(1)).as("n_rows"), count(col("v")).as("n_val"),
+        sum(coalesce(col("v"), lit(0.0))).as("sum_val")))
+
+  /** Runs the sink over every input file in `inDir`, one file per batch. */
+  private def runSink(inDir: java.nio.file.Path, store: String, ckpt: String): Unit = {
+    val changes = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).json(inDir.toString)
+    val q = StreamingOps.ivmIngestToStore(changes, store, ckpt,
+      rowKeys = Seq("k"), groupKeys = Seq("g"), valueCol = "v")
+    try q.processAllAvailable() finally q.stop()
+  }
 
   test("ivmIngestToStore: view == recompute after every run; crash replay idempotent; GC commit-aware") {
     val inDir = java.nio.file.Files.createTempDirectory("ivm-in")
@@ -153,5 +178,83 @@ class IvmIngestSpec extends SparkSpec {
     assert(snapshots("view") === ids(2))
     assert(viewRows(StreamingOps.readIvmView(spark, store).get) === wantView)
     assert(baseRows === wantBase)
+  }
+
+  test("a non-empty batch's view write reads the pinned apply join: no window, no base scan") {
+    val inDir = java.nio.file.Files.createTempDirectory("ivm-in")
+    val store = java.nio.file.Files.createTempDirectory("ivm-store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ivm-ck").toString
+    val t0 = System.currentTimeMillis() - 60000
+    writeInput(inDir, "0.json", t0, b0)
+    writeInput(inDir, "1.json", t0 + 30000, b1)
+    // the physical plans of the writes into view/; the stream's session
+    // copies the listeners registered before it starts
+    val viewWrites = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand
+                if c.outputPath.toString.contains(s"/view/${StreamingOps.IngestBatchCol}=") =>
+              viewWrites.add(w.child)
+            case _ =>
+          }
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try runSink(inDir, store, ckpt)
+    finally spark.listenerManager.unregister(listener)
+    eventually(timeout(Span(30, Seconds))) { assert(viewWrites.size === 2) }
+    viewWrites.forEach { plan =>
+      assert(collect(plan) { case w: WindowExec => w }.isEmpty,
+        s"the view write runs no latest-per-key window:\n$plan")
+      val baseScans = collect(plan) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains(s"$store/base")) => f
+      }
+      assert(baseScans.isEmpty, s"the view write reads no base/ snapshot:\n$plan")
+      assert(collect(plan) { case m: InMemoryTableScanExec => m }.nonEmpty,
+        s"the view write reads the persisted apply join:\n$plan")
+    }
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) ===
+      recompute(StreamingOps.readIvmBase(spark, store).get))
+  }
+
+  test("no apply join or pinned batch stays cached, also when a batch throws inside the sink") {
+    val inDir = java.nio.file.Files.createTempDirectory("ivm-in")
+    val store = java.nio.file.Files.createTempDirectory("ivm-store").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ivm-ck").toString
+    val cache = spark.sharedState.cacheManager
+    // what earlier suites left cached is not this sink's
+    spark.catalog.clearCache()
+    val t0 = System.currentTimeMillis() - 60000
+    writeInput(inDir, "0.json", t0, b0)
+    writeInput(inDir, "1.json", t0 + 10000, b1)
+    runSink(inDir, store, ckpt)
+    assert(cache.isEmpty, "two batches that landed")
+
+    // batch 2 fails inside the sink after the apply join is persisted and
+    // the base landed: a plain file where its view directory goes
+    val viewDir = java.nio.file.Paths.get(store, "view")
+    val parked = java.nio.file.Paths.get(store, "view-parked")
+    java.nio.file.Files.move(viewDir, parked)
+    java.nio.file.Files.write(viewDir, Array.emptyByteArray)
+    writeInput(inDir, "2.json", t0 + 20000, Seq(("U", 300L, 8L, 4L, "b", 1.0)))
+    intercept[StreamingQueryException](runSink(inDir, store, ckpt))
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(store, "base", s"${StreamingOps.IngestBatchCol}=2")),
+      "the batch failed after the base write")
+    assert(cache.isEmpty, "a batch that threw")
+
+    // the replay of batch 2 lands both areas
+    java.nio.file.Files.delete(viewDir)
+    java.nio.file.Files.move(parked, viewDir)
+    runSink(inDir, store, ckpt)
+    assert(cache.isEmpty, "the replayed batch")
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) ===
+      Seq(("b", 3L, 3L, 15.0)))
+    assert(viewRows(StreamingOps.readIvmView(spark, store).get) ===
+      recompute(StreamingOps.readIvmBase(spark, store).get))
   }
 }
