@@ -304,30 +304,30 @@ object Envelope {
     * join against current: at scale, `current` should be bucketed/
     * partitioned by the same keys so the join co-locates. */
   def applyChanges(current: DataFrame, typedChanges: DataFrame, keys: Seq[String]): DataFrame =
-    applyChanges(current, new ApplyKernel(typedChanges), keys)
+    appliedState(applyJoin(current, new ApplyKernel(typedChanges), keys),
+      current.columns.toSeq, keys)
 
-  /** [[applyChanges]] over a batch whose kernel the caller already built
-    * (q145 and q149 share one between this and their view verb). */
-  private[graft] def applyChanges(current: DataFrame, batch: ApplyKernel,
-                                  keys: Seq[String]): DataFrame =
-    appliedState(applyJoin(current, batch, keys), current.columns.toSeq, keys)
+  /** `current` as of the batch's start (pruned by its TRUNCATE), each
+    * non-key column renamed `__cur_<c>` and flagged `__in_cur`: the
+    * pre-batch side of [[applyJoin]] and of the view verbs' touched-row
+    * feed ([[graft.operators.ChangeHistory.touchedRows]]). */
+  private[graft] def preBatch(current: DataFrame, batch: ApplyKernel,
+                              keys: Seq[String]): DataFrame = {
+    val nonKey = current.columns.toSeq.filterNot(keys.contains)
+    batch.prune(current).select(
+      keys.map(col) ++ nonKey.map(c => col(c).as(s"__cur_$c")) :+ lit(true).as("__in_cur"): _*)
+  }
 
-  /** The apply join of one batch: `current` as of the batch's start
-    * (pruned by its TRUNCATE), each non-key column renamed `__cur_<c>`
-    * and flagged `__in_cur`, full-outer joined on `keys` with the
-    * batch's latest change per key (`op`, the typed columns and
-    * `__unchanged`). A row with a NULL `op` is one the batch did not
-    * touch. [[appliedState]] lands the post-batch state from it and
-    * [[graft.operators.ChangeHistory.foldAggView]] folds the aggregate
-    * view from its touched rows, so a caller that needs both persists
+  /** The apply join of one batch: the [[preBatch]] rows full-outer
+    * joined on `keys` with the batch's latest change per key (`op`, the
+    * typed columns and `__unchanged`). A row with a NULL `op` is one the
+    * batch did not touch. [[appliedState]] lands the post-batch state
+    * from it and every view verb of [[graft.operators.ChangeHistory]]
+    * folds from its touched rows, so a caller that needs both persists
     * it once. */
   private[graft] def applyJoin(current: DataFrame, batch: ApplyKernel,
-                               keys: Seq[String]): DataFrame = {
-    val nonKey = current.columns.toSeq.filterNot(keys.contains)
-    val cur = batch.prune(current).select(
-      keys.map(col) ++ nonKey.map(c => col(c).as(s"__cur_$c")) :+ lit(true).as("__in_cur"): _*)
-    cur.join(batch.latest(keys), keys, "full_outer")
-  }
+                               keys: Seq[String]): DataFrame =
+    preBatch(current, batch, keys).join(batch.latest(keys), keys, "full_outer")
 
   /** The post-batch state of `dataCols` from an [[applyJoin]]:
     * untouched rows pass through, a final D drops, I/U take
@@ -344,7 +344,7 @@ object Envelope {
   /** Non-key column `c` of a touched row of an [[applyJoin]] as the
     * batch leaves it: a cell the change flags UNCHANGED/TOAST keeps
     * the pre-batch value, any other takes the change's. The one
-    * resolution the applied state and the aggregate view share. */
+    * resolution the applied state and every view verb share. */
   private[graft] def newValue(joined: DataFrame, c: String): Column =
     if (joined.columns.contains(UnchangedCol))
       when(array_contains(col(UnchangedCol), c) && col("__in_cur"), col(s"__cur_$c"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.cdc.Envelope
 import graft.cdc.Envelope.ApplyKernel
 
 /** Type-2 slowly-changing-dimension (SCD2) history from a CDC change
@@ -134,11 +135,10 @@ object ChangeHistory {
     * groups (retract old group, add new), and groups retracted to zero
     * rows vanish.
     *
-    * This verb feeds [[foldAggView]] the batch's latest change per key
-    * left-joined with the pre-batch rows of the touched keys. A caller
-    * that also lands the post-batch base (the streaming sink, q143)
-    * computes the full [[graft.cdc.Envelope.applyJoin]] once and folds
-    * the view from it instead.
+    * This verb folds the batch's [[touchedRows]] with [[foldAggView]].
+    * A caller that also lands the post-batch base (the streaming sink,
+    * q143) computes the full [[graft.cdc.Envelope.applyJoin]] once and
+    * folds the view from it instead.
     *
     * Scale shape: one key-window over the BATCH (batch-sized shuffle);
     * the base pays ONE inner join against the batch's touched keys
@@ -150,17 +150,53 @@ object ChangeHistory {
                       typedChanges: DataFrame, rowKeys: Seq[String],
                       groupKeys: Seq[String], valueCol: String): DataFrame = {
     val batch = new ApplyKernel(typedChanges)
-    val latest = batch.latest(rowKeys)
-    // pre-batch rows of the touched keys, in the apply join's shape:
-    // the base never shuffles
-    val touched = latest.select(rowKeys.map(col): _*)
-    val oldRows = batch.prune(base).join(keySide(touched, batch.rows), rowKeys)
-      .select(rowKeys.map(col) ++
-        (groupKeys :+ valueCol).distinct.filterNot(rowKeys.contains)
-          .map(c => col(c).as(s"__cur_$c")) :+ lit(true).as("__in_cur"): _*)
-    foldAggView(view, latest.join(oldRows, rowKeys, "left"), batch,
-      rowKeys, groupKeys, valueCol)
+    foldAggView(view, touchedRows(base, batch, rowKeys), batch, rowKeys, groupKeys, valueCol)
   }
+
+  /** The rows one batch touches in the [[graft.cdc.Envelope.applyJoin]]
+    * shape: its latest change per key left-joined with the
+    * [[graft.cdc.Envelope.preBatch]] rows of those keys, which are a
+    * [[keySide]], so the base never shuffles. The public view verbs read
+    * the pre-batch state only through this feed; the full apply join's
+    * rows with a non-null `op` are the same rows. */
+  private[graft] def touchedRows(base: DataFrame, batch: ApplyKernel,
+                                 rowKeys: Seq[String]): DataFrame = {
+    val latest = batch.latest(rowKeys)
+    latest.join(Envelope.preBatch(base, batch, rowKeys)
+      .join(keySide(latest.select(rowKeys.map(col): _*), batch.rows), rowKeys),
+      rowKeys, "left")
+  }
+
+  /** Column `c` of a touched row before the batch; a row key is one
+    * column on both sides of the join. */
+  private def before(c: String, rowKeys: Seq[String]): Column =
+    if (rowKeys.contains(c)) col(c) else col(s"__cur_$c")
+
+  /** Column `c` of a touched row after the batch
+    * ([[graft.cdc.Envelope.newValue]], the applied state's resolution). */
+  private def after(touched: DataFrame, c: String, rowKeys: Seq[String]): Column =
+    if (rowKeys.contains(c)) col(c) else Envelope.newValue(touched, c)
+
+  /** The one rule every view verb reads a batch by: each touched row
+    * (`op` non-null) departs as `side(before, -1)` where it existed
+    * before the batch and arrives as `side(after, 1)` unless its final
+    * op is D, exploded row-locally. */
+  private def contributions(touched: DataFrame, rowKeys: Seq[String])(
+      side: (String => Column, Long) => Column): DataFrame =
+    touched
+      .filter(col("op").isNotNull)
+      .select(explode(array(
+        when(col("__in_cur").isNotNull, side(before(_, rowKeys), -1L)),
+        when(col("op") =!= "D", side(after(touched, _, rowKeys), 1L)))).as("__c"))
+      .filter(col("__c").isNotNull)
+      .select(col("__c.*"))
+
+  /** The `keys` values a batch may change: each touched row's departing
+    * and arriving value. Recomputing an unchanged group is
+    * value-idempotent, so a superset is safe. */
+  private def touchedGroups(touched: DataFrame, rowKeys: Seq[String],
+                            keys: Seq[String]): DataFrame =
+    contributions(touched, rowKeys)((v, _) => struct(keys.map(k => v(k).as(k)): _*))
 
   /** The view [[maintainAggView]] maintains, folded from the rows of
     * `joined` the batch touched (`op` non-null). `joined` has the
@@ -174,34 +210,24 @@ object ChangeHistory {
   private[graft] def foldAggView(view: Option[DataFrame], joined: DataFrame,
                                  batch: ApplyKernel, rowKeys: Seq[String],
                                  groupKeys: Seq[String], valueCol: String): DataFrame = {
-    // a row key is one column on both sides of the join
-    def old(c: String): Column = if (rowKeys.contains(c)) col(c) else col(s"__cur_$c")
     // the pre-batch columns: their types are the state's
-    val state = joined.select((groupKeys :+ valueCol).distinct.map(c => old(c).as(c)): _*)
+    val state = joined.select((groupKeys :+ valueCol).distinct.map(c =>
+      before(c, rowKeys).as(c)): _*)
     val sumType: DataType = state.schema(valueCol).dataType match {
       case d: DecimalType => DecimalType(38, d.scale)
       case _: ByteType | _: ShortType | _: IntegerType | _: LongType => LongType
       case _ => DoubleType
     }
-    def now(c: String): Column =
-      if (rowKeys.contains(c)) col(c) else graft.cdc.Envelope.newValue(joined, c)
     // shared struct shape so array() unifies; the sign rides the row
     // count, the value count and the value mass
-    def contribution(sign: Long, g: Seq[Column], v: Column): Column =
-      struct((g.zip(groupKeys).map { case (c, n) => c.as(n) } :+
+    val contrib = contributions(joined, rowKeys) { (v, sign) =>
+      val x = v(valueCol)
+      struct((groupKeys.map(g => v(g).as(g)) :+
         lit(sign).as("n_rows") :+
-        when(v.isNotNull, lit(sign)).otherwise(lit(0L)).as("n_val") :+
-        coalesce(v.cast(sumType) * lit(sign), lit(0).cast(sumType)).cast(sumType)
+        when(x.isNotNull, lit(sign)).otherwise(lit(0L)).as("n_val") :+
+        coalesce(x.cast(sumType) * lit(sign), lit(0).cast(sumType)).cast(sumType)
           .as("sum_val")): _*)
-    val retract = when(col("__in_cur").isNotNull,
-      contribution(-1L, groupKeys.map(old), old(valueCol)))
-    val insert = when(col("op") =!= "D",
-      contribution(1L, groupKeys.map(now), now(valueCol)))
-    val contrib = joined
-      .filter(col("op").isNotNull)
-      .select(explode(array(retract, insert)).as("__c"))
-      .filter(col("__c").isNotNull)
-      .select(col("__c.*"))
+    }
     val prior = batch.prune(view.getOrElse(emptyView(state, groupKeys,
       StructField("n_rows", LongType), StructField("n_val", LongType),
       StructField("sum_val", sumType))))
@@ -222,16 +248,14 @@ object ChangeHistory {
     * retracting the current extremum needs the base — so the
     * maintenance rule is RECOMPUTE ONLY THE AFFECTED GROUPS): groups
     * untouched by the batch keep their rows verbatim (never read,
-    * never recomputed); groups the batch touches — a touched key's OLD
-    * group or its NEW one — recompute from the post-batch base through
-    * one semi join on the batch-sized affected-group list (a
-    * [[keySide]]; with the base partitioned/bucketed by
-    * the group key this prunes to the affected partitions at any
-    * scale). `newBase` is the [[graft.cdc.Envelope.applyChanges]]
-    * output for the SAME batch — the q143 caller pairing. The view
-    * carries per group: n_rows, min_val, max_val (SQL semantics: NULLs
-    * ignored, all-NULL group → NULL extrema); groups whose last row
-    * disappears vanish with the recompute.
+    * never recomputed); groups the batch touches recompute from the
+    * post-batch base through one semi join on the batch-sized
+    * affected-group list (a [[keySide]]; with the base
+    * partitioned/bucketed by the group key this prunes to the affected
+    * partitions at any scale). The view carries per group: n_rows,
+    * min_val, max_val (SQL semantics: NULLs ignored, all-NULL group →
+    * NULL extrema); groups whose last row disappears vanish with the
+    * recompute.
     *
     * The uniform recompute-affected rule is deliberate: an
     * insert-only-group fast path (extrema are monotone under inserts)
@@ -239,24 +263,23 @@ object ChangeHistory {
     * semantics; the affected-group set is batch-bounded either way.
     *
     * `base` is the PRE-batch state and `newBase` the applyChanges
-    * output for the same batch — the pair every q143-style caller
-    * already holds. Both are needed for correctness, not convenience:
-    * a DELETE under replica identity DEFAULT carries only key columns
-    * (its typedView group column is null), and a group-moving UPDATE
-    * carries only the NEW group — the DEPARTED group is recoverable
-    * only from the pre-batch rows of the touched keys. Recomputing a
-    * group that did not actually change is value-idempotent, so the
-    * affected set only has to be a superset. */
+    * output for the same batch. A touched row's group is affected
+    * before the batch (the DEPARTED group: a replica-identity-DEFAULT
+    * DELETE carries only key columns, a group-moving UPDATE only the new
+    * group) and after it unless its final op is D, with the aggregate
+    * view's resolutions, read from the batch's [[touchedRows]]. */
   def maintainMinMaxView(view: Option[DataFrame], base: DataFrame,
                          newBase: DataFrame, typedChanges: DataFrame,
                          rowKeys: Seq[String], groupKeys: Seq[String],
-                         valueCol: String): DataFrame =
-    maintainMinMaxView(view, base, newBase, new ApplyKernel(typedChanges),
+                         valueCol: String): DataFrame = {
+    val batch = new ApplyKernel(typedChanges)
+    maintainMinMaxView(view, touchedRows(base, batch, rowKeys), newBase, batch,
       rowKeys, groupKeys, valueCol)
+  }
 
-  /** [[maintainMinMaxView]] over a batch whose kernel the caller already
-    * built (q145 shares one with its applyChanges). */
-  private[graft] def maintainMinMaxView(view: Option[DataFrame], base: DataFrame,
+  /** [[maintainMinMaxView]] folded from a batch's touched rows (the
+    * [[graft.cdc.Envelope.applyJoin]] shape; NULL-`op` rows ignored). */
+  private[graft] def maintainMinMaxView(view: Option[DataFrame], touched: DataFrame,
                                         newBase: DataFrame, batch: ApplyKernel,
                                         rowKeys: Seq[String], groupKeys: Seq[String],
                                         valueCol: String): DataFrame = {
@@ -266,10 +289,7 @@ object ChangeHistory {
     val prior = batch.prune(view.getOrElse(emptyView(newBase, groupKeys,
       StructField("n_rows", LongType),
       StructField("min_val", vType), StructField("max_val", vType))))
-    // TOAST-unchanged group columns contribute a harmless extra
-    // NULL-group recompute
-    val affected = keySide(
-      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct(),
+    val affected = keySide(touchedGroups(touched, rowKeys, groupKeys).distinct(),
       AffectedPerRow * batch.rows)
     // recompute ONLY the affected groups from the post-batch base
     val recomputed = restrict(newBase, affected, groupKeys)
@@ -289,19 +309,19 @@ object ChangeHistory {
     * carries (groupKeys..., rank 1..k, rowKeys..., orderCol) with rank
     * by orderCol DESC, ties to the low row key — deterministic, and
     * exactly mirrorable as a ROW_NUMBER window (the q149 oracle).
-    * `base`/`newBase` are the pre/post applyChanges pair, for the same
-    * reason as min/max: the DEPARTED group of a key-only delete or a
-    * group-moving update is only in the pre-batch rows. */
+    * `base`/`newBase` are the pre/post applyChanges pair; the affected
+    * groups are min/max's. */
   def maintainTopKView(view: Option[DataFrame], base: DataFrame,
                        newBase: DataFrame, typedChanges: DataFrame,
                        rowKeys: Seq[String], groupKeys: Seq[String],
-                       orderCol: String, k: Int): DataFrame =
-    maintainTopKView(view, base, newBase, new ApplyKernel(typedChanges),
+                       orderCol: String, k: Int): DataFrame = {
+    val batch = new ApplyKernel(typedChanges)
+    maintainTopKView(view, touchedRows(base, batch, rowKeys), newBase, batch,
       rowKeys, groupKeys, orderCol, k)
+  }
 
-  /** [[maintainTopKView]] over a batch whose kernel the caller already
-    * built (q149 shares one with its applyChanges). */
-  private[graft] def maintainTopKView(view: Option[DataFrame], base: DataFrame,
+  /** [[maintainTopKView]] folded from a batch's touched rows. */
+  private[graft] def maintainTopKView(view: Option[DataFrame], touched: DataFrame,
                                       newBase: DataFrame, batch: ApplyKernel,
                                       rowKeys: Seq[String], groupKeys: Seq[String],
                                       orderCol: String, k: Int): DataFrame = {
@@ -310,8 +330,7 @@ object ChangeHistory {
       (StructField("rank", IntegerType) +:
         rowKeys.map(rk => newBase.schema(rk).copy(name = rk)) :+
         newBase.schema(orderCol).copy(name = orderCol)): _*)))
-    val affected = keySide(
-      affectedGroups(batch, batch.prune(base), rowKeys, groupKeys).distinct(),
+    val affected = keySide(touchedGroups(touched, rowKeys, groupKeys).distinct(),
       AffectedPerRow * batch.rows)
     val w = Window.partitionBy(groupKeys.map(col): _*)
       .orderBy(col(orderCol).desc +: rowKeys.map(col(_).asc): _*)
@@ -330,21 +349,27 @@ object ChangeHistory {
   final case class IvmSide(base: DataFrame, newBase: DataFrame,
                            typedChanges: DataFrame, rowKeys: Seq[String])
 
+  /** One table's batch as the folds read it: its touched rows (the
+    * [[touchedRows]] feed or a full apply join), post-batch state,
+    * kernel and row keys. */
+  private[graft] final case class FedSide(touched: DataFrame, newBase: DataFrame,
+                                          batch: ApplyKernel, rowKeys: Seq[String])
+
   /** Incremental JOIN-view maintenance — the delta-join member of the
     * IVM family (Blakeley, Larson & Tompa 1986, "Efficiently Updating
     * Materialized Views"): a denormalized inner-join view V = L ⋈ R
     * stays current under CDC batches on EITHER side without ever
     * re-joining the untouched keys. The same affected-superset rule as
     * [[maintainMinMaxView]], lifted to join keys: a join key is
-    * affected if a batch row carries it (the arriving side) or a
-    * touched row held it pre-batch (the departing side — a
-    * replica-identity-DEFAULT DELETE and a key-moving UPDATE carry
-    * nothing else); recomputing an unchanged key is value-idempotent,
-    * so the superset is safe. Untouched view rows pass through an anti
-    * join verbatim; affected keys re-join from the two POST-batch
-    * states, each restricted by one broadcast semi join (bases
-    * bucketed on the join key prune to the affected partitions at any
-    * scale). A TRUNCATE on either side empties the pass-through and
+    * affected if a touched row held it before the batch (the departing
+    * side — a replica-identity-DEFAULT DELETE and a key-moving UPDATE
+    * carry nothing else) or holds it after (the arriving side), read
+    * from each side's [[touchedRows]]; recomputing an unchanged key is
+    * value-idempotent, so the superset is safe. Untouched view rows pass
+    * through an anti join verbatim; affected keys re-join from the two
+    * POST-batch states, each restricted by one broadcast semi join
+    * (bases bucketed on the join key prune to the affected partitions at
+    * any scale). A TRUNCATE on either side empties the pass-through and
     * recomputes from that side's full new key set — all distributed;
     * only the side's truncate flag, resolved by its [[ApplyKernel]],
     * steers the plan.
@@ -355,50 +380,34 @@ object ChangeHistory {
     * every batch — the q146 oracle and JoinViewSpec assert it. */
   def maintainJoinView(view: Option[DataFrame], left: IvmSide, right: IvmSide,
                        joinKeys: Seq[String]): DataFrame = {
-    // each side's kernel resolves, in its one driver job, whether the
-    // side truncates (control flow: the truncated/untouched split) and
-    // how many rows it carries (the affected-key bound)
-    def sidePieces(s: IvmSide): (DataFrame, Boolean, Long) = {
+    def fed(s: IvmSide): FedSide = {
       val batch = new ApplyKernel(s.typedChanges)
-      // truncated: every pre-existing join row dies; every key of the
-      // side's new state recomputes, so the batch no longer bounds them
-      if (batch.truncated) (s.newBase.select(joinKeys.map(col): _*), true, Long.MaxValue)
-      else (affectedGroups(batch, s.base, s.rowKeys, joinKeys), false,
-        AffectedPerRow * batch.rows)
+      FedSide(touchedRows(s.base, batch, s.rowKeys), s.newBase, batch, s.rowKeys)
     }
-    val (affL, truncL, boundL) = sidePieces(left)
-    val (affR, truncR, boundR) = sidePieces(right)
-    val bound = if (truncL || truncR) Long.MaxValue else boundL + boundR
-    val affected = keySide(affL.unionByName(affR).distinct(), bound)
+    maintainJoinView(view, fed(left), fed(right), joinKeys)
+  }
+
+  /** [[maintainJoinView]] folded from each side's touched rows. */
+  private[graft] def maintainJoinView(view: Option[DataFrame], left: FedSide,
+                                      right: FedSide, joinKeys: Seq[String]): DataFrame = {
+    // each side's kernel has resolved whether the side truncates
+    // (control flow: the truncated/untouched split) and how many rows
+    // it carries (the affected-key bound). Truncated: every pre-existing
+    // join row dies, and every key of the side's new state recomputes.
+    def affectedOf(s: FedSide): DataFrame =
+      if (s.batch.truncated) s.newBase.select(joinKeys.map(col): _*)
+      else touchedGroups(s.touched, s.rowKeys, joinKeys)
+    val truncated = left.batch.truncated || right.batch.truncated
+    val bound =
+      if (truncated) Long.MaxValue else AffectedPerRow * (left.batch.rows + right.batch.rows)
+    val affected = keySide(affectedOf(left).unionByName(affectedOf(right)).distinct(), bound)
     val recomputed = restrict(left.newBase, affected, joinKeys)
       .join(restrict(right.newBase, affected, joinKeys), joinKeys)
     val prior = view.getOrElse(recomputed.limit(0))
     // a TRUNCATE on either side invalidates every pre-existing join row
-    replaceAffected(if (truncL || truncR) prior.limit(0) else prior,
-      affected, joinKeys, recomputed)
+    replaceAffected(if (truncated) prior.limit(0) else prior, affected, joinKeys, recomputed)
   }
 
-  /** Incremental DISTINCT-COUNT view via persisted mergeable HLL
-    * sketches — the Druid/Pinot sketch-rollup pattern: per group the
-    * view stores a DataSketches HLL sketch (BINARY, fixed size) plus
-    * its estimate, and each change batch folds in with ONE sketch
-    * aggregation and a group-sized union merge. At 100 TB this is what
-    * makes "unique users per source, ever" a dashboard read instead of
-    * a corpus scan: sketch union yields a valid
-    * sketch of the union with the SAME error bounds — though not
-    * bit-identical to direct building (the union path targets a
-    * different internal HLL representation, so estimates can differ
-    * within the rsd at dense cardinalities; the q144 contract bounds
-    * chained-vs-one-shot at 2%).
-    *
-    * Semantics are DISTINCT-EVER (the set-union view): I/U/R rows
-    * contribute their (group, value); DELETE and TRUNCATE do not
-    * retract — an HLL can only grow, and "uniques ever seen" is the
-    * metric these rollups track (a retractable distinct needs the q12
-    * exact path or a recompute; that asymmetry is fundamental, not an
-    * implementation gap). NULL values contribute nothing; a NULL group
-    * key is a group like any other. Unlike [[maintainAggView]] this
-    * view is SELF-maintainable — no base table read at all. */
   /** Incremental QUANTILE view via persisted mergeable GK sketches —
     * the q144 pattern with [[QuantileSketch]] as the per-group state
     * (r16; VERDICT r15 next #5): "p95 latency per source, maintained"
@@ -434,6 +443,27 @@ object ChangeHistory {
         quantiles.map { case (q, n) => QuantileSketch.quantileOf(q)(merged).as(n) }): _*)
   }
 
+  /** Incremental DISTINCT-COUNT view via persisted mergeable HLL
+    * sketches — the Druid/Pinot sketch-rollup pattern: per group the
+    * view stores a DataSketches HLL sketch (BINARY, fixed size) plus
+    * its estimate, and each change batch folds in with ONE sketch
+    * aggregation and a group-sized union merge. At 100 TB this is what
+    * makes "unique users per source, ever" a dashboard read instead of
+    * a corpus scan: sketch union yields a valid
+    * sketch of the union with the SAME error bounds — though not
+    * bit-identical to direct building (the union path targets a
+    * different internal HLL representation, so estimates can differ
+    * within the rsd at dense cardinalities; the q144 contract bounds
+    * chained-vs-one-shot at 2%).
+    *
+    * Semantics are DISTINCT-EVER (the set-union view): I/U/R rows
+    * contribute their (group, value); DELETE and TRUNCATE do not
+    * retract — an HLL can only grow, and "uniques ever seen" is the
+    * metric these rollups track (a retractable distinct needs the q12
+    * exact path or a recompute; that asymmetry is fundamental, not an
+    * implementation gap). NULL values contribute nothing; a NULL group
+    * key is a group like any other. Unlike [[maintainAggView]] this
+    * view is SELF-maintainable — no base table read at all. */
   def maintainDistinctView(view: Option[DataFrame], typedChanges: DataFrame,
                            groupKeys: Seq[String], valueCol: String,
                            lgConfigK: Int = 12): DataFrame = {
@@ -490,18 +520,6 @@ object ChangeHistory {
                            merged: Column*): DataFrame = {
     prior.alias("v").join(delta.alias("d"), sameKeys("v", "d", groupKeys), "full_outer")
       .select(groupKeys.map(g => coalesce(col(s"v.$g"), col(s"d.$g")).as(g)) ++ merged: _*)
-  }
-
-  /** The groups a batch may change: those its surviving changes carry
-    * (the arriving side) and those its touched keys held in `base` (the
-    * departing side — a replica-identity-DEFAULT DELETE and a
-    * group-moving UPDATE carry nothing else). Recomputing an unchanged
-    * group is value-idempotent, so this superset is safe. */
-  private def affectedGroups(batch: ApplyKernel, base: DataFrame, rowKeys: Seq[String],
-                             groupKeys: Seq[String]): DataFrame = {
-    val touched = batch.changes.select(rowKeys.map(col): _*).distinct()
-    batch.changes.select(groupKeys.map(col): _*).unionByName(
-      base.join(keySide(touched, batch.rows), rowKeys).select(groupKeys.map(col): _*))
   }
 
   /** The rows of `df` in the `affected` groups (null-safe semi join). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,6 +38,12 @@ import org.apache.spark.sql.functions._
   * comparison engine-exact (the DuckDB oracle mirrors each stage and
   * the manifest compares as INTEGERS — no float tolerance anywhere). */
 object Curation {
+
+  /** `df` with its row count observed into `o` as metric `n`: a stage
+    * count that rides whichever job materializes `df`, with no job of
+    * its own. */
+  private[graft] def counted(df: DataFrame, o: Observation): DataFrame =
+    df.observe(o, count(lit(1)).as("n"))
 
   /** Thresholds; defaults match q68's oracle. `broadcastableIds` bounds
     * the drop-set dispatch (the `knnJoinAuto` pattern); `driverPairs`
@@ -382,11 +388,8 @@ object Curation {
              blocklistKey: String = "source"): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.Observation
 
     val Seq(oB, o0, o1, o2, o3, o4, o5) = Seq.fill(7)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
 
     // -- optional stage 0 (C4/RefinedWeb §3.1): the explicit domain
     // list gate, FIRST — a blocked domain costs a join probe, never a

@@ -103,7 +103,14 @@ object Dsir {
       .repartitionByRange(col("score").desc, col("doc_id"))
       .sortWithinPartitions(col("score").desc, col("doc_id"))
       .rdd
-    // tiny count pass (one long per partition) → prefix offsets
+    // tiny count pass (one long per partition) → prefix offsets. The
+    // offsets are valid only because both passes below run over this
+    // ONE `sorted` RDD: its range exchange is planned once, so the
+    // boundaries are sampled once and the shuffle output is written
+    // once, and both jobs read that output (neither re-runs the map
+    // side), so partition pid holds the same rows in the same order in
+    // both. A rank pass derived from `scored` again would plan a second
+    // exchange whose partition layout nothing ties to these offsets.
     val counts = sorted
       .mapPartitionsWithIndex { (pid, it) => Iterator.single(pid -> it.size.toLong) }
       .collect().toMap

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
-import graft.operators.{Dedup, Similarity, TextAnalysis => TA, Windows}
+import graft.cdc.Envelope
+import graft.operators.{ChangeHistory, Dedup, Similarity, Storage, TextAnalysis => TA, Windows}
+import graft.operators.ChangeHistory.FedSide
 
 /** Training-data-pipeline query surface (dedup / similarity / text
   * analysis) over the `documents` and `embeddings` tables — the
@@ -926,10 +928,11 @@ object PipelineQueries {
         "scores_exact", "append_encoded", "deterministic")
   }
 
-  /** The shared q143/q145 change-stream synthesis: three deterministic
-    * CDC batches over orders (insert all → update %7 doubling the
-    * price and moving status to 'U' + delete %5∧¬%7 → re-insert
-    * %10∧¬%7 at price+1000 under 'R'). Returns (batches, emptyBase). */
+  /** The shared q143/q145/q146/q149 change-stream synthesis: three
+    * deterministic CDC batches over orders (insert all → update %7
+    * doubling the price and moving status to 'U' + delete %5∧¬%7 →
+    * re-insert %10∧¬%7 at price+1000 under 'R'). Returns (batches,
+    * emptyBase). */
   private def ivmOrderBatches(spark: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
     val o = t(spark, dir, "orders")
     val key = col("o_orderkey")
@@ -949,6 +952,35 @@ object PipelineQueries {
       b0.select("o_orderkey", "c_custkey", "o_orderstatus", "o_price").limit(0))
   }
 
+  /** One IVM round of one table: the batch's one kernel, its apply join
+    * against `base` and the post-batch state landed from it, both
+    * pinned in memory (persist, NOT eager localCheckpoint — measured 2x
+    * faster): the join feeds the state and the view, the state the next
+    * round and the view's recompute. Production materializes per-batch
+    * snapshots through the STORE instead (ivmIngestToStore). */
+  private def ivmStep(base: DataFrame, batch: DataFrame, keys: Seq[String]): FedSide = {
+    val kernel = new Envelope.ApplyKernel(batch)
+    val joined = Storage.track(Envelope.applyJoin(base, kernel, keys).persist())
+    FedSide(joined, Storage.track(
+      Envelope.appliedState(joined, base.columns.toSeq, keys).persist()), kernel, keys)
+  }
+
+  /** The q143/q145/q149 rounds: each [[ivmOrderBatches]] batch takes one
+    * [[ivmStep]] on `o_orderkey` and `fold` folds the round's view from
+    * it. Returns the last round's view. */
+  private def ivmRounds(spark: SparkSession, dir: String)(
+      fold: (Option[DataFrame], FedSide) => DataFrame): DataFrame = {
+    val (batches, empty) = ivmOrderBatches(spark, dir)
+    var base = empty
+    var view: Option[DataFrame] = None
+    batches.foreach { batch =>
+      val step = ivmStep(base, batch, Seq("o_orderkey"))
+      view = Some(Storage.track(fold(view, step).persist()))
+      base = step.newBase
+    }
+    view.get
+  }
+
   /** q143: incremental aggregate-view maintenance from CDC batches
     * (r15 second session; Gupta & Mumick 1995 — classic IVM for the
     * self-maintainable COUNT/SUM aggregates). A per-status order-value
@@ -958,42 +990,23 @@ object PipelineQueries {
     *   batch 1: UPDATE keys %7==0 (price doubles, status moves to 'U'
     *            — a cross-GROUP move), DELETE keys %5==0 ∧ %7≠0;
     *   batch 2: re-INSERT keys %10==0 ∧ %7≠0 (price+1000, status 'R').
-    * Each round computes the batch's apply join against the base once
-    * (`Envelope.applyJoin`) and takes both outputs from it: the base
-    * (`Envelope.appliedState`) and the view
-    * (`ChangeHistory.foldAggView`) — the ivmIngestToStore sink
-    * pairing. The oracle computes the NET final state directly: the
-    * maintained view must equal the from-scratch aggregate row-for-row
-    * (exact DECIMAL sums — hard oracle). Scale shape: the view folds
-    * only the rows the batch touched, deltas aggregate at batch size,
-    * the view merges at group cardinality. */
+    * Each round's [[ivmStep]] computes the batch's apply join against
+    * the base once and lands the base from it; the view folds from the
+    * same join (`ChangeHistory.foldAggView`) — the ivmIngestToStore
+    * sink pairing. The oracle computes the NET final state directly:
+    * the maintained view must equal the from-scratch aggregate
+    * row-for-row (exact DECIMAL sums — hard oracle). Scale shape: the
+    * view folds only the rows the batch touched, deltas aggregate at
+    * batch size, the view merges at group cardinality. */
   def q143IvmAgg(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.Envelope
-    import graft.operators.ChangeHistory
-    val (batches, empty) = ivmOrderBatches(spark, dir)
-    // in-memory pin per round (persist, NOT eager localCheckpoint —
-    // measured 2x faster): each round's base feeds the next round;
-    // production materializes per-batch snapshots through the STORE
-    // instead (ivmIngestToStore). One apply kernel and one pinned apply
-    // join per round serve both outputs, so the batch's stats aggregate,
-    // its latest-per-key window and the join against the base run once.
-    val keys = Seq("o_orderkey")
-    var base = empty
-    var view: Option[DataFrame] = None
-    batches.foreach { batch =>
-      val kernel = new Envelope.ApplyKernel(batch)
-      val joined = graft.operators.Storage.track(
-        Envelope.applyJoin(base, kernel, keys).persist())
-      view = Some(graft.operators.Storage.track(
-        ChangeHistory.foldAggView(view, joined, kernel, keys,
-          groupKeys = Seq("o_orderstatus"), valueCol = "o_price").persist()))
-      base = graft.operators.Storage.track(
-        Envelope.appliedState(joined, base.columns.toSeq, keys).persist())
+    val view = ivmRounds(spark, dir) { (view, s) =>
+      ChangeHistory.foldAggView(view, s.touched, s.batch, s.rowKeys,
+        groupKeys = Seq("o_orderstatus"), valueCol = "o_price")
     }
     // decimal arithmetic stays internal; the export is the exact
     // DECIMAL(18,2)'s nearest double — identical in both engines (the
     // Verify shape-guard convention)
-    view.get
+    view
       .select(col("o_orderstatus"), col("n_rows"), col("n_val"),
         col("sum_val").cast("decimal(18,2)").cast("double").as("sum_val"))
       .orderBy("o_orderstatus")
@@ -1003,64 +1016,37 @@ object PipelineQueries {
     * of the IVM family (Gupta, Mumick & Subrahmanian 1993): deleting
     * the current extremum cannot be fixed from the delta, so affected
     * groups — and ONLY affected groups — recompute from the post-batch
-    * base (`ChangeHistory.maintainMinMaxView`; the batch-1 deletes and
-    * the %7 status moves make both retraction paths bite, including
-    * groups whose extremum leaves). Same three-batch synthesis as
-    * q143; the oracle computes the net final MIN/MAX from scratch. */
-  def q145IvmMinMax(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.Envelope
-    import graft.operators.ChangeHistory
-    val (batches, empty) = ivmOrderBatches(spark, dir)
-    // in-memory pin and one apply kernel per round — the q143 rationale
-    var base = empty
-    var view: Option[DataFrame] = None
-    batches.foreach { batch =>
-      val kernel = new Envelope.ApplyKernel(batch)
-      val newBase = graft.operators.Storage.track(
-        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
-      view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainMinMaxView(view, base, newBase, kernel,
-          rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
-          valueCol = "o_price").persist()))
-      base = newBase
+    * base (`ChangeHistory.maintainMinMaxView`, the affected groups read
+    * from the round's apply join; the batch-1 deletes and the %7
+    * status moves make both retraction paths bite, including groups
+    * whose extremum leaves). Same three-batch rounds as q143; the
+    * oracle computes the net final MIN/MAX from scratch. */
+  def q145IvmMinMax(spark: SparkSession, dir: String): DataFrame =
+    ivmRounds(spark, dir) { (view, s) =>
+      ChangeHistory.maintainMinMaxView(view, s.touched, s.newBase, s.batch, s.rowKeys,
+        groupKeys = Seq("o_orderstatus"), valueCol = "o_price")
     }
-    view.get
       .select(col("o_orderstatus"), col("n_rows"),
         col("min_val").cast("double").as("min_val"),
         col("max_val").cast("double").as("max_val"))
       .orderBy("o_orderstatus")
-  }
 
   /** q149: incremental TOP-K view — the ranked dashboard pattern ("top
     * 3 orders per status, maintained"), kept current by the q145
     * affected-group-recompute rule (`ChangeHistory.maintainTopKView`;
     * a top-k is not self-maintainable under deletes — evicting a top
-    * row needs the base's next-best). Same three-batch synthesis; the
+    * row needs the base's next-best). Same three-batch rounds; the
     * batch-1 deletes evict top rows, the %7 updates double prices INTO
     * the top set and move groups. Oracle: ROW_NUMBER over the net
     * state. */
-  def q149IvmTopK(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.Envelope
-    import graft.operators.ChangeHistory
-    val (batches, empty) = ivmOrderBatches(spark, dir)
-    // one apply kernel per round — the q143 rationale
-    var base = empty
-    var view: Option[DataFrame] = None
-    batches.foreach { batch =>
-      val kernel = new Envelope.ApplyKernel(batch)
-      val newBase = graft.operators.Storage.track(
-        Envelope.applyChanges(base, kernel, Seq("o_orderkey")).persist())
-      view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainTopKView(view, base, newBase, kernel,
-          rowKeys = Seq("o_orderkey"), groupKeys = Seq("o_orderstatus"),
-          orderCol = "o_price", k = 3).persist()))
-      base = newBase
+  def q149IvmTopK(spark: SparkSession, dir: String): DataFrame =
+    ivmRounds(spark, dir) { (view, s) =>
+      ChangeHistory.maintainTopKView(view, s.touched, s.newBase, s.batch, s.rowKeys,
+        groupKeys = Seq("o_orderstatus"), orderCol = "o_price", k = 3)
     }
-    view.get
       .select(col("o_orderstatus"), col("rank"), col("o_orderkey"),
         col("o_price").cast("double").as("o_price"))
       .orderBy("o_orderstatus", "rank")
-  }
 
   /** q146: incremental JOIN-view maintenance from CDC batches on BOTH
     * sides (Blakeley, Larson & Tompa 1986 — the delta-join member of
@@ -1068,13 +1054,12 @@ object PipelineQueries {
     * orders ⋈ customer enrichment view stays current while orders churn
     * through the q143 three-batch synthesis AND customers churn too
     * (acctbal updates on %6, deletes on %9∧¬%6 — a right-side delete
-    * retracts every joined order row). Only batch-affected join keys
-    * ever re-join; untouched view rows pass through an anti join. The
-    * oracle joins the two NET final states from scratch. */
+    * retracts every joined order row). Each side takes one [[ivmStep]]
+    * per round, so each side builds one kernel and one apply join, and
+    * the affected join keys read from that join. Only batch-affected
+    * join keys ever re-join; untouched view rows pass through an anti
+    * join. The oracle joins the two NET final states from scratch. */
   def q146IvmJoin(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.Envelope
-    import graft.operators.ChangeHistory
-    import graft.operators.ChangeHistory.IvmSide
     val (obatches, oEmpty) = ivmOrderBatches(spark, dir)
     val c = t(spark, dir, "customer")
     val ckey = col("c_custkey")
@@ -1093,21 +1078,11 @@ object PipelineQueries {
     var (lb, rb) = (oEmpty, cEmpty)
     var view: Option[DataFrame] = None
     obatches.zip(cbatches).foreach { case (ob, cbatch) =>
-      // in-memory pin per round: each round's state is consumed by
-      // several downstream subplans (next round's applyChanges, the
-      // affected-key derivation, both semi-restricted join sides) —
-      // persist() computes it once per action instead of per consumer,
-      // without localCheckpoint's eager materialization jobs
-      val nl = graft.operators.Storage.track(
-        Envelope.applyChanges(lb, ob, Seq("o_orderkey")).persist())
-      val nr = graft.operators.Storage.track(
-        Envelope.applyChanges(rb, cbatch, Seq("c_custkey")).persist())
-      view = Some(graft.operators.Storage.track(
-        ChangeHistory.maintainJoinView(view,
-          IvmSide(lb, nl, ob, Seq("o_orderkey")),
-          IvmSide(rb, nr, cbatch, Seq("c_custkey")),
-          joinKeys = Seq("c_custkey")).persist()))
-      lb = nl; rb = nr
+      val l = ivmStep(lb, ob, Seq("o_orderkey"))
+      val r = ivmStep(rb, cbatch, Seq("c_custkey"))
+      view = Some(Storage.track(
+        ChangeHistory.maintainJoinView(view, l, r, joinKeys = Seq("c_custkey")).persist()))
+      lb = l.newBase; rb = r.newBase
     }
     view.get
       .select(col("o_orderkey"), col("c_custkey"), col("o_orderstatus"),
@@ -1138,7 +1113,6 @@ object PipelineQueries {
     *      bytes, not session state);
     *  (e) deterministic — the chain repeats identically. */
   def q144CheckDistinctView(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.ChangeHistory
     val ev = t(spark, dir, "events")
       .select(lit("I").as("op"), col("event_id").as("lsn"), lit(0L).as("seq"),
         col("event_id"), col("event_type"), col("user_id"))
@@ -1410,7 +1384,6 @@ object PipelineQueries {
     *      session state);
     *  (e) deterministic — the chain repeats identically. */
   def q152CheckQuantileView(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.ChangeHistory
     import spark.implicits._
     val qs = Seq(0.5 -> "p50", 0.9 -> "p90")
     val eps = 0.01
@@ -2568,8 +2541,7 @@ object PipelineQueries {
       when(pmod(col("doc_id"), lit(7)) === 0,
         lit(" Obscenix, profanix! obscenix")).otherwise(lit(""))))
     val Seq(o0, o1, o2, o3) = Seq.fill(4)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
+    import graft.operators.Curation.counted
     val bl = Seq("src2", "src5").toDF("source")
     val s1 = Curation.listGate(counted(planted.filter(half), o0), bl, "source")
       .transform(counted(_, o1))
@@ -2601,7 +2573,6 @@ object PipelineQueries {
     * equality proves the incremental path reproduces rebuild
     * semantics, the q109 scalable-vs-naive oracle pattern. */
   def q120Scd2Merge(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.ChangeHistory
     // even-user slice: a different change stream than q112's, and one
     // that is non-empty at EVERY sf (sf0.001 only has users 0-14)
     val ev = t(spark, dir, "events")
@@ -3128,8 +3099,7 @@ object PipelineQueries {
     import scala.concurrent.duration._
     import spark.implicits._
     val Seq(o0, o1, o2, o3) = Seq.fill(4)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
+    import graft.operators.Curation.counted
     val pages = counted(t(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         crawlPageOf(structuredBody).as("text")), o0)
@@ -3711,8 +3681,7 @@ object PipelineQueries {
     // strata-sized per-lang aggregate — stratifiedExactK admits exactly
     // LEAST(k, n) per stratum by construction (VERDICT r11 #4).
     val Seq(o0, o1, o2, o3) = Seq.fill(4)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
+    import graft.operators.Curation.counted
     val s1 = Storage.track(
       HeuristicRules.gopherFilter(counted(cand, o0)).transform(counted(_, o1))
         .localCheckpoint(true))
@@ -3970,8 +3939,7 @@ object PipelineQueries {
     import org.apache.spark.sql.Observation
     import scala.concurrent.duration._
     val Seq(o0, o1, o2) = Seq.fill(3)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
+    import graft.operators.Curation.counted
     // format routes on the RAW text — q98's indentation/line-shape
     // signals live in exactly the characters normalization collapses
     // (review r12: normalize-then-route misread indented code as
@@ -4202,8 +4170,7 @@ object PipelineQueries {
       when(d % 4 === 0, lit("\n\n" + frBlock)).otherwise(lit("")),
       when(d % 8 === 0, lit("\n\n" + deBlock)).otherwise(lit("")))
     val Seq(o0, o1, o2) = Seq.fill(3)(Observation())
-    def counted(df: DataFrame, o: Observation): DataFrame =
-      df.observe(o, count(lit(1)).as("n"))
+    import graft.operators.Curation.counted
     // stage 1: winners of the canonical-URL collapse (kept ids are a
     // per-group aggregate — corpus-scale, so the join back is a plain
     // key semi join, never a broadcast assumption)

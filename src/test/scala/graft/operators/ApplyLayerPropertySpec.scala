@@ -18,10 +18,12 @@ import org.scalacheck.rng.{Seed => GenSeed}
   * from-scratch recomputation over the applyChanges output:
   * [[ChangeHistory.maintainAggView]], [[ChangeHistory.maintainMinMaxView]]
   * and [[ChangeHistory.maintainTopKView]] grouped by T.g, and
-  * [[ChangeHistory.maintainJoinView]] of T ⋈ D on g. The aggregate view
-  * folded from the batch's [[Envelope.applyJoin]] (the streaming sink's
-  * path) must equal the public verb's, and the base applied from it must
-  * equal applyChanges. Chained [[ChangeHistory.scd2Merge]] must equal
+  * [[ChangeHistory.maintainJoinView]] of T ⋈ D on g. Each view folded
+  * from the batch's [[Envelope.applyJoin]] (the path of the streaming
+  * sink and of the q143/q145/q146/q149 rounds: [[ChangeHistory.foldAggView]]
+  * and the touched-row overloads of the other three verbs) must equal
+  * both its recomputation and the public verb's, and the base applied
+  * from the join must equal applyChanges. Chained [[ChangeHistory.scd2Merge]] must equal
   * [[ChangeHistory.scd2]] over every change so far.
   *
   * The batches mix INSERT/UPDATE/DELETE, mid-batch TRUNCATE, equal-LSN
@@ -201,6 +203,7 @@ class ApplyLayerPropertySpec extends SparkSpec {
       var t = frame(Nil, fact.schema).select("k", "g", "v")
       var d = frame(Nil, dim.schema).select("g", "w", "x")
       var agg, fused, minMax, topK, join, hist: Option[DataFrame] = None
+      var fusedMinMax, fusedTopK, fusedJoin: Option[DataFrame] = None
       val factRows = mutable.ArrayBuffer.empty[Row]
       factActs.zip(dimActs).zipWithIndex.foreach { case ((fa, da), i) =>
         val fb = fact.batch(fa, seen)
@@ -212,12 +215,23 @@ class ApplyLayerPropertySpec extends SparkSpec {
         val nt = local(Envelope.applyChanges(t, bt, Seq("k")))
         val nd = local(Envelope.applyChanges(d, bd, Seq("g")))
         agg = Some(local(ChangeHistory.maintainAggView(agg, t, bt, Seq("k"), Seq("g"), "v")))
-        // the streaming sink's path: one apply join lands the base and
-        // folds the view
+        // the streaming sink's and the IVM rows' path: one apply join per
+        // table lands the base and folds every view
         val kernel = new Envelope.ApplyKernel(bt)
         val joined = Envelope.applyJoin(t, kernel, Seq("k"))
+        val applied = local(Envelope.appliedState(joined, t.columns.toSeq, Seq("k")))
+        val dKernel = new Envelope.ApplyKernel(bd)
+        val dJoined = Envelope.applyJoin(d, dKernel, Seq("g"))
+        val dApplied = local(Envelope.appliedState(dJoined, d.columns.toSeq, Seq("g")))
         fused = Some(local(ChangeHistory.foldAggView(fused, joined, kernel,
           Seq("k"), Seq("g"), "v")))
+        fusedMinMax = Some(local(ChangeHistory.maintainMinMaxView(fusedMinMax, joined, applied,
+          kernel, Seq("k"), Seq("g"), "v")))
+        fusedTopK = Some(local(ChangeHistory.maintainTopKView(fusedTopK, joined, applied,
+          kernel, Seq("k"), Seq("g"), "v", TopK)))
+        fusedJoin = Some(local(ChangeHistory.maintainJoinView(fusedJoin,
+          ChangeHistory.FedSide(joined, applied, kernel, Seq("k")),
+          ChangeHistory.FedSide(dJoined, dApplied, dKernel, Seq("g")), Seq("g"))))
         minMax = Some(local(ChangeHistory.maintainMinMaxView(minMax, t, nt, bt,
           Seq("k"), Seq("g"), "v")))
         topK = Some(local(ChangeHistory.maintainTopKView(topK, t, nt, bt,
@@ -230,17 +244,25 @@ class ApplyLayerPropertySpec extends SparkSpec {
         assert(rows(agg.get, aggCols: _*) === rows(aggOf(nt), aggCols: _*), s"agg view\n$where")
         assert(rows(fused.get, aggCols: _*) === rows(agg.get, aggCols: _*),
           s"agg view folded from the apply join\n$where")
-        assert(rows(Envelope.appliedState(joined, t.columns.toSeq, Seq("k")), "k", "g", "v") ===
-          rows(nt, "k", "g", "v"), s"base from the apply join\n$where")
+        assert(rows(applied, "k", "g", "v") === rows(nt, "k", "g", "v"),
+          s"base from the apply join\n$where")
+        assert(rows(dApplied, "g", "w", "x") === rows(nd, "g", "w", "x"),
+          s"dimension from the apply join\n$where")
         val mmCols = Seq("g", "n_rows", "min_val", "max_val")
         assert(rows(minMax.get, mmCols: _*) === rows(minMaxOf(nt), mmCols: _*),
           s"min/max view\n$where")
+        assert(rows(fusedMinMax.get, mmCols: _*) === rows(minMax.get, mmCols: _*),
+          s"min/max view folded from the apply join\n$where")
         val topCols = Seq("g", "rank", "k", "v")
         assert(rows(topK.get, topCols: _*) === rows(topKOf(nt), topCols: _*),
           s"top-k view\n$where")
+        assert(rows(fusedTopK.get, topCols: _*) === rows(topK.get, topCols: _*),
+          s"top-k view folded from the apply join\n$where")
         val joinCols = Seq("g", "k", "v", "w", "x")
         assert(rows(join.get, joinCols: _*) === rows(nt.join(nd, "g"), joinCols: _*),
           s"join view\n$where")
+        assert(rows(fusedJoin.get, joinCols: _*) === rows(join.get, joinCols: _*),
+          s"join view folded from the apply joins\n$where")
         assert(rows(hist.get, HistoryCols: _*) ===
           rows(history(frame(factRows.toSeq, fact.schema), None), HistoryCols: _*),
           s"scd2 history\n$where")

@@ -95,6 +95,22 @@ class MinMaxViewSpec extends SparkSpec {
     assert(viewRows(v) === Seq(("d", 1L, Some(4.0), Some(4.0))))
   }
 
+  test("TOAST-unchanged value and group columns resolve from the pre-batch row") {
+    val none = array().cast("array<string>")
+    val b0 = batch(("I", 1L, 0L, 1L, "a", Some(5.0)), ("I", 2L, 0L, 2L, "a", Some(3.0)),
+      ("I", 3L, 0L, 3L, "b", Some(4.0)))
+    // key 1 (group a's max) re-sends both cells as 'u'; key 3 keeps its
+    // group as 'u' and takes a new value
+    val b1 = batch(("U", 10L, 0L, 1L, null.asInstanceOf[String], None),
+        ("U", 11L, 0L, 3L, null.asInstanceOf[String], Some(7.0)))
+      .withColumn(Envelope.UnchangedCol,
+        when(col("k") === 1, array(lit("g"), lit("v")))
+          .when(col("k") === 3, array(lit("g"))).otherwise(none))
+    val v = roundtrip(Seq(b0, b1))
+    assert(viewRows(v) ===
+      Seq(("a", 2L, Some(3.0), Some(5.0)), ("b", 1L, Some(7.0), Some(7.0))))
+  }
+
   test("multi-batch churn keeps the invariant (the roundtrip harness asserts per batch)") {
     roundtrip(Seq(
       batch(("I", 1L, 0L, 1L, "a", Some(5.0)), ("I", 2L, 0L, 2L, "b", Some(7.0)),

@@ -60,6 +60,22 @@ class TopKViewSpec extends SparkSpec {
       Seq(("a", 1, 2L, Some(7.0)), ("b", 1, 1L, Some(7.0)), ("b", 2, 3L, Some(7.0))))
   }
 
+  test("TOAST-unchanged value and group columns resolve from the pre-batch row") {
+    val none = array().cast("array<string>")
+    val b0 = batch(("I", 1L, 0L, 1L, "a", Some(9.0)), ("I", 2L, 0L, 2L, "a", Some(7.0)),
+      ("I", 3L, 0L, 3L, "b", Some(4.0)))
+    // key 1 (group a's #1) re-sends both cells as 'u'; key 3 keeps its
+    // group as 'u' and takes a new value
+    val b1 = batch(("U", 10L, 0L, 1L, null.asInstanceOf[String], None),
+        ("U", 11L, 0L, 3L, null.asInstanceOf[String], Some(8.0)))
+      .withColumn(Envelope.UnchangedCol,
+        when(col("k") === 1, array(lit("g"), lit("v")))
+          .when(col("k") === 3, array(lit("g"))).otherwise(none))
+    val v = roundtrip(2, Seq(b0, b1))
+    assert(viewRows(v) ===
+      Seq(("a", 1, 1L, Some(9.0)), ("a", 2, 2L, Some(7.0)), ("b", 1, 3L, Some(8.0))))
+  }
+
   test("untouched groups pass through; churn keeps the invariant") {
     roundtrip(3, Seq(
       batch(("I", 1L, 0L, 1L, "a", Some(5.0)), ("I", 2L, 0L, 2L, "b", Some(6.0)),
